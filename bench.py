@@ -23,6 +23,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -49,7 +50,7 @@ FRONTIER_BATCHES = 3
 
 
 def _median(xs: list) -> float:
-    return sorted(xs)[len(xs) // 2]
+    return statistics.median(xs)
 
 
 def burn(cpus: int) -> dict:
@@ -111,9 +112,7 @@ def run_frontier_leg(spark, pages, seeds) -> tuple[float, int]:
         eng = FrontierEngine(
             spark, pages, SnapStore(tmp),
             config=FrontierConfig(max_batches=FRONTIER_BATCHES,
-                                  default_budget=65536,
-                                  bloom_buckets=64, bloom_bits=1 << 21,
-                                  rescue_mode="broadcast"),
+                                  default_budget=65536),
             pages_prepared=True,
         )
         t0 = time.time()

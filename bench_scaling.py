@@ -127,10 +127,7 @@ for line in sys.stdin:
     tmp = tempfile.mkdtemp(prefix="scal_")
     eng = FrontierEngine(spark, pages, SnapStore(tmp),
                          config=FrontierConfig(max_batches=%(batches)d,
-                                               default_budget=65536,
-                                               bloom_buckets=64,
-                                               bloom_bits=1 << 21,
-                                               rescue_mode="broadcast"),
+                                               default_budget=65536),
                          pages_prepared=True)
     t0 = time.time()
     manifests = eng.run(seeds)
@@ -287,9 +284,9 @@ SCALING_PAIR={lo},{hi} python bench_scaling.py`.
 Job: synthetic Common-Crawl-style pages table ({n_pages:,} pages, Zipf host
 skew), {batches} frontier batches, URLs scheduled+fetch-simulated per
 run as tabulated below (politeness budget 65,536/host, salted priority ordering,
-partitioned-bloom URL-seen deltas + broadcast-map probe, broadcast sliver
-rescue, per-batch snapshot checkpoints; per-batch metrics ride the write
-jobs via df.observe — 4 Spark jobs/batch). Fetch simulation does the real
+exact URL-seen dedup as one anti-join against the seen log, per-batch
+snapshot checkpoints; per-batch metrics ride the write jobs via
+df.observe). Fetch simulation does the real
 per-URL pipeline work: corpus join, link+text extraction (one Arrow pass),
 sha1 digest, parquet checkpoint.
 
@@ -317,7 +314,7 @@ The reference library (BASELINE.md) reads ~13.8k-39k records/s on ONE core
 with no scheduler, no dedup, no checkpointing. The engine schedules+
 fetch-simulates {max(r['ups8'] for r in rr):,} urls/s at local[{hi}]
 ({max(r['ups2'] for r in rr):,} even at local[{lo}]) *including* frontier
-scheduling, bloom membership, politeness, link+text extraction, digesting
+scheduling, seen-log dedup, politeness, link+text extraction, digesting
 and snapshot checkpointing per batch.
 {END}"""
     path = os.path.join(REPO, "BENCH", "BASELINE.md")

@@ -6,12 +6,12 @@ link targets AND seeds), plus a hot-corpus leg with salting disabled
 (``n_salts=1``) as the contrast.
 
 What flat throughput proves: every per-batch stage that keys by host —
-the politeness window, the salted fetch-order repartition, the bloom
-bucket build — sees one key carrying 30% of the rows. The salted
-repartition spreads the hot host over ``n_salts`` partitions and
-WindowGroupLimit prunes the politeness rank before the sort, so no task
-serializes on the hot key; throughput (urls scheduled+fetched/sec) on
-the hot corpus should match the uniform corpus to within epoch noise.
+the politeness window and the salted fetch-order repartition — sees one
+key carrying 30% of the rows. The salted repartition spreads the hot
+host over ``n_salts`` partitions and WindowGroupLimit prunes the
+politeness rank before the sort, so no task serializes on the hot key;
+throughput (urls scheduled+fetched/sec) on the hot corpus should match
+the uniform corpus to within epoch noise.
 
 Methodology matches bench_scaling.py: all legs run interleaved in ONE
 JVM (same epoch), several rounds, medians reported. Updates the
@@ -65,12 +65,10 @@ def run_leg(spark, pages, seeds, batches, n_salts, budget=1 << 20):
             # of the hot host each batch (fewer urls scheduled per batch ->
             # throughput not comparable leg-to-leg); uncapped, both corpora
             # schedule the same url volume and the comparison isolates the
-            # skew-sensitive operators (politeness window, salted ordering,
-            # bloom bucket build) instead of politeness semantics
+            # skew-sensitive operators (politeness window, salted ordering)
+            # instead of politeness semantics
             config=FrontierConfig(
-                max_batches=batches, default_budget=budget,
-                bloom_buckets=64, bloom_bits=1 << 21,
-                rescue_mode="broadcast", n_salts=n_salts,
+                max_batches=batches, default_budget=budget, n_salts=n_salts,
             ),
             pages_prepared=True,
         )

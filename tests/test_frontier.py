@@ -123,6 +123,11 @@ class TestCrawlOracle:
         )
         for r in per_host.collect():
             assert BUDGETS.get(r.host, 3) >= r["count"]
+        # the blocked counter: exact for the first two batches — later, a url
+        # blocked two batches back can re-enter the frontier, since the seen
+        # log holds scheduled urls plus only the current batch's blocked ones
+        for m, sm in zip(manifests[:2], sim.metrics):
+            assert m["metrics"]["robots_blocked"] == sm["robots_blocked"]
 
     def test_matches_simulator_with_wildcard_robots(
         self, spark, pages_df, pages_pdf, seeds_df, tmp_path
@@ -186,192 +191,210 @@ class TestResume:
         assert seen_a == seen_b
 
     def test_manifest_lineage(self, spark, pages_df, seeds_df, tmp_path):
+        # the retired filter geometry is still accepted, and never stored
         store, manifests = run_engine(
             spark, pages_df, seeds_df, tmp_path,
-            FrontierConfig(max_batches=2, default_budget=4),
+            FrontierConfig(max_batches=2, default_budget=4, bloom_buckets=64,
+                           bloom_bits=1 << 21, rescue_mode="auto"),
         )
         for m in manifests:
             sched = m["tables"]["scheduled"]
             assert sched["rows"] == sum(p["rows"] for p in sched["partitions"])
             assert m["metrics"]["urls_per_sec"] is not None
-            assert "bloom" in m["tables"]
+            assert set(m["tables"]) == {"scheduled", "frontier"}
+            assert not {"bloom_buckets", "bloom_bits", "rescue_mode"} & set(m["config"])
+
+    def test_legacy_store_resume(
+        self, spark, pages_df, pages_pdf, seeds_df, tmp_path
+    ):
+        """A store checkpointed with the retired membership filters (filter
+        keys in its last manifest, stray ``bloom``/``bloom_state``/
+        ``cuckoo_state`` dirs) resumes from the frontier table and the seen
+        log alone — same batches as the uninterrupted run and the oracle.
+        The stray dirs hold a filter that knows none of the crawled urls, so
+        a resume that consulted them would re-crawl seen urls."""
+        import json
+        import os
+
+        from warc_spark.operators.seen import BloomSeenSet, CuckooSeenSet
+
+        store, _ = run_engine(
+            spark, pages_df, seeds_df, tmp_path / "legacy",
+            FrontierConfig(max_batches=2, default_budget=4),
+        )
+        stray = spark.createDataFrame([("http://nowhere.invalid/x",)], "url string")
+        for k in (0, 1):
+            d = store.batch_dir(k)
+            BloomSeenSet(n_buckets=8, m_bits=1 << 12).build_blobs(stray).write.parquet(
+                os.path.join(d, "bloom")
+            )
+            CuckooSeenSet(n_buckets=8).build_blobs(stray).write.parquet(
+                os.path.join(d, "cuckoo_state")
+            )
+            os.makedirs(os.path.join(d, "bloom_state"))
+        with open(store._snap_path(1)) as f:
+            m = json.load(f)
+        m["config"].update(
+            use_bloom=True, seen_backend="cuckoo", bloom_bucket_key="url",
+            cuckoo_hash_scheme=1, distributed_probe=True, bloom_buckets=8,
+            bloom_bits=1 << 12, rescue_mode="broadcast",
+            rescue_broadcast_rows=200_000,
+        )
+        m["tables"]["cuckoo_state"] = {"path": "", "rows": 8, "partitions": []}
+        with open(store._snap_path(1), "w") as f:
+            json.dump(m, f)
+
+        eng = FrontierEngine(
+            spark, pages_df, store,
+            config=FrontierConfig(max_batches=4, default_budget=4),
+        )
+        assert [m["snapshot"] for m in eng.run(seeds_df, resume=True)] == [2, 3]
+        ref_store, _ = run_engine(
+            spark, pages_df, seeds_df, tmp_path / "ref",
+            FrontierConfig(max_batches=4, default_budget=4),
+        )
+        got = collect_batches(store, spark, 4)
+        assert got == collect_batches(ref_store, spark, 4)
+        sim = simulate_crawl(
+            pages_pdf, seeds_list(seeds_df), default_budget=4, max_batches=4
+        )
+        assert got == sim.batches
 
 
 class TestBloomPath:
-    def test_bloom_equals_exact(self, spark, pages_df, pages_pdf, seeds_df, tmp_path):
-        """Bloom-prefiltered run must match the pure exact-anti-join run
-        batch-for-batch (no false drops — the ⊇-safety property)."""
-        cfg_b = FrontierConfig(max_batches=3, default_budget=4, use_bloom=True,
-                               bloom_buckets=8, bloom_bits=1 << 12)
-        cfg_e = FrontierConfig(max_batches=3, default_budget=4, use_bloom=False)
+    def test_bloom_equals_exact(self, spark, pages_df, seeds_df, tmp_path):
+        """A config carrying the retired Bloom geometry and rescue mode
+        (as older callers still pass it) must crawl batch-for-batch like the
+        plain exact-anti-join config: the knobs are accepted and ignored."""
+        cfg_b = FrontierConfig(max_batches=3, default_budget=4, bloom_buckets=8,
+                               bloom_bits=1 << 12, rescue_mode="broadcast")
+        cfg_e = FrontierConfig(max_batches=3, default_budget=4)
         store_b, mb = run_engine(spark, pages_df, seeds_df, tmp_path / "bloom", cfg_b)
         store_e, me = run_engine(spark, pages_df, seeds_df, tmp_path / "exact", cfg_e)
         assert len(mb) == len(me)
         assert collect_batches(store_b, spark, len(mb)) == collect_batches(
             store_e, spark, len(me)
         )
-
-
-class TestUrlBucketKeyFrontier:
-    def test_url_bucket_key_equals_exact(self, spark, pages_df, seeds_df, tmp_path):
-        """bloom_bucket_key="url" (the adversarial-host-skew layout) must
-        reproduce the exact-path crawl batch-for-batch."""
-        cfg_u = FrontierConfig(max_batches=3, default_budget=4, use_bloom=True,
-                               bloom_bucket_key="url",
-                               bloom_buckets=8, bloom_bits=1 << 12)
-        cfg_e = FrontierConfig(max_batches=3, default_budget=4, use_bloom=False)
-        store_u, mu = run_engine(spark, pages_df, seeds_df, tmp_path / "u", cfg_u)
-        store_e, me = run_engine(spark, pages_df, seeds_df, tmp_path / "e", cfg_e)
-        assert len(mu) == len(me)
-        assert collect_batches(store_u, spark, len(mu)) == collect_batches(
-            store_e, spark, len(me)
-        )
-
-    def test_resume_rejects_mismatched_bucket_key(
-        self, spark, pages_df, seeds_df, tmp_path
-    ):
-        store, _ = run_engine(
-            spark, pages_df, seeds_df, tmp_path,
-            FrontierConfig(max_batches=2, default_budget=4, use_bloom=True,
-                           bloom_bucket_key="url",
-                           bloom_buckets=8, bloom_bits=1 << 12),
-        )
-        eng = FrontierEngine(
-            spark, pages_df, store,
-            config=FrontierConfig(max_batches=4, default_budget=4, use_bloom=True,
-                                  bloom_bucket_key="host",
-                                  bloom_buckets=8, bloom_bits=1 << 12),
-        )
-        with pytest.raises(ValueError, match="bloom_bucket_key"):
-            eng.run(seeds_df, resume=True)
+        assert [m["config"] for m in mb] == [m["config"] for m in me]
 
 
 class TestDistributedProbe:
-    """The at-scale membership path: blob state as a distributed table +
-    co-partitioned probe join — the driver never holds blob bytes."""
-
-    def test_distributed_equals_exact(self, spark, pages_df, seeds_df, tmp_path):
-        cfg_d = FrontierConfig(max_batches=3, default_budget=4, use_bloom=True,
-                               distributed_probe=True,
-                               bloom_buckets=8, bloom_bits=1 << 12)
-        cfg_e = FrontierConfig(max_batches=3, default_budget=4, use_bloom=False)
-        store_d, md = run_engine(spark, pages_df, seeds_df, tmp_path / "dist", cfg_d)
-        store_e, me = run_engine(spark, pages_df, seeds_df, tmp_path / "exact", cfg_e)
-        assert len(md) == len(me)
-        assert collect_batches(store_d, spark, len(md)) == collect_batches(
-            store_e, spark, len(me)
-        )
-        seen_d = {r.url for r in store_d.read_all_scheduled(spark, len(md) - 1).collect()}
-        seen_e = {r.url for r in store_e.read_all_scheduled(spark, len(me) - 1).collect()}
-        assert seen_d == seen_e
-        # the compacted state table is checkpointed every batch
-        for m in md:
-            assert "bloom_state" in m["tables"]
-
-    def test_distributed_resume(self, spark, pages_df, seeds_df, tmp_path):
-        cfg = dict(default_budget=4, use_bloom=True, distributed_probe=True,
-                   bloom_buckets=8, bloom_bits=1 << 12)
-        store, m1 = run_engine(
-            spark, pages_df, seeds_df, tmp_path / "a", FrontierConfig(max_batches=2, **cfg)
-        )
-        eng = FrontierEngine(
-            spark, pages_df, store, config=FrontierConfig(max_batches=4, **cfg)
-        )
-        m2 = eng.run(seeds_df, resume=True)
-        assert [m["snapshot"] for m in m2] == [2, 3]
-        ref_store, _ = run_engine(
-            spark, pages_df, seeds_df, tmp_path / "b", FrontierConfig(max_batches=4, **cfg)
-        )
-        assert collect_batches(store, spark, 4) == collect_batches(ref_store, spark, 4)
+    """Resume across the retired membership layouts (Bloom, distributed
+    probe, cuckoo): membership comes from the seen log alone, so no filter
+    state is loaded, rebuilt or validated."""
 
     def test_resume_rebuilds_when_store_has_no_bloom(
         self, spark, pages_df, seeds_df, tmp_path
     ):
-        """A store written with use_bloom=False resumed with use_bloom=True
-        must not crash (ADVICE r1) — membership is rebuilt from the
-        scheduled tables and the crawl ordering is unchanged."""
+        """A store with no filter dirs, resumed under a config that still
+        carries the retired Bloom knobs, must not crash — seen
+        membership is rebuilt from the scheduled tables and the crawl
+        ordering is unchanged."""
         ref_store, _ = run_engine(
             spark, pages_df, seeds_df, tmp_path / "ref",
-            FrontierConfig(max_batches=4, default_budget=4, use_bloom=False),
-        )
-        ref = collect_batches(ref_store, spark, 4)
-        for mode in (False, True):
-            store, _ = run_engine(
-                spark, pages_df, seeds_df, tmp_path / f"m{mode}",
-                FrontierConfig(max_batches=2, default_budget=4, use_bloom=False),
-            )
-            eng = FrontierEngine(
-                spark, pages_df, store,
-                config=FrontierConfig(
-                    max_batches=4, default_budget=4, use_bloom=True,
-                    distributed_probe=mode, bloom_buckets=8, bloom_bits=1 << 12,
-                ),
-            )
-            m2 = eng.run(seeds_df, resume=True)
-            assert [m["snapshot"] for m in m2] == [2, 3]
-            assert collect_batches(store, spark, 4) == ref
-
-    def test_cuckoo_resume_legacy_scheme_rebuilds(
-        self, spark, pages_df, seeds_df, tmp_path
-    ):
-        """A checkpoint whose manifest lacks the cuckoo hash-scheme stamp
-        (legacy / pre-change) must NOT load the stored cuckoo_state blobs —
-        they were built under a different bucket derivation and would probe
-        the wrong buckets (ADVICE r4: silent false negatives). Simulated by
-        stripping the stamp AND replacing the stored blobs with garbage: a
-        resume that wrongly loaded them would re-crawl seen urls."""
-        import json
-        import os
-        import shutil
-
-        from warc_spark.operators.seen import CuckooSeenSet
-
-        cfg = dict(default_budget=4, seen_backend="cuckoo",
-                   bloom_buckets=8, bloom_bits=1 << 12)
-        ref_store, _ = run_engine(
-            spark, pages_df, seeds_df, tmp_path / "ref",
-            FrontierConfig(max_batches=4, **cfg),
+            FrontierConfig(max_batches=4, default_budget=4),
         )
         ref = collect_batches(ref_store, spark, 4)
         store, _ = run_engine(
-            spark, pages_df, seeds_df, tmp_path / "legacy",
-            FrontierConfig(max_batches=2, **cfg),
+            spark, pages_df, seeds_df, tmp_path / "m",
+            FrontierConfig(max_batches=2, default_budget=4),
         )
-        for k in (0, 1):
-            p = store._snap_path(k)
-            with open(p) as f:
-                m = json.load(f)
-            m["config"].pop("cuckoo_hash_scheme")
-            with open(p, "w") as f:
-                json.dump(m, f)
-        # garbage state: blobs that know only an unrelated url — if loaded,
-        # every actually-seen url reads as unseen and gets re-scheduled
-        state_dir = os.path.join(store.batch_dir(1), "cuckoo_state")
-        garbage = CuckooSeenSet(n_buckets=8).build_blobs(
-            spark.createDataFrame([("http://nowhere.invalid/x",)], "url string")
-        )
-        shutil.rmtree(state_dir)
-        garbage.write.parquet(state_dir)
         eng = FrontierEngine(
-            spark, pages_df, store, config=FrontierConfig(max_batches=4, **cfg)
+            spark, pages_df, store,
+            config=FrontierConfig(max_batches=4, default_budget=4, bloom_buckets=8,
+                                  bloom_bits=1 << 12, rescue_mode="auto"),
         )
         m2 = eng.run(seeds_df, resume=True)
         assert [m["snapshot"] for m in m2] == [2, 3]
         assert collect_batches(store, spark, 4) == ref
 
-    def test_resume_rejects_mismatched_geometry(self, spark, pages_df, seeds_df, tmp_path):
-        store, _ = run_engine(
-            spark, pages_df, seeds_df, tmp_path,
-            FrontierConfig(max_batches=2, default_budget=4, use_bloom=True,
-                           bloom_buckets=8, bloom_bits=1 << 12),
+    def test_cuckoo_resume_legacy_scheme_rebuilds(
+        self, spark, pages_df, seeds_df, tmp_path
+    ):
+        """A cuckoo-era checkpoint whose manifests name the cuckoo backend
+        but lack the hash-scheme stamp must NOT load its stored cuckoo_state
+        blobs (they would give silent false negatives). Simulated with garbage
+        blobs listed in the manifest: a resume that loaded them would
+        re-crawl seen urls."""
+        import json
+        import os
+
+        from warc_spark.operators.seen import CuckooSeenSet
+
+        ref_store, _ = run_engine(
+            spark, pages_df, seeds_df, tmp_path / "ref",
+            FrontierConfig(max_batches=4, default_budget=4),
         )
+        ref = collect_batches(ref_store, spark, 4)
+        store, _ = run_engine(
+            spark, pages_df, seeds_df, tmp_path / "legacy",
+            FrontierConfig(max_batches=2, default_budget=4),
+        )
+        state_dir = os.path.join(store.batch_dir(1), "cuckoo_state")
+        CuckooSeenSet(n_buckets=8).build_blobs(
+            spark.createDataFrame([("http://nowhere.invalid/x",)], "url string")
+        ).write.parquet(state_dir)
+        for k in (0, 1):
+            p = store._snap_path(k)
+            with open(p) as f:
+                m = json.load(f)
+            m["config"].update(seen_backend="cuckoo", bloom_buckets=8)
+            if k == 1:
+                m["tables"]["cuckoo_state"] = {
+                    "path": state_dir, "rows": 8, "partitions": []
+                }
+            with open(p, "w") as f:
+                json.dump(m, f)
         eng = FrontierEngine(
             spark, pages_df, store,
-            config=FrontierConfig(max_batches=4, default_budget=4, use_bloom=True,
-                                  bloom_buckets=16, bloom_bits=1 << 12),
+            config=FrontierConfig(max_batches=4, default_budget=4, bloom_buckets=8),
         )
-        with pytest.raises(ValueError, match="bloom_buckets"):
-            eng.run(seeds_df, resume=True)
+        m2 = eng.run(seeds_df, resume=True)
+        assert [m["snapshot"] for m in m2] == [2, 3]
+        assert collect_batches(store, spark, 4) == ref
+
+
+class TestFixedCost:
+    """Per-batch fixed cost is counted in Spark jobs: each one is
+    scheduling latency that does not shrink with cluster width. A batch
+    runs the scheduled write, the frontier write (whose anti-join scans the
+    seen log) and the reads that open their inputs — no membership-filter
+    build, merge, probe or count."""
+
+    MAX_JOBS_PER_BATCH = 11
+
+    def test_jobs_per_batch(self, spark, pages_df, seeds_df, tmp_path):
+        sc = spark.sparkContext
+        group = f"frontier_fixed_cost_{id(tmp_path)}"
+
+        class TaggingStore(SnapStore):
+            """Tags every job from a batch's scheduled write (its first
+            job) up to the next batch's with that batch's job group."""
+
+            def write_df(self, df, batch, name):
+                if name == "scheduled":
+                    sc.setJobGroup(f"{group}_{batch}", "frontier batch")
+                return super().write_df(df, batch, name)
+
+        try:
+            _, manifests = run_engine(
+                spark, pages_df, seeds_df, tmp_path,
+                FrontierConfig(max_batches=3, default_budget=4),
+                store=TaggingStore(str(tmp_path / "snap")),
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(manifests) == 3
+        for m in manifests:
+            assert not {"bloom", "bloom_state", "cuckoo_state"} & set(m["tables"])
+        # batch 0 also pays one-off set-up (seed dedup, first reads), so the
+        # guard reads the steady-state batches
+        jobs = [
+            len(sc.statusTracker().getJobIdsForGroup(f"{group}_{k}"))
+            for k in (1, 2)
+        ]
+        assert 0 < max(jobs) <= self.MAX_JOBS_PER_BATCH, jobs
 
 
 class TestSeenCompaction:
@@ -448,87 +471,39 @@ class TestMissingFetch:
 
 class TestRecrawl:
     """Expiry + re-seeding (E5 recrawl semantics): expired urls crawl
-    again; non-expired seen urls stay deduplicated — under BOTH membership
-    backends (cuckoo deletes fingerprints; bloom relies on the exact
-    rescue, the stale bit only costing a lookup)."""
+    again; non-expired seen urls stay deduplicated (the seen log is the
+    only membership state, so expiring from it is the whole operation)."""
 
-    def _crawl_then_expire(self, spark, pages_df, seeds_df, root, backend):
-        cfg = FrontierConfig(
-            max_batches=2, default_budget=4, seen_backend=backend,
-            bloom_buckets=8, bloom_bits=1 << 12,
+    def test_expired_urls_recrawl(self, spark, pages_df, seeds_df, tmp_path):
+        store = SnapStore(str(tmp_path / "recrawl"))
+        eng = FrontierEngine(
+            spark, pages_df, store,
+            config=FrontierConfig(max_batches=2, default_budget=4),
         )
-        store = SnapStore(str(root / backend))
-        eng = FrontierEngine(spark, pages_df, store, config=cfg)
         eng.run(seeds_df)
         sched = [r.url for r in store.read_all_scheduled(spark, 1)
                  .orderBy("url").collect()]
-        expired = sched[:3]
-        kept_seen = sched[3:5]
-        eng.expire_urls(spark.createDataFrame([(u,) for u in expired], "url string"))
+        expired, kept_seen = set(sched[:3]), set(sched[3:5])
+        eng.expire_urls(
+            spark.createDataFrame([(u,) for u in sorted(expired)], "url string")
+        )
         # the seen log no longer contains the expired urls
         seen_now = {r.url for r in store.read_seen_urls(spark, 1).collect()}
-        assert not (set(expired) & seen_now)
-        assert set(kept_seen) <= seen_now
+        assert not (expired & seen_now)
+        assert kept_seen <= seen_now
         # resume with seeds = expired + still-seen urls
         eng2 = FrontierEngine(
             spark, pages_df, store,
-            config=FrontierConfig(
-                max_batches=3, default_budget=100, seen_backend=backend,
-                bloom_buckets=8, bloom_bits=1 << 12,
-            ),
+            config=FrontierConfig(max_batches=3, default_budget=100),
         )
         reseed = spark.createDataFrame(
-            [(u, 10.0) for u in expired + kept_seen], "url string, priority double"
+            [(u, 10.0) for u in sorted(expired | kept_seen)],
+            "url string, priority double",
         )
         eng2.run(reseed, resume=True)
         batch2 = {r.url for r in store.read_df(spark, 2, "scheduled").collect()}
-        return set(expired), set(kept_seen), batch2
-
-    @pytest.mark.parametrize("backend", ["cuckoo", "bloom"])
-    def test_expired_urls_recrawl(self, spark, pages_df, seeds_df, tmp_path, backend):
-        expired, kept_seen, batch2 = self._crawl_then_expire(
-            spark, pages_df, seeds_df, tmp_path, backend
-        )
         assert expired <= batch2, "expired urls must be crawled again"
         assert not (kept_seen & batch2), "non-expired seen urls must stay deduped"
-
-
-class TestCuckooFrontier:
-    def test_cuckoo_equals_exact(self, spark, pages_df, seeds_df, tmp_path):
-        """Cuckoo-backed membership must reproduce the exact-anti-join
-        crawl batch-for-batch (fingerprint false positives are rescued
-        exactly, insert is lossless)."""
-        cfg_c = FrontierConfig(max_batches=3, default_budget=4,
-                               seen_backend="cuckoo", bloom_buckets=8)
-        cfg_e = FrontierConfig(max_batches=3, default_budget=4, use_bloom=False)
-        store_c, mc = run_engine(spark, pages_df, seeds_df, tmp_path / "ck", cfg_c)
-        store_e, me = run_engine(spark, pages_df, seeds_df, tmp_path / "ex", cfg_e)
-        assert len(mc) == len(me)
-        assert collect_batches(store_c, spark, len(mc)) == collect_batches(
-            store_e, spark, len(me)
-        )
-        for m in mc:
-            assert "cuckoo_state" in m["tables"]
-
-    def test_cuckoo_distributed_probe_equals_exact(
-        self, spark, pages_df, seeds_df, tmp_path
-    ):
-        """distributed_probe=True under the cuckoo backend: the fingerprint
-        state is probed via the co-partitioned join (never broadcast) and
-        the crawl is still batch-for-batch identical to the exact path."""
-        cfg_d = FrontierConfig(max_batches=3, default_budget=4,
-                               seen_backend="cuckoo", distributed_probe=True,
-                               bloom_buckets=8)
-        cfg_e = FrontierConfig(max_batches=3, default_budget=4, use_bloom=False)
-        store_d, md = run_engine(spark, pages_df, seeds_df, tmp_path / "ckd", cfg_d)
-        store_e, me = run_engine(spark, pages_df, seeds_df, tmp_path / "exd", cfg_e)
-        assert len(md) == len(me)
-        assert collect_batches(store_d, spark, len(md)) == collect_batches(
-            store_e, spark, len(me)
-        )
-        seen_d = {r.url for r in store_d.read_all_scheduled(spark, len(md) - 1).collect()}
-        seen_e = {r.url for r in store_e.read_all_scheduled(spark, len(me) - 1).collect()}
-        assert seen_d == seen_e
 
 
 class TestLinkNormalization:

@@ -11,8 +11,9 @@ Re-expresses the record semantics of ``internetarchive/warc`` (reference at
 - ``functions`` text analysis, dedup (exact / MinHash-LSH / SimHash / n-gram
                 Jaccard), embedding similarity search — training-data pipeline
                 operators over the documents/embeddings tables.
-- ``operators`` the crawl engine: URL-seen set (exact anti-join oracle +
-                partitioned Bloom blobs + cuckoo fallback), robots gating,
+- ``operators`` the crawl engine: URL-seen set (exact anti-join against
+                the seen log; partitioned Bloom blobs + cuckoo as standalone
+                operators), robots gating,
                 per-host politeness budgets, salted priority queue.
 - ``plans``     SparkSession factory with scale-tuned configs, snapshot store
                 (checkpoint/exact-resume with per-partition lineage + metrics).

@@ -55,33 +55,9 @@ def _build_parser() -> argparse.ArgumentParser:
              "wins)",
     )
     c.add_argument("--resume", action="store_true", help="continue from last snapshot")
-    c.add_argument("--no-bloom", action="store_true", help="exact-only membership")
-    c.add_argument("--bloom-buckets", type=int, default=64)
-    c.add_argument("--bloom-bits", type=int, default=1 << 21)
-    c.add_argument(
-        "--distributed-probe", action="store_true",
-        help="keep the bloom state a distributed table (co-partitioned "
-             "probe join; the 10^10-URL configuration — the driver never "
-             "holds blob bytes)",
-    )
     c.add_argument(
         "--normalize-links", action="store_true",
         help="canonicalize extracted hrefs before frontier emission",
-    )
-    c.add_argument(
-        "--seen-backend", choices=("bloom", "cuckoo"), default="bloom",
-        help="membership filter; cuckoo supports expiry/recrawl (deletion)",
-    )
-    c.add_argument(
-        "--bucket-key", choices=("host", "url"), default="host",
-        help="membership-state bucket key: 'url' keeps buckets balanced "
-             "under adversarial host skew (one host holding a large share "
-             "of the frontier)",
-    )
-    c.add_argument(
-        "--rescue-mode", choices=("auto", "broadcast", "shuffle"), default="auto",
-        help="emit-dedup sliver rescue plan; forcing one skips the "
-             "per-batch sliver-count job",
     )
     c.add_argument(
         "--extractor", choices=("synthetic", "html"), default="synthetic",
@@ -648,12 +624,6 @@ def main(argv: list[str] | None = None) -> int:
         spark, pages, SnapStore(args.out), robots=robots, budgets=budgets,
         config=FrontierConfig(
             max_batches=args.batches, default_budget=args.budget,
-            use_bloom=not args.no_bloom,
-            bloom_buckets=args.bloom_buckets, bloom_bits=args.bloom_bits,
-            distributed_probe=args.distributed_probe,
-            rescue_mode=args.rescue_mode,
-            seen_backend=args.seen_backend,
-            bloom_bucket_key=args.bucket_key,
             normalize_links=args.normalize_links,
             extractor=args.extractor,
         ),

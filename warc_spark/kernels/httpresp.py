@@ -147,11 +147,16 @@ def dechunk(body: bytes) -> bytes:
 
 def decode_body(body: bytes | None, te: str | None, ce: str | None) -> tuple[bytes | None, bool]:
     """Reverse the wire encodings on a split body: chunked transfer framing
-    first, then gzip/x-gzip/deflate content coding. Lenient: any malformed
-    layer keeps the bytes as-is and reports decoded=False — one bad
-    record never fails a task. ``identity`` / unknown codings pass
-    through untouched (decoded reflects whether EVERY declared layer was
-    reversed)."""
+    first, then gzip/x-gzip/deflate content coding. Lenient: decoding
+    stops at the first layer that cannot be reversed (malformed, or an
+    unknown coding such as br) and reports decoded=False — one bad record
+    never fails a task. The bytes returned then are the body as it stood
+    before that layer, so they are the raw wire bytes only when the very
+    first layer fails; layers reversed before it stay reversed (chunked
+    framing is removed before any content coding, and a corrupt inner
+    layer under 'gzip, gzip' returns the once-gunzipped bytes).
+    ``identity`` is a no-op layer. decoded=True means EVERY declared
+    layer was reversed."""
     if body is None:
         return None, False
     applied = True

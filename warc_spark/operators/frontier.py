@@ -17,15 +17,12 @@ tests/oracle_sim.py replicates exactly):
                   with the network replaced by the deterministic pages
                   corpus); links extracted from html
 5. next frontier: politeness-deferred ∪ extracted links (priority =
-                  parent*decay, max-merged per url), minus seen — realized
-                  as a Bloom prefilter (broadcast blob map, zero shuffle)
-                  plus an exact rescue of the maybe-seen sliver via a
-                  *broadcast semi-join flip* (the big seen table is only
-                  scanned, never shuffled); with use_bloom=False it is the
-                  plain exact left_anti (the correctness oracle path)
-6. checkpoint   : scheduled/frontier/bloom written, manifest committed
+                  parent*decay, max-merged per url), minus seen — one
+                  exact left_anti join against the seen log (every url
+                  ever scheduled) plus this batch's robots-blocked urls
+6. checkpoint   : scheduled/frontier written, manifest committed
 
-Physical design for scale (what the judge should look at):
+Physical design for scale:
 - the pages corpus is hash-partitioned AND sorted by url once at engine
   construction (the Iceberg bucket/sort-order story) — the per-batch fetch
   join shuffles only the (budget-bounded) schedule side; the 100 TB pages
@@ -33,10 +30,12 @@ Physical design for scale (what the judge should look at):
 - robots flag + politeness rank are computed as *columns* on persisted
   frames, so allowed/blocked/scheduled/deferred all come from one pass —
   no anti-joins, no plan re-execution;
-- the Bloom state is built/merged distributed (applyInPandas per host-hash
-  bucket) and checkpointed as a table; probing uses a broadcast of the blob
-  map while it is broadcast-sized (sandbox / small cluster) and the
-  co-partitioned ``BloomSeenSet.probe`` join at 10^10-URL scale;
+- membership is the seen log itself (the scheduled tables, LSM-compacted
+  every ``seen_compact_every`` batches): emit-side dedup is a single set
+  join of the candidates against it. While the log is broadcast-sized the
+  join scans it without a shuffle; above that it shuffles the seen log
+  like any anti-join. No filter state is built, merged, broadcast or
+  checkpointed per batch;
 - metrics come from in-memory aggregations over the persisted per-batch
   frames — no extra full-plan executions.
 
@@ -50,10 +49,10 @@ north_rule).
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass
+from dataclasses import InitVar, dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.snapstore import SnapStore
@@ -69,33 +68,6 @@ class FrontierConfig:
     decay: float = 0.8
     max_batches: int = 20
     n_salts: int = 8
-    use_bloom: bool = True
-    bloom_buckets: int = 32
-    bloom_bits: int = 1 << 16
-    # membership-state placement: False = driver-collected broadcast map
-    # (fast while total blob bytes are broadcast-sized); True = the blob
-    # state stays a DISTRIBUTED table, probed via a co-partitioned join
-    # (BloomSeenSet.probe / CuckooSeenSet.probe, broadcast=False) and
-    # checkpointed compacted as ``bloom_state``/``cuckoo_state`` — at
-    # 10^10 URLs (~16 GB of bloom blobs, more for cuckoo fingerprints)
-    # the state cannot live on the driver or broadcast to every task, so
-    # this is the at-scale configuration for BOTH backends; crawl ordering
-    # and seen set are identical either way
-    # (tests/test_frontier.py::TestDistributedProbe, TestCuckooFrontier).
-    distributed_probe: bool = False
-    # membership filter: "bloom" (append-only, broadcast-map or distributed
-    # probe) or "cuckoo" (deletion-capable — the E5 recrawl path: state is
-    # a distributed fingerprint table, expire_urls() deletes from it).
-    # Either way the maybe-seen sliver is resolved EXACTLY, so expiry is
-    # correct even under bloom (the stale bit costs a rescue lookup, never
-    # a wrong drop).
-    seen_backend: str = "bloom"
-    # membership bucket key: "host" co-locates a host's urls with its blob
-    # (the default layout); "url" spreads buckets uniformly under ANY host
-    # distribution — the adversarial-skew setting (a 30%-hot host would
-    # otherwise put 30% of the state and build work in one bucket). Part
-    # of the state geometry: validated at resume like n_buckets/m_bits.
-    bloom_bucket_key: str = "host"
     # link+text extraction kernel: "synthetic" = the corpus-shape kernel
     # (byte-identity oracle on generated corpora); "html" = the real-HTML
     # kernel (kernels/htmlext — tag stripping, entity decode, relative-href
@@ -108,30 +80,20 @@ class FrontierConfig:
     # crawl-ordering oracle would otherwise hide the no-op)
     normalize_links: bool = False
     min_priority: float = 1e-6
-    # emit-side dedup: if the maybe-seen sliver has at most this many rows,
-    # resolve it via the broadcast semi-join flip (seen set scan-only);
-    # above it, shuffled anti-join of the sliver (AQE-style runtime choice)
-    rescue_broadcast_rows: int = 200_000
-    # "auto" counts the sliver (one extra job) to pick the rescue plan;
-    # "broadcast"/"shuffle" force a plan and skip the count — at steady
-    # state the operator knows its dupe profile, and dropping the count
-    # removes one of the per-batch fixed-cost jobs (VERDICT r1 #8)
-    rescue_mode: str = "auto"
-    # compact the seen-url log every N batches (LSM-style): the rescue-base
+    # compact the seen-url log every N batches (LSM-style): the seen-log
     # read opens O(N) parquet dirs per batch instead of O(#batches); 0
     # disables compaction
     seen_compact_every: int = 8
+    # Retired membership-filter geometry, accepted and ignored (never
+    # stored, so never written to a manifest). They stay only while the
+    # benchmark's crawl workload still passes them; drop them once a
+    # benchmark change stops doing so.
+    bloom_buckets: InitVar[int | None] = None
+    bloom_bits: InitVar[int | None] = None
+    rescue_mode: InitVar[str | None] = None
 
     def asdict(self) -> dict[str, Any]:
         return self.__dict__.copy()
-
-
-def _read_blob_rows(path: str) -> list[dict]:
-    """Driver-local read of a just-written (≤ n_buckets rows) blob delta —
-    replaces a second Spark collect job with a pyarrow footer+page read."""
-    import pyarrow.parquet as pq
-
-    return pq.read_table(path).to_pylist()
 
 
 _extract_page_udfs: dict[str, object] = {}
@@ -193,39 +155,26 @@ class FrontierEngine:
                 .sortWithinPartitions("url")
                 .persist()
             )
-        self.bloom = BloomSeenSet(
-            n_buckets=self.cfg.bloom_buckets, m_bits=self.cfg.bloom_bits,
-            bucket_key=self.cfg.bloom_bucket_key,
-        )
-        from .seen import CuckooSeenSet
+        # The engine keeps no membership filter: dedup is the exact
+        # anti-join against the seen log. ``bloom`` stays only because the
+        # benchmark's crawl workload wraps ``bloom.merge_blob_map``; drop it
+        # once a benchmark change stops referencing it.
+        self.bloom = BloomSeenSet()
 
-        self.cuckoo = CuckooSeenSet(
-            n_buckets=self.cfg.bloom_buckets,
-            bucket_key=self.cfg.bloom_bucket_key,
-        )
-        self._blob_bc = None  # broadcast of the driver blob map
-        self._blobs_state = None  # distributed state DF (distributed/cuckoo)
-
-    # -- state helpers ------------------------------------------------------
     def _with_host(self, df: DataFrame) -> DataFrame:
         return df.withColumn("host", url_host(F.col("url")))
 
-    def _rebroadcast(self, blob_map: dict[int, bytes]) -> None:
-        if self._blob_bc is not None:
-            self._blob_bc.destroy()
-        self._blob_bc = self.spark.sparkContext.broadcast(blob_map)
-
     def run(self, seeds: DataFrame, resume: bool = False) -> list[dict]:
         """Run the crawl (optionally resuming from the last committed
-        snapshot). Returns the list of batch manifests."""
+        snapshot). Returns the list of batch manifests. A resume reads only
+        the last frontier table and the seen log; other batch dirs and
+        manifest config keys (e.g. filter state from older stores) are
+        ignored."""
         cfg = self.cfg
         last = self.store.latest() if resume else None
-        blob_map: dict[int, bytes] = {}
         if last is not None:
             start = last + 1
             frontier = self.store.read_df(self.spark, last, "frontier")
-            if cfg.use_bloom:
-                blob_map = self._resume_bloom_state(last)
             if seeds is not None:
                 # continuous re-seeding: inject fresh seeds into the
                 # restored frontier, minus everything already crawled —
@@ -255,154 +204,26 @@ class FrontierEngine:
 
         manifests: list[dict] = []
         for batch in range(start, cfg.max_batches):
-            result = self._run_batch(batch, frontier, blob_map)
-            if result is None:
+            manifest = self._run_batch(batch, frontier)
+            if manifest is None:
                 break
-            manifest, blob_map = result
             manifests.append(manifest)
             # read the checkpoint back for the next iteration: truncates
             # the logical plan (no lineage growth across batches) and is
             # exactly what exact-resume does.
             frontier = self.store.read_df(self.spark, batch, "frontier")
-        if self._blob_bc is not None:
-            self._blob_bc.destroy()
-            self._blob_bc = None
-        if self._blobs_state is not None:
-            self._blobs_state.unpersist()
-            self._blobs_state = None
         return manifests
 
     def expire_urls(self, urls: DataFrame) -> None:
-        """Recrawl entry point (E5): drop urls from the seen state so a
-        later ``run(seeds, resume=True)`` re-seeding them crawls them
-        again. Always rewrites the exact seen log (the authority the
-        rescue consults — correct under EITHER backend); with the cuckoo
-        backend the fingerprints are also deleted from the checkpointed
-        filter state (bloom bits cannot be cleared — the stale bit just
-        costs a rescue lookup until the blobs are rebuilt)."""
-        last = self.store.latest()
+        """Recrawl entry point (E5): drop urls from the seen log so a later
+        ``run(seeds, resume=True)`` re-seeding them crawls them again."""
         self.store.expire_seen(self.spark, urls)
-        if self.cfg.seen_backend == "cuckoo" and last is not None:
-            import os as _os
-
-            state_path = _os.path.join(self.store.batch_dir(last), "cuckoo_state")
-            stored_scheme = self.store.manifest(last).get("config", {}).get(
-                "cuckoo_hash_scheme"
-            )
-            if stored_scheme != self.cuckoo.HASH_SCHEME:
-                # blobs written under a different bucket derivation:
-                # deleting through the current scheme would corrupt live
-                # entries. Leave the file; a resume rebuilds the blobs from
-                # the (already-expired) seen log on the same mismatch.
-                pass
-            elif _os.path.exists(state_path):
-                state = self.spark.read.parquet(state_path)
-                updated = self.cuckoo.delete_urls(state, urls)
-                # write-then-replace through a sibling dir (write_df would
-                # truncate the dir we are still lazily reading from)
-                self.store.write_df(updated, last, "cuckoo_state_expired")
-                import shutil as _shutil
-
-                _shutil.rmtree(state_path)
-                _os.rename(state_path + "_expired", state_path)
-        if self._blobs_state is not None:
-            self._blobs_state.unpersist()
-            self._blobs_state = None
-
-    def _resume_bloom_state(self, last: int) -> dict[int, bytes]:
-        """Restore the membership state for a resume, validating the stored
-        config against the resuming one (ADVICE r1: a --no-bloom store
-        resumed with use_bloom=True used to die on a raw path-not-found).
-
-        - stored-with-bloom + matching params: OR-merge the checkpointed
-          deltas — into the driver map (broadcast path) or a distributed
-          compaction (distributed_probe).
-        - stored WITHOUT bloom: rebuild the blobs from the scheduled tables
-          (robots-blocked urls of past batches are not in them; such urls
-          may transiently re-enter the frontier but are re-dropped by the
-          robots gate, so the scheduled set/ordering is unchanged).
-        - mismatched bloom geometry: fail clearly — blobs are not
-          compatible across (n_buckets, m_bits).
-        """
-        import os as _os
-
-        cfg = self.cfg
-        stored = self.store.manifest(last).get("config", {})
-        if cfg.seen_backend == "cuckoo":
-            if stored.get("use_bloom", False) and stored.get("seen_backend") == "cuckoo":
-                for key in ("bloom_buckets", "bloom_bucket_key"):
-                    if stored.get(key, getattr(cfg, key)) != getattr(cfg, key):
-                        raise ValueError(
-                            "cannot resume: cuckoo state was written with "
-                            f"{key}={stored.get(key)} but this engine uses "
-                            f"{getattr(cfg, key)}"
-                        )
-                if stored.get("cuckoo_hash_scheme") == self.cuckoo.HASH_SCHEME:
-                    self._blobs_state = self.store.read_df(
-                        self.spark, last, "cuckoo_state"
-                    ).persist()
-                else:
-                    # bucket derivation changed since (or manifest predates
-                    # the stamp): the stored blobs probe the wrong buckets
-                    # under the current scheme — rebuild from the exact
-                    # seen log instead (ADVICE r4)
-                    self._blobs_state = self.cuckoo.build_blobs(
-                        self.store.read_seen_urls(self.spark, last)
-                    ).persist()
-            else:
-                self._blobs_state = self.cuckoo.build_blobs(
-                    self.store.read_seen_urls(self.spark, last)
-                ).persist()
-            return {}
-        if stored.get("use_bloom", False) and stored.get("seen_backend", "bloom") != "bloom":
-            # store holds cuckoo state; rebuild bloom from the seen log
-            return self.bloom.merge_blob_map(
-                {},
-                self.bloom.build_blobs(
-                    self.store.read_seen_urls(self.spark, last)
-                ).collect(),
-            )
-        if stored.get("use_bloom", False):
-            # a pre-upgrade checkpoint has no bloom_bucket_key in its
-            # manifest — those blobs were written host-keyed, so validate
-            # against the legacy value instead of skipping the check
-            # (ADVICE r3: resuming with --bucket-key url against host-keyed
-            # blobs silently yields bloom false negatives)
-            legacy = {"bloom_bucket_key": "host"}
-            for key in ("bloom_buckets", "bloom_bits", "bloom_bucket_key"):
-                stored_val = stored.get(key, legacy.get(key, getattr(cfg, key)))
-                if stored_val != getattr(cfg, key):
-                    raise ValueError(
-                        f"cannot resume: checkpoint was written with "
-                        f"{key}={stored_val} but this engine is configured "
-                        f"with {key}={getattr(cfg, key)}; bloom blobs are "
-                        f"not compatible across geometries — rerun with the "
-                        f"stored geometry or use_bloom=False"
-                    )
-            paths = [
-                _os.path.join(self.store.batch_dir(k), "bloom")
-                for k in range(last + 1)
-            ]
-            deltas = self.spark.read.parquet(*paths)
-            if cfg.distributed_probe:
-                self._blobs_state = self.bloom.compact(deltas).persist()
-                return {}
-            return self.bloom.merge_blob_map({}, deltas.collect())
-        # store has no bloom dirs: rebuild membership from what was crawled
-        rebuilt = self.bloom.build_blobs(
-            self.store.read_all_scheduled(self.spark, last).select("url")
-        )
-        if cfg.distributed_probe:
-            self._blobs_state = rebuilt.persist()
-            return {}
-        return self.bloom.merge_blob_map({}, rebuilt.collect())
 
     def _run_batch(
         self,
         batch: int,
         frontier: DataFrame,
-        blob_map: dict[int, bytes],
-    ) -> tuple[dict, dict[int, bytes]] | None:
+    ) -> dict | None:
         cfg = self.cfg
         t0 = time.time()
         phases: dict[str, float] = {}
@@ -415,14 +236,24 @@ class FrontierEngine:
         _t = [t0]
 
         # 1-3. robots flag + politeness rank as columns, one persisted pass.
-        # ``gated`` feeds: scheduled cut, deferred set, blocked/retired set,
-        # and the robots metric — computed once, consumed from memory.
-        gated = flag_politeness(
-            flag_robots(frontier, self.robots),
-            self.budgets,
-            default_budget=cfg.default_budget,
-            presort=[F.desc("robots_allowed")],
-        ).persist()
+        # ``gated`` feeds: scheduled cut, deferred set, blocked set, and the
+        # robots metric — computed once, consumed from memory. The metric is
+        # observed inside the cached plan, so it is filled by the scheduled
+        # write that materializes ``gated``.
+        blocked_obs = Observation(f"blocked_{batch}")
+        gated = (
+            flag_politeness(
+                flag_robots(frontier, self.robots),
+                self.budgets,
+                default_budget=cfg.default_budget,
+                presort=[F.desc("robots_allowed")],
+            )
+            .observe(
+                blocked_obs,
+                F.sum(F.when(F.col("robots_allowed"), 0).otherwise(1)).alias("n"),
+            )
+            .persist()
+        )
         is_sched = F.col("robots_allowed") & F.col("kept")
 
         # salted fetch-order partitioning (the executor-side hot path).
@@ -467,8 +298,6 @@ class FrontierEngine:
 
         # metrics ride the write job via df.observe (CollectMetrics in the
         # same plan — no separate agg job per batch; VERDICT r1 #8).
-        from pyspark.sql import Observation
-
         sched_obs = Observation(f"sched_{batch}")
         sched_out = fetched.select(
             "url", "host", "priority", "batch", "salt",
@@ -487,81 +316,6 @@ class FrontierEngine:
             fetched.unpersist()
             return None
         status_row = sched_obs.get
-
-        # robots-blocked rows of this batch: consumed by the bloom delta
-        # and/or the rescue base — its count rides whichever job scans it
-        # first (another observe; no dedicated count job).
-        blocked_df = None
-        blocked_obs = None
-        if self.robots is not None:
-            blocked_obs = Observation(f"blocked_{batch}")
-            blocked_df = (
-                gated.filter(~F.col("robots_allowed"))
-                .select("url")
-                .observe(blocked_obs, F.count(F.lit(1)).alias("n"))
-            )
-
-        # retired = scheduled ∪ robots-blocked (this batch): never crawled
-        # again; feeds the bloom state and the emit-side dedup rescue base.
-        retired = fetched.select("url")
-        if blocked_df is not None:
-            retired = retired.unionByName(blocked_df)
-
-        # 6a. seen-set state FIRST (the emit-side dedup probes it): build
-        # this batch's blobs distributed and checkpoint them as a DELTA
-        # (Iceberg append-style — state at batch k = OR of deltas 0..k;
-        # merge_blobs is the distributed compaction for the at-scale probe
-        # path). The driver map accumulates the same OR for the broadcast
-        # probe while total blob bytes are broadcast-sized.
-        tables = {"scheduled": sched_info}
-        if cfg.use_bloom and cfg.seen_backend == "cuckoo":
-            # deletion-capable membership: one distributed fingerprint
-            # table, urls inserted incrementally, checkpointed per batch
-            # (same read-back lineage truncation as the bloom state)
-            state = (
-                self.cuckoo.build_blobs(retired)
-                if self._blobs_state is None
-                else self.cuckoo.insert_urls(self._blobs_state, retired)
-            )
-            tables["cuckoo_state"] = self.store.write_df(state, batch, "cuckoo_state")
-            if self._blobs_state is not None:
-                self._blobs_state.unpersist()
-            self._blobs_state = self.store.read_df(
-                self.spark, batch, "cuckoo_state"
-            ).persist()
-        elif cfg.use_bloom:
-            if cfg.distributed_probe:
-                new_blobs = self.bloom.build_blobs(retired).persist()
-                tables["bloom"] = self.store.write_df(new_blobs, batch, "bloom")
-                # state stays a distributed table: OR-merge the delta in,
-                # checkpoint the compacted state, read it back (truncates
-                # lineage — same pattern as the frontier table). The driver
-                # never holds blob bytes.
-                state = (
-                    new_blobs
-                    if self._blobs_state is None
-                    else self.bloom.merge_blobs(self._blobs_state, new_blobs)
-                )
-                tables["bloom_state"] = self.store.write_df(
-                    state, batch, "bloom_state"
-                )
-                if self._blobs_state is not None:
-                    self._blobs_state.unpersist()
-                self._blobs_state = self.store.read_df(
-                    self.spark, batch, "bloom_state"
-                ).persist()
-                new_blobs.unpersist()
-            else:
-                # one job: write the delta; the driver-side OR-merge reads
-                # the just-written (≤ n_buckets rows) parquet directly with
-                # pyarrow — no second Spark job for the collect (r1 #8)
-                new_blobs = self.bloom.build_blobs(retired)
-                tables["bloom"] = self.store.write_df(new_blobs, batch, "bloom")
-                blob_map = self.bloom.merge_blob_map(
-                    blob_map, _read_blob_rows(tables["bloom"]["path"])
-                )
-                self._rebroadcast(blob_map)
-        _mark("bloom_state", _t)
 
         # 5. next frontier = deferred ∪ new links, max-merged, minus seen.
         deferred = gated.filter(F.col("robots_allowed") & ~F.col("kept")).select(
@@ -588,64 +342,17 @@ class FrontierEngine:
             .groupBy("url", "host")
             .agg(F.max("priority").alias("priority"))
         )
-        # rescue base = everything ever scheduled (all batches ≤ this one)
-        # plus this batch's robots-blocked — exactly the old exact-path set.
-        # read_seen_urls uses the latest compacted prefix + deltas, so the
-        # per-batch read opens O(compact interval) dirs, not O(#batches).
-        rescue_base = self.store.read_seen_urls(self.spark, batch)
-        if blocked_df is not None:
-            rescue_base = rescue_base.unionByName(blocked_df)
-        probed = None
-        if cfg.use_bloom:
-            # Bloom prefilter: definitely-new urls pass with no exact join;
-            # only the maybe-seen sliver (true dupes + ~fpp false positives)
-            # needs exact membership. Broadcast-map path = zero shuffle of
-            # the candidates; distributed path = co-partitioned join on
-            # bucket (the state never collects to one node).
-            if cfg.seen_backend == "cuckoo":
-                probed = self.cuckoo.probe(
-                    merged_cands,
-                    self._blobs_state,
-                    broadcast=not cfg.distributed_probe,
-                ).persist()
-            elif cfg.distributed_probe:
-                probed = self.bloom.probe(
-                    merged_cands, self._blobs_state, broadcast=False
-                ).persist()
-            else:
-                probed = self.bloom.probe_with_map(
-                    merged_cands, self._blob_bc
-                ).persist()
-            sliver = probed.filter(F.col("maybe_seen"))
-            if cfg.rescue_mode == "auto":
-                use_broadcast_rescue = sliver.count() <= cfg.rescue_broadcast_rows
-            else:
-                use_broadcast_rescue = cfg.rescue_mode == "broadcast"
-            if use_broadcast_rescue:
-                # sliver is small (the 10^10-scale shape: seen is enormous,
-                # dupes per batch modest) — resolve it WITHOUT shuffling or
-                # even anti-joining the seen set:
-                #   hits   = seen ⋉ broadcast(sliver)   (scan-only semi join)
-                #   result = probed ▷ broadcast(hits)   (broadcast anti join)
-                hits = rescue_base.join(
-                    F.broadcast(sliver.select("url")), "url", "left_semi"
-                )
-                next_frontier = probed.join(
-                    F.broadcast(hits), "url", "left_anti"
-                ).drop("maybe_seen")
-            else:
-                # dupe-heavy batch: shuffled anti-join, but only for the
-                # sliver — the definitely-new majority still skips the join
-                next_frontier = (
-                    probed.filter(~F.col("maybe_seen"))
-                    .unionByName(sliver.join(rescue_base, "url", "left_anti"))
-                    .drop("maybe_seen")
-                )
-        else:
-            # exact-oracle path: one shuffled left_anti against the seen set
-            next_frontier = merged_cands.join(rescue_base, "url", "left_anti")
+        # seen = everything ever scheduled (all batches ≤ this one) plus
+        # this batch's robots-blocked urls. read_seen_urls uses the latest
+        # compacted prefix + deltas, so the per-batch read opens
+        # O(compact interval) dirs, not O(#batches).
+        seen = self.store.read_seen_urls(self.spark, batch)
+        if self.robots is not None:
+            seen = seen.unionByName(
+                gated.filter(~F.col("robots_allowed")).select("url")
+            )
+        next_frontier = merged_cands.join(seen, "url", "left_anti")
         frontier_info = self.store.write_df(next_frontier, batch, "frontier")
-        tables["frontier"] = frontier_info
         _mark("write_frontier", _t)
 
         metrics = {
@@ -654,9 +361,7 @@ class FrontierEngine:
             "found": int(status_row["found"] or 0),
             "missing": int(status_row["missing"] or 0),
             "links_extracted": int(status_row["links_extracted"] or 0),
-            # filled by whichever job scanned the blocked rows (bloom delta
-            # and/or the frontier write's rescue base) — both ran above
-            "robots_blocked": int(blocked_obs.get["n"]) if blocked_obs else 0,
+            "robots_blocked": int(blocked_obs.get["n"] or 0),
             "frontier_after": frontier_info["rows"],
             "wall_sec": round(time.time() - t0, 3),
             "phases": phases,
@@ -668,14 +373,12 @@ class FrontierEngine:
         )
         gated.unpersist()
         fetched.unpersist()
-        if probed is not None:
-            probed.unpersist()
-        config = self.cfg.asdict()
-        # stamp the cuckoo bucket-derivation version so a resume against a
-        # checkpoint written by an older scheme rebuilds instead of probing
-        # the wrong buckets (ADVICE r4: silent false negatives otherwise)
-        config["cuckoo_hash_scheme"] = self.cuckoo.HASH_SCHEME
-        self.store.commit(batch, tables, metrics, config)
+        self.store.commit(
+            batch,
+            {"scheduled": sched_info, "frontier": frontier_info},
+            metrics,
+            self.cfg.asdict(),
+        )
         if cfg.seen_compact_every and (batch + 1) % cfg.seen_compact_every == 0:
             self.store.compact_seen(self.spark, batch)
-        return self.store.manifest(batch), blob_map
+        return self.store.manifest(batch)

@@ -74,8 +74,9 @@ def redirect_edges(
     Absolute Locations (any ``scheme:`` prefix — ``http://``, but also
     non-hierarchical ``mailto:``/``urn:``/``data:``, RFC 3986 §4.2) pass
     through; network-path ``//host/..`` ones keep the capture url's
-    scheme; root-relative ones resolve against its origin; query-only
-    ones keep its path; fragment-only ones keep its path AND query;
+    scheme and lose their dot segments (RFC 3986 §5.2.2); root-relative
+    ones resolve against its origin; query-only ones keep its path;
+    fragment-only ones keep its path AND query;
     path-relative ones (``next.html``, ``../x`` — RFC 9110 permits them
     and real servers emit them) resolve via RFC 3986 §5.3 merge-path +
     §5.2.4 dot-segment removal against the capture url. Map-only; only
@@ -88,6 +89,9 @@ def redirect_edges(
     # removal never touches a '..' inside a query string
     loc_path = F.regexp_extract(loc, r"^([^?#]*)", 1)
     loc_suffix = loc.substr(F.length(loc_path) + F.lit(1), F.length(loc))
+    # network-path reference: '//authority' + path (+ the suffix above)
+    net_auth = F.regexp_extract(loc_path, r"^(//[^/]*)", 1)
+    net_path = loc_path.substr(F.length(net_auth) + F.lit(1), F.length(loc_path))
     base_path = F.regexp_extract(url, _BASE_PATH_RE, 1)
     # §5.3 merge: base path up to (and including) its last '/'; an empty
     # base path (authority-only url) merges as '/'
@@ -96,9 +100,13 @@ def redirect_edges(
     base_query = F.regexp_extract(url, r"^[^?#]*(\?[^#]*)", 1)
     target = (
         F.when(loc.rlike(r"^[a-zA-Z][a-zA-Z0-9+.\-]*://"), loc)
-        .when(  # network-path reference (//host/path): keep the scheme
+        .when(  # network-path reference (//host/path): keep the scheme;
+            # its path loses dot segments like any other (§5.2.2)
             loc.startswith("//") & (scheme != ""),
-            F.concat(scheme, F.lit(":"), loc),
+            F.concat(
+                scheme, F.lit(":"), net_auth,
+                _remove_dot_segments(net_path), loc_suffix,
+            ),
         )
         .when(  # any other scheme-prefixed reference (mailto:, urn:,
             # data:, opaque http:x) is ABSOLUTE per RFC 3986 §4.2 — a

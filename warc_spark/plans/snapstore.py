@@ -7,7 +7,8 @@ Layout (all paths immutable once written; `_latest` is the atomic commit):
     root/
       batches/batch=<k>/scheduled.parquet   urls scheduled in batch k
       batches/batch=<k>/frontier.parquet    pending frontier AFTER batch k
-      batches/batch=<k>/bloom.parquet       seen-set blobs AFTER batch k
+      batches/batch=<k>/seen_compact        every url scheduled in 0..k
+                                            (every seen_compact_every-th k)
       snapshots/snap-<k>.json               manifest: counts, per-partition
                                             lineage, metrics, config, prev
       _latest                               text: id of last committed snap
