@@ -206,48 +206,6 @@ class TestRedecodeUtf8:
         assert html_to_text(redecode_utf8(body)) == "Zoë & 中文"
 
 
-class TestFramingRobustness:
-    """ADVICE r3 (high): a record whose payload lacks the \r\n\r\n framing
-    (truncated / non-HTTP capture) must yield null text/links, not fail the
-    task — pandas .str[2] returns float NaN for it, and the kernels must
-    normalize that before the Python extraction loops."""
-
-    def _mk(self, *payloads):
-        import pandas as pd
-
-        return pd.Series([p if p is None else bytearray(p) for p in payloads])
-
-    def test_page_html_kernel_unframed_record(self):
-        import pandas as pd
-
-        from warc_spark.sources.pages import extract_page_html_kernel
-
-        good = b"WARC/1.0\r\nX: y\r\n\r\nHTTP/1.1 200 OK\r\n\r\n<p>hi</p>"
-        bad = b"WARC/1.0 truncated-without-framing"
-        out = extract_page_html_kernel(
-            self._mk(good, bad, None),
-            pd.Series(["http://a/", "http://b/", "http://c/"]),
-        )
-        assert out["text"].tolist()[0] == "hi"
-        assert out["text"].tolist()[1] is None
-        assert out["text"].tolist()[2] is None
-        assert out["links"].tolist()[1] is None
-
-    def test_text_html_payload_kernel_unframed_record(self):
-        from warc_spark.sources.pages import extract_text_html_from_payload_kernel
-
-        good = b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n<p>ok</p>"
-        bad = b"no-framing-here"
-        out = extract_text_html_from_payload_kernel(self._mk(good, bad, None))
-        assert out.tolist() == ["ok", None, None]
-
-    def test_synthetic_payload_kernel_null_payload(self):
-        from warc_spark.sources.pages import extract_text_from_payload_kernel
-
-        out = extract_text_from_payload_kernel(self._mk(None, b"junk"))
-        assert out.isna().all()
-
-
 class TestUnclosedScriptStyle:
     """VERDICT r3 #5: an unterminated <script>/<style> (truncated capture)
     runs to EOF, browser-style — its content must never leak into text or
@@ -351,16 +309,3 @@ class TestRedecodeHtml:
         )
         raw = body.encode("windows-1251")
         assert html_to_text(redecode_html(self._mirror(raw))) == "Тест\nПервый абзац"
-
-    def test_body_kernel_uses_content_type(self):
-        import pandas as pd
-
-        from warc_spark.sources.pages import extract_text_html_from_body_kernel
-
-        body = "<html><body><p>Зимняя страница</p></body></html>"
-        raw = body.encode("windows-1251")
-        out = extract_text_html_from_body_kernel(
-            pd.Series([bytearray(raw), None]),
-            pd.Series(["text/html; charset=windows-1251", None]),
-        )
-        assert out.tolist() == ["Зимняя страница", None]

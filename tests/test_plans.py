@@ -107,6 +107,29 @@ def test_fetch_join_corpus_stationary(spark):
     eng.pages.unpersist()
 
 
+def test_fetch_plan_one_arrow_crossing(spark, tmp_path):
+    """The frontier's fetch step derives links AND text from the html
+    column through one struct UDF: exactly one ArrowEvalPython node, so
+    the binary column crosses the Arrow boundary once per fetch."""
+    from warc_spark.operators.frontier import FrontierConfig, FrontierEngine
+    from warc_spark.plans.snapstore import SnapStore
+    from warc_spark.sources.pages import synth_pages
+
+    for extractor in ("synthetic", "html"):
+        eng = FrontierEngine(
+            spark, synth_pages(spark, 200, seed=1), SnapStore(str(tmp_path)),
+            config=FrontierConfig(extractor=extractor),
+        )
+        sched = spark.range(0, 50).select(
+            F.concat(F.lit("http://h0.example.org/page/"), F.col("id").cast("string")).alias("url"),
+            F.lit(1.0).alias("priority"),
+        )
+        p = plan_of(eng._fetch(sched))
+        eng.pages.unpersist()
+        assert len(_node_blocks(p, "ArrowEvalPython")) == 1, p
+        assert "BatchEvalPython" not in p
+
+
 def _node_blocks(formatted_plan: str, node_name: str) -> list[str]:
     """The detail blocks ('(n) NodeName' + Input/Arguments lines) of every
     node whose name contains node_name, from explain('formatted') output."""

@@ -173,7 +173,8 @@ class TestUrljoinParity:
         ``rfc_join``). One Spark job over the
         full cross product (405 cases). Subset bounds honored by
         construction: bases carry a non-empty path, references are
-        non-empty, '..' nests at most 4 deep."""
+        non-empty, and no run of 4+ consecutive '..' stops short of the
+        root (see test_dot_segment_runs_past_three_diverge)."""
         from urllib.parse import urljoin
 
         bases = [
@@ -233,3 +234,45 @@ class TestUrljoinParity:
             if got[i] != rfc_join(b, r)
         ]
         assert not mismatches, mismatches[:10]
+
+    def test_dot_segment_runs_past_three_diverge(self, spark):
+        """Pins the documented boundary of ``_remove_dot_segments``: its
+        ``/seg/../`` pass also matches a ``..`` as the segment, so inside a
+        run of 4+ consecutive ``..`` that does not climb past the root,
+        ``/../../`` pairs cancel each other instead of popping two real
+        segments. These refs resolve differently from urljoin, and this
+        test asserts exactly how; a run of 3 still matches."""
+        from urllib.parse import urljoin
+
+        base = "http://h.example.org/p"
+        cases = {
+            # ref: (what redirect_edges returns, RFC 3986 / urljoin)
+            "/a/b/c/../../../x": ("http://h.example.org/x",) * 2,
+            "/a/b/c/d/../../../../x": (
+                "http://h.example.org/a/b/x", "http://h.example.org/x"),
+            "a/b/c/d/e/../../../../../x": (
+                "http://h.example.org/a/b/x", "http://h.example.org/x"),
+            "/a/b/c/d/e/f/../../../../../../x?q=1": (
+                "http://h.example.org/a/b/x?q=1", "http://h.example.org/x?q=1"),
+            "a/b/c/d/e/../../../../..": (
+                "http://h.example.org/a/b/c/d/", "http://h.example.org/"),
+            # network-path reference: dot removal runs on its path too
+            "//cdn.example.org/a/b/c/d/e/../../../../../x": (
+                "http://cdn.example.org/a/b/x", "http://cdn.example.org/x"),
+        }
+        tagged = spark.createDataFrame(
+            [(r, base, 301, r) for r in cases],
+            "i string, url string, http_status int, location string",
+        )
+        got = {
+            row.i: row.target
+            for row in redirect_edges(tagged, extra_cols=("i",)).collect()
+        }
+        for ref, (ours, rfc) in cases.items():
+            assert got[ref] == ours, ref
+            auth, _, rest = ref[2:].partition("/")
+            oracle = (
+                urljoin(urljoin(base, "//" + auth), "/" + rest)
+                if ref.startswith("//") else urljoin(base, ref)
+            )
+            assert oracle == rfc, ref

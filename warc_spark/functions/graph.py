@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.pages import extract_page_udf, page_bodies
+
 # mirrors kernels/urlnorm._URL_RE's host group, as a pure JVM expression
 # (lower-cased, trailing root-dot stripped) — SQL-replayable in oracles
 _HOST_PATTERN = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://([^/:?#]*)"
@@ -67,25 +69,6 @@ def host_edges(
     )
 
 
-def _links_only_html_kernel(html, url):
-    """WARC record bytes + page url -> array<string> of resolved hrefs.
-    Same framing/NaN handling as ``sources.pages.extract_page_html_kernel``
-    but SKIPS text extraction — the graph path only needs links, and
-    ``html_to_text`` is the expensive half of the combined kernel."""
-    import pandas as pd
-
-    from ..kernels.htmlext import extract_links, warc_record_bodies
-
-    body = warc_record_bodies(html)
-    return pd.Series(
-        [
-            extract_links(b, u) if b is not None else None
-            for b, u in zip(body, url)
-        ],
-        dtype=object,
-    )
-
-
 def host_graph_from_pages(
     pages: DataFrame,
     extractor: str = "html",
@@ -98,14 +81,9 @@ def host_graph_from_pages(
     the fetch path no text is computed), then ``host_edges`` aggregates —
     everything downstream of the kernel is slim host strings.
     ``extractor='html'`` is the real-HTML kernel (tag-aware,
-    ``<base>``-resolved hrefs); ``'synthetic'`` matches ``synth_pages``."""
-    if extractor == "html":
-        kernel = _links_only_html_kernel
-    else:
-        from ..sources.pages import extract_links_kernel
-
-        kernel = lambda html, url: extract_links_kernel(html)  # noqa: E731
-    ex = F.pandas_udf(kernel, "array<string>")
+    ``<base>``-resolved hrefs); ``'synthetic'`` matches ``synth_pages``;
+    any other name raises ValueError."""
+    ex = extract_page_udf("record", extractor, ("links",), url=True)
     linked = pages.select(
         F.col(url_col).alias("url"),
         ex(F.col(html_col), F.col(url_col)).alias("out_links"),
@@ -115,14 +93,14 @@ def host_graph_from_pages(
 
 def _anchors_html_kernel(html, url):
     """WARC record bytes + page url -> array<struct<link, anchor>> of
-    resolved hrefs with their anchor text (same framing/NaN handling as
-    ``_links_only_html_kernel``; ``kernels/htmlext.extract_link_anchors``
-    does the work)."""
+    resolved hrefs with their anchor text (the html extractor's framing
+    and charset fix, ``sources.pages.page_bodies``;
+    ``kernels/htmlext.extract_link_anchors`` does the work)."""
     import pandas as pd
 
-    from ..kernels.htmlext import extract_link_anchors, warc_record_bodies
+    from ..kernels.htmlext import extract_link_anchors
 
-    body = warc_record_bodies(html)
+    body = page_bodies(html, "record")
     return pd.Series(
         [
             [{"link": u, "anchor": a} for u, a in extract_link_anchors(b, p)]

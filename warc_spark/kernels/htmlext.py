@@ -1,11 +1,11 @@
 """Tag-aware HTML text + link extraction kernel (VERDICT r2 #1).
 
-The synthetic-corpus kernels in sources/pages.py extract by the corpus's
-known shape (first ``<p>..</p>`` match; flat ``href="..."`` findall) — junk
-on any real-world page. This kernel handles what a real Common-Crawl
-segment actually contains: nested tags, script/style payloads, comments,
-HTML entities, relative hrefs and ``<base>``. (The reference stops at
-payload bytes — /root/reference/warc/warc.py yields raw payloads, no
+``sources.pages.extract_page``'s synthetic extractor reads the generated
+corpus's shape (first ``<p>..</p>``; flat ``href="..."`` findall) — junk on
+any real-world page. Its html extractor calls the functions here, which
+handle what a real Common-Crawl segment contains: nested tags, script/style
+payloads, comments, HTML entities, relative hrefs and ``<base>``. (The
+reference stops at payload bytes — its warc.py yields raw payloads, no
 extractor — so this is engine scope, not reference parity.)
 
 It is deliberately a DETERMINISTIC REGEX PIPELINE, not a browser-grade DOM
@@ -74,22 +74,6 @@ _HREF_VAL = r"""href\s*=\s*(?:"([^"]*)"|'([^']*)'|([^\s>]+))"""
 _BASE_RE = re.compile(r"<base\b[^>]*?" + _HREF_VAL, re.I | re.S)
 _A_RE = re.compile(r"<(?:a|area)\b[^>]*?" + _HREF_VAL, re.I | re.S)
 _SKIP_SCHEMES = ("javascript:", "mailto:", "tel:", "data:")
-
-
-def warc_record_bodies(html) -> list[str | None]:
-    """Shared framing step for every kernel that takes a binary column of
-    FULL serialized WARC response records (pd.Series in, list out): latin-1
-    mirror decode, split off WARC headers + HTTP headers at the two
-    ``\\r\\n\\r\\n`` boundaries, normalize the float-NaN that pandas yields
-    for records MISSING the framing (truncated/non-HTTP captures) to None
-    so one bad record can't fail the task (ADVICE r3, high), then
-    charset-fix the body via ``redecode_html``. One definition — the three
-    former per-kernel copies diverging was itself a review finding."""
-    s = html.map(lambda b: bytes(b).decode("latin-1") if b is not None else None)
-    return [
-        redecode_html(b) if isinstance(b, str) else None
-        for b in s.str.split("\r\n\r\n", n=2).str[2]
-    ]
 
 
 def redecode_utf8(s: str | None) -> str | None:

@@ -52,7 +52,10 @@ def _remove_dot_segments(p):
     run-quantified pattern handles any depth), then ``/seg/../`` pairs
     (4 passes — each pass clears one nesting level across the whole
     string), then leading ``/../`` runs pop to root. Deterministic
-    documented subset: >4-deep ``..`` nesting collapses partially."""
+    documented subset: ``[^/]+`` also matches a ``..`` segment, so a run of
+    4+ consecutive ``..`` that stops short of the root cancels ``/../../``
+    pairs inside itself (``/a/b/c/d/../../../../x`` -> ``/a/b/x``, RFC 3986
+    gives ``/x``); pinned by tests/test_redirects.py."""
     # '(/.)+/' -> '/' collapses a run of any length in ONE global pass
     # (no lookahead — the DuckDB/RE2 oracle replays the same pattern)
     p = F.regexp_replace(p, r"(/\.)+/", "/")

@@ -18,8 +18,11 @@ replacing ``_latest`` — a crash mid-batch leaves ``_latest`` at k-1 and the
 half-written batch dir is simply ignored/overwritten on resume (exact-resume
 semantics; verified by tests/test_frontier.py::test_resume_*).
 
-On a real cluster the same layout lands on S3/HDFS and the manifest's
-per-partition row counts give audit lineage per shuffle partition.
+The store assumes a local (POSIX) filesystem that every executor and the
+driver share: commits, the seen-table swap and existence checks are plain
+``os``/``shutil`` calls, and ``_latest`` relies on ``os.replace`` being
+atomic. It does not run as is on S3/HDFS. The manifest's per-partition row
+counts give audit lineage per shuffle partition.
 """
 
 from __future__ import annotations

@@ -1669,11 +1669,9 @@ def warc_parse_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     match instead of only the in-query self-check. Record framing matches
     sources/pages.gen_pages_pdf; at sf0.1 this is the same 20k-record
     parse workload the r3/r4 bench legs measured."""
-    from pyspark.sql.types import StringType
+    from .sources.pages import extract_page_udf
 
-    from .sources.pages import extract_text_from_payload_kernel
-
-    extract_udf = F.pandas_udf(extract_text_from_payload_kernel, StringType())
+    extract_udf = extract_page_udf("payload", "synthetic", ("text",))
     d = t(spark, sf_dir, "documents")
     rows = d.select(
         "doc_id", "text", "lang", "source",

@@ -41,6 +41,30 @@ ARC_RECORD_SCHEMA = StructType(
 )
 
 
+def _arc_row(rec, name: str, index: int, version: int) -> dict:
+    """One parsed ARC record -> an ARC_RECORD_SCHEMA row (every reader
+    builds its rows here)."""
+    f = rec.fields
+    return {
+        "filename": name,
+        "record_index": index,
+        "arc_version": version,
+        "url": f.get("url"),
+        "ip_address": f.get("ip_address"),
+        "arc_date": pd.to_datetime(
+            f.get("date"), format="%Y%m%d%H%M%S", errors="coerce"
+        ),
+        "content_type": f.get("content_type"),
+        "result_code": f.get("result_code") or None,
+        "checksum": f.get("checksum") or None,
+        "location": f.get("location") or None,
+        "offset": f.get("offset") or None,
+        "arc_filename": f.get("filename") or None,
+        "length": int(f["length"]) if f.get("length") else 0,
+        "payload": rec.payload.encode("latin-1"),
+    }
+
+
 def _records_of_arc(name: str, data: bytes) -> list[dict]:
     if data[:2] == GZIP_MAGIC:
         text = b"".join(p for _, _, p in iter_gzip_members(data)).decode("latin-1")
@@ -48,30 +72,7 @@ def _records_of_arc(name: str, data: bytes) -> list[dict]:
         text = data.decode("latin-1")
     it = parse_arc_file(text)
     version = next(it)
-    rows = []
-    for idx, rec in enumerate(it):
-        f = rec.fields
-        rows.append(
-            {
-                "filename": name,
-                "record_index": idx,
-                "arc_version": version,
-                "url": f.get("url"),
-                "ip_address": f.get("ip_address"),
-                "arc_date": pd.to_datetime(
-                    f.get("date"), format="%Y%m%d%H%M%S", errors="coerce"
-                ),
-                "content_type": f.get("content_type"),
-                "result_code": f.get("result_code") or None,
-                "checksum": f.get("checksum") or None,
-                "location": f.get("location") or None,
-                "offset": f.get("offset") or None,
-                "arc_filename": f.get("filename") or None,
-                "length": int(f["length"]) if f.get("length") else 0,
-                "payload": rec.payload.encode("latin-1"),
-            }
-        )
-    return rows
+    return [_arc_row(rec, name, idx, version) for idx, rec in enumerate(it)]
 
 
 def read_arc(spark: SparkSession, path: str) -> DataFrame:
@@ -228,27 +229,8 @@ def read_arc_records(spark: SparkSession, index: DataFrame) -> DataFrame:
                     for ri, (_, _, rec) in enumerate(
                         parse_arc_records_indexed(text, version)
                     ):
-                        f = rec.fields
                         rows.append(
-                            {
-                                "filename": name,
-                                "record_index": int(row.rec_base__) + ri,
-                                "arc_version": version,
-                                "url": f.get("url"),
-                                "ip_address": f.get("ip_address"),
-                                "arc_date": pd.to_datetime(
-                                    f.get("date"), format="%Y%m%d%H%M%S",
-                                    errors="coerce",
-                                ),
-                                "content_type": f.get("content_type"),
-                                "result_code": f.get("result_code") or None,
-                                "checksum": f.get("checksum") or None,
-                                "location": f.get("location") or None,
-                                "offset": f.get("offset") or None,
-                                "arc_filename": f.get("filename") or None,
-                                "length": int(f["length"]) if f.get("length") else 0,
-                                "payload": rec.payload.encode("latin-1"),
-                            }
+                            _arc_row(rec, name, int(row.rec_base__) + ri, version)
                         )
                         keeps.append({c: getattr(row, c) for c in keep})
             finally:

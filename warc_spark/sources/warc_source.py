@@ -126,45 +126,44 @@ def split_http_payload(
     )
 
 
+def _warc_row(
+    rec, name: str, index: int, offset: int, size: int, payload_cap: int | None
+) -> dict:
+    """One parsed WARC record -> a WARC_RECORD_SCHEMA row (every reader
+    builds its rows here)."""
+    payload = rec.payload if payload_cap is None else rec.payload[:payload_cap]
+    return {
+        "filename": name,
+        "record_index": index,
+        "offset": offset,
+        "size": size,
+        "version": rec.version,
+        "headers": rec.hmap,
+        "header_names": [n for n, _ in rec.headers],
+        "warc_type": rec.type,
+        "record_id": rec.record_id,
+        "warc_date": rec.date,  # raw string; vectorized to_datetime per batch
+        "target_uri": rec.url,
+        "ip_address": rec.ip_address,
+        "content_type": rec.get("Content-Type"),
+        "content_length": int(rec.hmap.get("content-length", "0") or 0),
+        "payload": payload,
+        "payload_digest": rec.checksum,
+        "error": rec.error,
+    }
+
+
 def _records_of_file(name: str, data: bytes, strict: bool, payload_cap: int | None):
     """Kernel: one archive file's bytes -> list of record dicts."""
-    rows = []
-    if data[:2] == GZIP_MAGIC:
-        members = iter_gzip_members(data)
-        idx = 0
-        for off, size, payload in members:
-            for rec in parse_warc_stream(payload, strict=strict):
-                rows.append((rec, off, size, idx))
-                idx += 1
-    else:
-        for idx, rec in enumerate(parse_warc_stream(data, strict=strict)):
-            rows.append((rec, rec.offset, rec.size, idx))
+    if data[:2] != GZIP_MAGIC:
+        return [
+            _warc_row(rec, name, idx, rec.offset, rec.size, payload_cap)
+            for idx, rec in enumerate(parse_warc_stream(data, strict=strict))
+        ]
     out = []
-    for rec, off, size, idx in rows:
-        payload = rec.payload
-        if payload_cap is not None:
-            payload = payload[:payload_cap]
-        out.append(
-            {
-                "filename": name,
-                "record_index": idx,
-                "offset": off,
-                "size": size,
-                "version": rec.version,
-                "headers": rec.hmap,
-                "header_names": [n for n, _ in rec.headers],
-                "warc_type": rec.type,
-                "record_id": rec.record_id,
-                "warc_date": rec.date,  # raw string; vectorized to_datetime per batch
-                "target_uri": rec.url,
-                "ip_address": rec.ip_address,
-                "content_type": rec.get("Content-Type"),
-                "content_length": int(rec.hmap.get("content-length", "0") or 0),
-                "payload": payload,
-                "payload_digest": rec.checksum,
-                "error": rec.error,
-            }
-        )
+    for off, size, payload in iter_gzip_members(data):
+        for rec in parse_warc_stream(payload, strict=strict):
+            out.append(_warc_row(rec, name, len(out), off, size, payload_cap))
     return out
 
 
@@ -370,32 +369,9 @@ def read_warc_presplit(
                     members = [(0, len(data), data)]
                 for off, size, payload in members:
                     for rec in parse_warc_stream(payload, strict=strict):
-                        pl = rec.payload
-                        if payload_cap is not None:
-                            pl = pl[:payload_cap]
-                        rows.append(
-                            {
-                                "filename": name,
-                                "record_index": idx_local,
-                                "offset": int(start) + off,
-                                "size": size,
-                                "version": rec.version,
-                                "headers": rec.hmap,
-                                "header_names": [n for n, _ in rec.headers],
-                                "warc_type": rec.type,
-                                "record_id": rec.record_id,
-                                "warc_date": rec.date,
-                                "target_uri": rec.url,
-                                "ip_address": rec.ip_address,
-                                "content_type": rec.get("Content-Type"),
-                                "content_length": int(
-                                    rec.hmap.get("content-length", "0") or 0
-                                ),
-                                "payload": pl,
-                                "payload_digest": rec.checksum,
-                                "error": rec.error,
-                            }
-                        )
+                        rows.append(_warc_row(
+                            rec, name, idx_local, int(start) + off, size, payload_cap
+                        ))
                         idx_local += 1
             yield _finalize_batch(rows)
 
@@ -444,32 +420,10 @@ def read_warc_records(
                         size, payload = len(data), data
                     name = os.path.basename(p)
                     for rec in parse_warc_stream(payload, strict=strict):
-                        pl = rec.payload
-                        if payload_cap is not None:
-                            pl = pl[:payload_cap]
-                        rows.append(
-                            {
-                                "filename": name,
-                                "record_index": -1,  # random access: no scan ordinal
-                                "offset": int(row.offset),
-                                "size": size,
-                                "version": rec.version,
-                                "headers": rec.hmap,
-                                "header_names": [n for n, _ in rec.headers],
-                                "warc_type": rec.type,
-                                "record_id": rec.record_id,
-                                "warc_date": rec.date,
-                                "target_uri": rec.url,
-                                "ip_address": rec.ip_address,
-                                "content_type": rec.get("Content-Type"),
-                                "content_length": int(
-                                    rec.hmap.get("content-length", "0") or 0
-                                ),
-                                "payload": pl,
-                                "payload_digest": rec.checksum,
-                                "error": rec.error,
-                            }
-                        )
+                        # random access: no scan ordinal
+                        rows.append(_warc_row(
+                            rec, name, -1, int(row.offset), size, payload_cap
+                        ))
                         keeps.append({c: getattr(row, c) for c in keep})
             finally:
                 for fh in handles.values():

@@ -198,9 +198,12 @@ def stream_archive_export(
     (one gzip member per record, bounded memory, crash-safe part files)
     into ``out_dir/epoch=N``. foreachBatch is at-least-once on retries,
     so the epoch directory is cleared before a rerun writes — per-epoch
-    idempotence on top of deterministic record ids. Trigger.AvailableNow
-    + the streaming checkpoint make repeated invocations drain only NEW
-    input files (the restartable backfill harness)."""
+    idempotence on top of deterministic record ids. That clear is a
+    local-filesystem ``os.path.exists`` + ``shutil.rmtree``, so
+    ``out_dir`` must be a POSIX path the driver and executors share, not
+    an object-store URI. Trigger.AvailableNow + the streaming checkpoint
+    make repeated invocations drain only NEW input files (the restartable
+    backfill harness)."""
     if kind not in ("wet", "wat"):
         raise ValueError(f"kind must be wet|wat, got {kind!r}")
 
