@@ -123,11 +123,12 @@ class TestCrawlOracle:
         )
         for r in per_host.collect():
             assert BUDGETS.get(r.host, 3) >= r["count"]
-        # the blocked counter: exact for the first two batches — later, a url
-        # blocked two batches back can re-enter the frontier, since the seen
-        # log holds scheduled urls plus only the current batch's blocked ones
-        for m, sm in zip(manifests[:2], sim.metrics):
-            assert m["metrics"]["robots_blocked"] == sm["robots_blocked"]
+        # blocked urls are retired for good, so the blocked counter and the
+        # frontier size match the oracle in every batch
+        assert len(manifests) == len(sim.metrics)
+        for m, sm in zip(manifests, sim.metrics):
+            for key in ("robots_blocked", "frontier_after"):
+                assert m["metrics"][key] == sm[key], (key, m["metrics"], sm)
 
     def test_matches_simulator_with_wildcard_robots(
         self, spark, pages_df, pages_pdf, seeds_df, tmp_path
@@ -357,11 +358,12 @@ class TestDistributedProbe:
 class TestFixedCost:
     """Per-batch fixed cost is counted in Spark jobs: each one is
     scheduling latency that does not shrink with cluster width. A batch
-    runs the scheduled write, the frontier write (whose anti-join scans the
-    seen log) and the reads that open their inputs — no membership-filter
-    build, merge, probe or count."""
+    runs the scheduled write (six jobs, the fetch join's schedule-side
+    exchange among them) and the frontier write (three, the seen-log
+    broadcast among them). The reads that open their inputs run none, and
+    there is no membership-filter build, merge, probe or count."""
 
-    MAX_JOBS_PER_BATCH = 11
+    MAX_JOBS_PER_BATCH = 9
 
     def test_jobs_per_batch(self, spark, pages_df, seeds_df, tmp_path):
         sc = spark.sparkContext
@@ -395,6 +397,52 @@ class TestFixedCost:
             for k in (1, 2)
         ]
         assert 0 < max(jobs) <= self.MAX_JOBS_PER_BATCH, jobs
+
+
+class TestSchemaKnownReads:
+    """The per-batch read-backs (the frontier table, the seen log's compact
+    prefix, scheduled deltas and blocked tables) pass the engine's schema,
+    so opening them launches no Spark job; an inferred read does."""
+
+    def _jobs_while(self, sc, group, build):
+        sc.setJobGroup(group, "read-back")
+        try:
+            df = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return df, sc.statusTracker().getJobIdsForGroup(group)
+
+    def test_reads_launch_no_job(self, spark, pages_df, seeds_df, tmp_path):
+        from warc_spark.operators.frontier import FRONTIER_SCHEMA
+
+        store, manifests = run_engine(
+            spark, pages_df, seeds_df, tmp_path,
+            FrontierConfig(max_batches=3, default_budget=3, seen_compact_every=2),
+            robots=make_robots_df(spark),
+        )
+        assert len(manifests) == 3
+        assert all("blocked" in m["tables"] for m in manifests)
+        sc = spark.sparkContext
+        group = f"schema_known_{id(tmp_path)}"
+        (frontier, seen), jobs = self._jobs_while(
+            sc, group,
+            lambda: (
+                store.read_df(spark, 2, "frontier", FRONTIER_SCHEMA),
+                store.read_seen_urls(spark, 2),  # compact at 1 + deltas at 2
+            ),
+        )
+        assert list(jobs) == []
+        _, inferred = self._jobs_while(
+            sc, group + "_inferred", lambda: store.read_df(spark, 2, "frontier")
+        )
+        assert len(inferred) > 0  # the tracker does see inference jobs
+        assert frontier.count() == manifests[2]["metrics"]["frontier_after"]
+        logged = store.read_all_scheduled(spark, 2).select("url").unionByName(
+            spark.read.parquet(*(store.batch_dir(k) + "/blocked" for k in range(3)))
+        )
+        assert {r.url for r in seen.collect()} == {r.url for r in logged.collect()}
 
 
 class TestSeenCompaction:

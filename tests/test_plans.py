@@ -82,29 +82,51 @@ def test_bloom_probe_map_no_exchange(spark):
     assert "ArrowEvalPython" in p or "BatchEvalPython" in p
 
 
-def test_fetch_join_corpus_stationary(spark):
-    """The fetch join must consume the pages cache with NO exchange above
-    the InMemoryTableScan: only the schedule side shuffles."""
-    import tempfile
-
+def _fetch_plan(spark, pages, tmp_path, **kw) -> str:
+    """The formatted plan of FrontierEngine._fetch over a 50-url schedule,
+    at the session's default broadcast threshold."""
     from warc_spark.operators.frontier import FrontierConfig, FrontierEngine
     from warc_spark.plans.snapstore import SnapStore
-    from warc_spark.sources.pages import synth_pages
 
     eng = FrontierEngine(
-        spark, synth_pages(spark, 200, seed=1), SnapStore(tempfile.mkdtemp()),
-        config=FrontierConfig(),
+        spark, pages, SnapStore(str(tmp_path / "snap")), config=FrontierConfig(), **kw
     )
-    eng.pages.count()
     sched = spark.range(0, 50).select(
-        F.concat(F.lit("http://h0.example.org/page/"), F.col("id").cast("string")).alias("url")
+        F.concat(F.lit("http://h0.example.org/page/"), F.col("id").cast("string")).alias("url"),
+        (F.col("id") / 50.0).alias("priority"),
     )
-    p = plan_of(sched.join(eng.pages, "url", "left"))
+    try:
+        eng.pages.count()  # the steady state: the corpus layout is built
+        return plan_of(eng._fetch(sched))
+    finally:
+        eng.pages.unpersist()
+
+
+def _assert_corpus_stationary(p: str) -> None:
+    """A sort-merge fetch join whose only join-driven exchange is the
+    schedule side's. The cached corpus plan's own repartition
+    (REPARTITION_BY_NUM) is the one-off layout build, not a per-batch
+    exchange."""
+    assert "BroadcastExchange" not in p, p
+    assert "BroadcastHashJoin" not in p, p
+    assert _node_blocks(p, "SortMergeJoin"), p
+    shuffles = [
+        b for b in _node_blocks(p, "Exchange") if "ENSURE_REQUIREMENTS" in b
+    ]
+    assert len(shuffles) == 1, p
+    assert "priority" in shuffles[0] and "html" not in shuffles[0], shuffles[0]
+
+
+def test_fetch_join_corpus_stationary(spark, tmp_path):
+    """The engine's fetch join consumes the pages cache with NO exchange
+    above the InMemoryTableScan and never broadcasts it, even when the
+    corpus is under the broadcast threshold: only the schedule side
+    shuffles."""
+    from warc_spark.sources.pages import synth_pages
+
+    p = _fetch_plan(spark, synth_pages(spark, 200, seed=1), tmp_path)
     assert "InMemoryTableScan" in p
-    # at most ONE hash exchange on the join key (the schedule side); two
-    # would mean the cached corpus lost its layout and is re-shuffling
-    assert p.count("Exchange hashpartitioning(url") <= 1
-    eng.pages.unpersist()
+    _assert_corpus_stationary(p)
 
 
 def test_fetch_plan_one_arrow_crossing(spark, tmp_path):
@@ -177,37 +199,25 @@ def test_embedding_lsh_band_shuffle_carries_no_vectors(spark, sf_dir):
 
 
 def test_bucketed_corpus_join_has_single_exchange(spark, tmp_path):
-    """The 100 TB corpus layout: a url-bucketed pages table joins the
-    schedule side with NO exchange above the corpus scan — only the
-    schedule side shuffles (into the bucket layout). This is the on-disk
-    version of FrontierEngine's repartition+persist, valid across
-    sessions without any cache."""
+    """The 100 TB corpus layout: a url-bucketed pages table handed to the
+    engine with ``pages_prepared=True`` joins the schedule side with NO
+    exchange above the corpus scan — only the schedule side shuffles (into
+    the bucket layout). This is the on-disk version of FrontierEngine's
+    repartition+persist, valid across sessions without any cache."""
     from warc_spark.plans.layout import read_pages_bucketed, write_pages_bucketed
     from warc_spark.sources.pages import synth_pages
 
     spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     pages = synth_pages(spark, 2000, seed=42).select("url", "html")
-    write_pages_bucketed(pages, "t_pages_bucketed", n_buckets=8)
+    write_pages_bucketed(pages, "t_pages_bucketed", n_buckets=n_part)
     try:
-        corpus = read_pages_bucketed(spark, "t_pages_bucketed")
-        sched = spark.range(0, 500).select(
-            F.concat(F.lit("http://host0.example.org/page/"), F.col("id").cast("string")).alias("url"),
-            F.lit(1.0).alias("priority"),
+        p = _fetch_plan(
+            spark, read_pages_bucketed(spark, "t_pages_bucketed"), tmp_path,
+            pages_prepared=True,
         )
-        # disable broadcast so the join must pick a shuffle strategy — the
-        # bucketed side's layout then shows up as a missing Exchange
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            p = plan_of(sched.join(corpus, "url", "left"))
-        finally:
-            spark.conf.set(
-                "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
-            )
-        import re as _re
-
-        n_exchanges = len(_re.findall(r"\(\d+\) Exchange", p))
-        assert n_exchanges == 1, p  # schedule side only; corpus is bucketed
-        assert "SortMergeJoin" in p
+        _assert_corpus_stationary(p)
+        assert len(_node_blocks(p, "Exchange")) == 1, p
         assert "Bucketed: true" in p or "SelectedBucketsCount" in p, p
     finally:
         spark.sql("DROP TABLE IF EXISTS t_pages_bucketed")

@@ -8,7 +8,8 @@ tests/oracle_sim.py replicates exactly):
 1. candidates   = the frontier (the frontier invariant: every frontier
                   table is already deduplicated against the seen set as of
                   its emit batch — dedup happens ONCE, at emit, step 5)
-2. robots gate  : disallowed urls are *dropped permanently* (added to seen,
+2. robots gate  : disallowed urls are *dropped permanently* (logged as the
+                  batch's ``blocked`` table, which the seen log includes;
                   never scheduled)
 3. politeness   : per host keep top ``budget`` by (priority desc, url);
                   the rest *stay in the frontier* for the next batch
@@ -19,23 +20,28 @@ tests/oracle_sim.py replicates exactly):
 5. next frontier: politeness-deferred ∪ extracted links (priority =
                   parent*decay, max-merged per url), minus seen — one
                   exact left_anti join against the seen log (every url
-                  ever scheduled) plus this batch's robots-blocked urls
+                  ever scheduled or robots-blocked, this batch included)
 6. checkpoint   : scheduled/frontier written, manifest committed
 
 Physical design for scale:
 - the pages corpus is hash-partitioned AND sorted by url once at engine
-  construction (the Iceberg bucket/sort-order story) — the per-batch fetch
-  join shuffles only the (budget-bounded) schedule side; the 100 TB pages
-  table never moves;
+  construction (the Iceberg bucket/sort-order story), and the fetch join
+  carries a ``merge`` hint on the pages side: the sort-merge join
+  exchanges and sorts only the (budget-bounded) schedule side and the
+  corpus never moves, whatever its size. Without the hint a corpus under
+  ``autoBroadcastJoinThreshold`` was collected and broadcast again in
+  every batch;
 - robots flag + politeness rank are computed as *columns* on persisted
   frames, so allowed/blocked/scheduled/deferred all come from one pass —
   no anti-joins, no plan re-execution;
-- membership is the seen log itself (the scheduled tables, LSM-compacted
-  every ``seen_compact_every`` batches): emit-side dedup is a single set
-  join of the candidates against it. While the log is broadcast-sized the
-  join scans it without a shuffle; above that it shuffles the seen log
-  like any anti-join. No filter state is built, merged, broadcast or
+- membership is the seen log itself (the scheduled and blocked tables,
+  LSM-compacted every ``seen_compact_every`` batches): emit-side dedup is
+  a single set join of the candidates against it. While the log is
+  broadcast-sized the join scans it without a shuffle; above that it
+  shuffles the seen log like any anti-join. No filter state is built, merged, broadcast or
   checkpointed per batch;
+- checkpoint read-backs (the next batch's frontier, the seen log) pass the
+  schema the engine wrote, so opening them launches no Spark job;
 - metrics come from in-memory aggregations over the persisted per-batch
   frames — no extra full-plan executions.
 
@@ -61,6 +67,10 @@ from .politeness import flag_politeness
 from .priority import salted_priority_order
 from .robots import flag_robots, url_host
 from .seen import BloomSeenSet
+
+# the frontier table as the engine writes it; read back with this schema,
+# opening it launches no schema-inference job
+FRONTIER_SCHEMA = "url string, host string, priority double"
 
 
 @dataclass
@@ -100,7 +110,13 @@ class FrontierConfig:
 class FrontierEngine:
     """Driver-side loop over distributed batches; all heavy ops are
     DataFrame transformations, the loop itself only sequences batches and
-    commits snapshots."""
+    commits snapshots.
+
+    ``pages_prepared=True`` takes ``pages`` as given: the caller must hold
+    them hash-partitioned by url at ``spark.sql.shuffle.partitions`` (a
+    cached ``repartition(n, "url")``, or a table bucketed by url into that
+    many buckets). Any other layout still joins correctly, but the merge
+    join then shuffles the corpus in every batch."""
 
     def __init__(
         self,
@@ -154,7 +170,9 @@ class FrontierEngine:
         last = self.store.latest() if resume else None
         if last is not None:
             start = last + 1
-            frontier = self.store.read_df(self.spark, last, "frontier")
+            frontier = self.store.read_df(
+                self.spark, last, "frontier", FRONTIER_SCHEMA
+            )
             if seeds is not None:
                 # continuous re-seeding: inject fresh seeds into the
                 # restored frontier, minus everything already crawled —
@@ -191,7 +209,9 @@ class FrontierEngine:
             # read the checkpoint back for the next iteration: truncates
             # the logical plan (no lineage growth across batches) and is
             # exactly what exact-resume does.
-            frontier = self.store.read_df(self.spark, batch, "frontier")
+            frontier = self.store.read_df(
+                self.spark, batch, "frontier", FRONTIER_SCHEMA
+            )
         return manifests
 
     def expire_urls(self, urls: DataFrame) -> None:
@@ -200,11 +220,12 @@ class FrontierEngine:
         self.store.expire_seen(self.spark, urls)
 
     def _fetch(self, sched: DataFrame) -> DataFrame:
-        """Step 4: LEFT join to the pre-partitioned+sorted pages cache (only
-        the schedule side shuffles; missing pages kept), then links + text
-        from one struct UDF (html crosses Arrow once) + payload digest."""
+        """Step 4: LEFT sort-merge join to the pre-partitioned+sorted pages
+        cache (only the schedule side shuffles; missing pages kept), then
+        links + text from one struct UDF (html crosses Arrow once) + payload
+        digest."""
         return (
-            sched.join(self.pages, "url", "left")
+            sched.join(self.pages.hint("merge"), "url", "left")
             .withColumn(
                 "status",
                 F.when(F.col("html").isNotNull(), "found").otherwise("missing"),
@@ -298,6 +319,15 @@ class FrontierEngine:
             fetched.unpersist()
             return None
         status_row = sched_obs.get
+        n_blocked = int(blocked_obs.get["n"] or 0)
+        tables = {"scheduled": sched_info}
+        if n_blocked:
+            # retire blocked urls for good: the seen log reads this table
+            tables["blocked"] = self.store.write_df(
+                gated.filter(~F.col("robots_allowed")).select("url"),
+                batch,
+                "blocked",
+            )
 
         # 5. next frontier = deferred ∪ new links, max-merged, minus seen.
         deferred = gated.filter(F.col("robots_allowed") & ~F.col("kept")).select(
@@ -324,17 +354,13 @@ class FrontierEngine:
             .groupBy("url", "host")
             .agg(F.max("priority").alias("priority"))
         )
-        # seen = everything ever scheduled (all batches ≤ this one) plus
-        # this batch's robots-blocked urls. read_seen_urls uses the latest
-        # compacted prefix + deltas, so the per-batch read opens
-        # O(compact interval) dirs, not O(#batches).
+        # seen = everything ever scheduled or robots-blocked (all batches
+        # ≤ this one). read_seen_urls uses the latest compacted prefix +
+        # deltas, so the per-batch read opens O(compact interval) dirs, not
+        # O(#batches).
         seen = self.store.read_seen_urls(self.spark, batch)
-        if self.robots is not None:
-            seen = seen.unionByName(
-                gated.filter(~F.col("robots_allowed")).select("url")
-            )
         next_frontier = merged_cands.join(seen, "url", "left_anti")
-        frontier_info = self.store.write_df(next_frontier, batch, "frontier")
+        tables["frontier"] = self.store.write_df(next_frontier, batch, "frontier")
         _mark("write_frontier", _t)
 
         metrics = {
@@ -343,8 +369,8 @@ class FrontierEngine:
             "found": int(status_row["found"] or 0),
             "missing": int(status_row["missing"] or 0),
             "links_extracted": int(status_row["links_extracted"] or 0),
-            "robots_blocked": int(blocked_obs.get["n"] or 0),
-            "frontier_after": frontier_info["rows"],
+            "robots_blocked": n_blocked,
+            "frontier_after": tables["frontier"]["rows"],
             "wall_sec": round(time.time() - t0, 3),
             "phases": phases,
         }
@@ -355,12 +381,7 @@ class FrontierEngine:
         )
         gated.unpersist()
         fetched.unpersist()
-        self.store.commit(
-            batch,
-            {"scheduled": sched_info, "frontier": frontier_info},
-            metrics,
-            self.cfg.asdict(),
-        )
+        self.store.commit(batch, tables, metrics, self.cfg.asdict())
         if cfg.seen_compact_every and (batch + 1) % cfg.seen_compact_every == 0:
             self.store.compact_seen(self.spark, batch)
         return self.store.manifest(batch)

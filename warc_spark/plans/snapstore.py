@@ -7,7 +7,10 @@ Layout (all paths immutable once written; `_latest` is the atomic commit):
     root/
       batches/batch=<k>/scheduled.parquet   urls scheduled in batch k
       batches/batch=<k>/frontier.parquet    pending frontier AFTER batch k
-      batches/batch=<k>/seen_compact        every url scheduled in 0..k
+      batches/batch=<k>/blocked             urls robots-blocked in batch k
+                                            (only when there were any)
+      batches/batch=<k>/seen_compact        every url scheduled or blocked
+                                            in 0..k
                                             (every seen_compact_every-th k)
       snapshots/snap-<k>.json               manifest: counts, per-partition
                                             lineage, metrics, config, prev
@@ -23,6 +26,10 @@ driver share: commits, the seen-table swap and existence checks are plain
 ``os``/``shutil`` calls, and ``_latest`` relies on ``os.replace`` being
 atomic. It does not run as is on S3/HDFS. The manifest's per-partition row
 counts give audit lineage per shuffle partition.
+
+Per-batch read-backs pass the schema the engine wrote (``read_df``'s
+``schema``; the seen log is always ``url string``), so opening a table
+lists its files but launches no footer-inference Spark job.
 """
 
 from __future__ import annotations
@@ -33,7 +40,6 @@ import shutil
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class SnapStore:
@@ -106,8 +112,13 @@ class SnapStore:
             return []
         return [self.manifest(k) for k in range(last + 1)]
 
-    def read_df(self, spark: SparkSession, batch: int, name: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.batch_dir(batch), name))
+    def read_df(
+        self, spark: SparkSession, batch: int, name: str, schema: str | None = None
+    ) -> DataFrame:
+        """One table of the batch. With ``schema`` (a DDL string naming a
+        subset of the written columns) Spark skips schema inference."""
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(os.path.join(self.batch_dir(batch), name))
 
     def read_all_scheduled(self, spark: SparkSession, upto: int) -> DataFrame:
         paths = [
@@ -126,9 +137,10 @@ class SnapStore:
 
     def compact_seen(self, spark: SparkSession, upto: int) -> dict[str, Any]:
         """Write the compacted seen-url table at batch ``upto`` (all urls
-        scheduled in 0..upto, one slim column). Amortizes the per-batch
-        rescue-base read from O(#batches) parquet dirs to O(compact
-        interval) — the LSM compaction of the crawl's membership log."""
+        scheduled or robots-blocked in 0..upto, one slim column). Amortizes
+        the per-batch seen-log read from O(#batches) parquet dirs to
+        O(compact interval) — the LSM compaction of the crawl's membership
+        log."""
         return self.write_df(
             self.read_seen_urls(spark, upto), upto, "seen_compact"
         )
@@ -157,27 +169,20 @@ class SnapStore:
         return info
 
     def read_seen_urls(self, spark: SparkSession, upto: int) -> DataFrame:
-        """urls scheduled in batches 0..upto: the latest compacted prefix
-        (if any) plus the per-batch deltas after it. Equivalent to
-        ``read_all_scheduled(upto).select("url")`` but opens O(interval)
-        dirs instead of O(#batches)."""
+        """urls scheduled or robots-blocked in batches 0..upto: the latest
+        compacted prefix (if any) plus the per-batch ``scheduled`` and
+        ``blocked`` deltas after it. Equivalent to
+        ``read_all_scheduled(upto).select("url")`` plus every blocked table,
+        but opens O(interval) dirs instead of O(#batches)."""
         c = self._latest_compact(upto)
         start = 0
-        parts = []
+        paths = []
         if c is not None:
-            parts.append(
-                spark.read.parquet(
-                    os.path.join(self.batch_dir(c), "seen_compact")
-                ).select("url")
-            )
+            paths.append(os.path.join(self.batch_dir(c), "seen_compact"))
             start = c + 1
-        delta_paths = [
-            os.path.join(self.batch_dir(k), "scheduled")
-            for k in range(start, upto + 1)
-        ]
-        if delta_paths:
-            parts.append(spark.read.parquet(*delta_paths).select("url"))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        for k in range(start, upto + 1):
+            paths.append(os.path.join(self.batch_dir(k), "scheduled"))
+            blocked = os.path.join(self.batch_dir(k), "blocked")
+            if os.path.exists(os.path.join(blocked, "_SUCCESS")):
+                paths.append(blocked)
+        return spark.read.schema("url string").parquet(*paths)
