@@ -1,7 +1,9 @@
 """Benchmark harness: headline queries + frontier throughput at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
-{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line, under 1.5 KB (``summary``):
+{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+ "frontier_urls_per_sec": ..., "cpus": ..., "rounds": ..., "detail": ...}
+and writes the per-round detail to BENCH/bench_detail.json.
 
 Self-adjudicating methodology (VERDICT r4 #1): the sandbox host's delivered
 cpu/bandwidth drifts several-fold between epochs, and a single-shot leg with
@@ -10,7 +12,7 @@ one pre-Spark calibration cannot distinguish code regressions from drift
 every leg now runs BENCH_ROUNDS (default 3) interleaved rounds in ONE JVM,
 medians are reported, and a short cpu+bw hardware burn runs immediately
 before the query block, between it and the frontier leg, and after the
-frontier leg — inside every round. A reader of BENCH_r{N}.json can therefore
+frontier leg — inside every round. A reader of the detail file can therefore
 normalize each leg by the burns that bracket it, from the artifact alone.
 
 The north-rule scaling evidence (local[8] vs local[32] as the sandbox proxy
@@ -45,8 +47,32 @@ HEADLINE = [
     "warc_parse_agg",
 ]
 
+# per-round frontier legs, query times and calibration of the last run,
+# relative to this file
+DETAIL_PATH = os.path.join("BENCH", "bench_detail.json")
+
 FRONTIER_PAGES = 1_500_000   # identical leg parameters to BENCH_r03/r04
 FRONTIER_BATCHES = 3
+
+
+def summary(
+    times: dict[str, float], sf: float, urls_per_sec: float, cpus: int, rounds: int
+) -> dict:
+    """The one JSON line bench.py prints last: the headline total, the
+    per-query medians and the frontier rate, well under 1.5 KB so a reader
+    of the output's tail gets all of it. Per-round legs, query times and
+    the calibration go to ``DETAIL_PATH``."""
+    return {
+        "metric": "headline_queries_plus_frontier_total_sec",
+        "value": round(sum(times.values()), 3),
+        "unit": "sec",
+        "queries": times,
+        "sf": sf,
+        "frontier_urls_per_sec": urls_per_sec,
+        "cpus": cpus,
+        "rounds": rounds,
+        "detail": DETAIL_PATH,
+    }
 
 
 def _median(xs: list) -> float:
@@ -178,22 +204,16 @@ def main() -> None:
     times = {name: _median(ts) for name, ts in q_times.items()}
     med_leg = _median([l["sec"] for l in frontier_legs])
     times["frontier_3batches"] = round(med_leg, 3)
-    total = round(sum(times.values()), 3)
-    out = {
-        "metric": "headline_queries_plus_frontier_total_sec",
-        "value": total,
-        "unit": "sec",
-        "queries": times,
-        "sf": sf,
-        "frontier_urls_per_sec": round(scheduled / med_leg, 1),
+    detail = {
         "frontier_urls_scheduled": scheduled,
-        "cpus": cpus,
-        "rounds": rounds,
         "frontier_legs": frontier_legs,
         "query_rounds": [r["queries"] for r in round_log],
         "calibration": calibration,
     }
-    print(json.dumps(out))
+    here = os.path.dirname(os.path.abspath(__file__))
+    with open(os.path.join(here, DETAIL_PATH), "w") as f:
+        json.dump(detail, f, indent=1)
+    print(json.dumps(summary(times, sf, round(scheduled / med_leg, 1), cpus, rounds)))
 
 
 if __name__ == "__main__":

@@ -170,13 +170,66 @@ def test_links_at_every_layer(extractor):
         assert got[:row] + got[row + 1:] == want[:row] + want[row + 1:], framing
 
 
+# rows only the parity against the JVM form below reads: Java's ``.``
+# stops at \r and \x85 (and \u2028, which the latin-1 mirror cannot
+# hold; its utf-8 bytes arrive as three latin-1 chars) unless ``(?d)``
+# is set; an empty <p></p> is "" where a body with no <p> is null
+_JVM_EDGES = {
+    "cr_in_p": b'<p>one\rtwo</p><a href="x">l</a>',
+    "nel_in_p": b"<p>one\x85two</p>",
+    "ls_in_p": "<p>one\u2028two</p>".encode(),
+    "empty_p": b'<p></p><p>late</p><a href="">e</a>',
+    "no_p": b'<html><body>text<a href="y">l</a></body></html>',
+}
+
+
+@pytest.mark.parametrize("extractor", ["synthetic", "html"])
+@pytest.mark.parametrize("framing", list(_FIELDS))
+def test_col_parity(spark, framing, extractor):
+    """``extract_page_col`` (the Column form every Spark caller uses: JVM
+    built-ins for synthetic, the pandas UDF for html) equals
+    ``extract_page`` row for row, on the six ``test_parity`` edges and
+    the rows above, for both fields together and each alone."""
+    from pyspark.sql import functions as F
+
+    from warc_spark.sources.pages import extract_page, extract_page_col
+
+    bodies = list(_BODIES.values()) + list(_JVM_EDGES.values())
+    col = pd.Series(
+        [None if b is None else bytearray(_framed(b, framing)) for b in bodies]
+    )
+    cts = pd.Series(_CTS + [None] * len(_JVM_EDGES))
+    df = spark.createDataFrame(
+        [(i, c, URL, ct) for i, (c, ct) in enumerate(zip(col, cts))],
+        "i int, b binary, url string, ct string",
+    )
+    for fields in (("links", "text"), ("text",), ("links",)):
+        want = extract_page(
+            col, framing, extractor, fields, url=pd.Series([URL] * len(col)),
+            content_type=cts if framing == "body" else None,
+        )
+        page = extract_page_col(
+            F.col("b"), framing, extractor, fields, url=F.col("url"),
+            content_type=F.col("ct") if framing == "body" else None,
+        )
+        if len(fields) == 1:
+            page = F.struct(page.alias(fields[0]))
+        rows = df.select("i", page.alias("p")).orderBy("i").collect()
+        got = [[r.p[f] for f in fields] for r in rows]
+        assert got == want[list(fields)].values.tolist(), fields
+
+
 class TestUnknownNamesRaise:
     """An unknown framing or extractor raises ValueError on the driver,
     where the UDF is built, instead of falling back to the synthetic
     extractor."""
 
     def test_kernel(self):
-        from warc_spark.sources.pages import extract_page, extract_page_udf
+        from warc_spark.sources.pages import (
+            extract_page,
+            extract_page_col,
+            extract_page_udf,
+        )
 
         col = _column("record")
         with pytest.raises(ValueError, match="extractor"):
@@ -184,7 +237,11 @@ class TestUnknownNamesRaise:
         with pytest.raises(ValueError, match="framing"):
             extract_page(col, "warc", "html")
         with pytest.raises(ValueError, match="framing"):
-            extract_page_udf("http", "synthetic", ("text",))
+            extract_page_col("html", "http", "synthetic", ("text",))
+        with pytest.raises(ValueError, match="extractor"):
+            extract_page_col("html", "record", "HTML")
+        with pytest.raises(ValueError, match="framing"):
+            extract_page_udf("http", ("text",))
 
     def test_frontier_config(self, spark, tmp_path):
         from warc_spark.operators.frontier import FrontierConfig, FrontierEngine

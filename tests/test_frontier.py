@@ -262,6 +262,33 @@ class TestResume:
         assert got == sim.batches
 
 
+    def test_uncommitted_blocked_ignored(self, spark, pages_df, seeds_df, tmp_path):
+        """A ``blocked`` table left in an uncommitted batch dir by a crashed
+        attempt is not part of the seen log: a resume that blocks nothing
+        (no robots table, so it writes no ``blocked`` of its own) crawls
+        exactly like the same resume of an unplanted copy of the store.
+        The stray holds urls the resume schedules in batches 2 and 3, so a
+        resume that read it would drop them from the frontier."""
+        import os
+        import shutil
+
+        store, _ = run_engine(
+            spark, pages_df, seeds_df, tmp_path / "a",
+            FrontierConfig(max_batches=2, default_budget=4),
+        )
+        shutil.copytree(store.root, str(tmp_path / "b"))
+        cfg4 = FrontierConfig(max_batches=4, default_budget=4)
+        FrontierEngine(spark, pages_df, store, config=cfg4).run(None, resume=True)
+        want = collect_batches(store, spark, 4)
+        stray = [(u,) for u, _ in want[2][:3] + want[3][:3]]
+        planted = SnapStore(str(tmp_path / "b"))
+        spark.createDataFrame(stray, "url string").write.parquet(
+            os.path.join(planted.batch_dir(2), "blocked")
+        )
+        FrontierEngine(spark, pages_df, planted, config=cfg4).run(None, resume=True)
+        assert collect_batches(planted, spark, 4) == want
+
+
 class TestBloomPath:
     def test_bloom_equals_exact(self, spark, pages_df, seeds_df, tmp_path):
         """A config carrying the retired Bloom geometry and rescue mode

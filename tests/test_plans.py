@@ -82,14 +82,15 @@ def test_bloom_probe_map_no_exchange(spark):
     assert "ArrowEvalPython" in p or "BatchEvalPython" in p
 
 
-def _fetch_plan(spark, pages, tmp_path, **kw) -> str:
+def _fetch_plan(spark, pages, tmp_path, extractor="synthetic", **kw) -> str:
     """The formatted plan of FrontierEngine._fetch over a 50-url schedule,
     at the session's default broadcast threshold."""
     from warc_spark.operators.frontier import FrontierConfig, FrontierEngine
     from warc_spark.plans.snapstore import SnapStore
 
     eng = FrontierEngine(
-        spark, pages, SnapStore(str(tmp_path / "snap")), config=FrontierConfig(), **kw
+        spark, pages, SnapStore(str(tmp_path / "snap")),
+        config=FrontierConfig(extractor=extractor), **kw
     )
     sched = spark.range(0, 50).select(
         F.concat(F.lit("http://h0.example.org/page/"), F.col("id").cast("string")).alias("url"),
@@ -129,27 +130,75 @@ def test_fetch_join_corpus_stationary(spark, tmp_path):
     _assert_corpus_stationary(p)
 
 
+def _python_nodes(formatted_plan: str) -> list[str]:
+    """Plan nodes that run Python workers: ArrowEvalPython,
+    BatchEvalPython and every *InPandas node."""
+    import re
+
+    return re.findall(
+        r"^\(\d+\) (\w*(?:EvalPython|InPandas)\w*)", formatted_plan, re.M
+    )
+
+
 def test_fetch_plan_one_arrow_crossing(spark, tmp_path):
     """The frontier's fetch step derives links AND text from the html
-    column through one struct UDF: exactly one ArrowEvalPython node, so
-    the binary column crosses the Arrow boundary once per fetch."""
-    from warc_spark.operators.frontier import FrontierConfig, FrontierEngine
-    from warc_spark.plans.snapstore import SnapStore
+    column with no Python for the synthetic extractor (JVM built-ins) and
+    through one struct UDF for the html extractor: exactly one
+    ArrowEvalPython node, so the binary column crosses the Arrow boundary
+    once per fetch. The pages come from parquet, so the cached corpus plan
+    holds no generator mapInPandas."""
     from warc_spark.sources.pages import synth_pages
 
-    for extractor in ("synthetic", "html"):
-        eng = FrontierEngine(
-            spark, synth_pages(spark, 200, seed=1), SnapStore(str(tmp_path)),
-            config=FrontierConfig(extractor=extractor),
-        )
-        sched = spark.range(0, 50).select(
-            F.concat(F.lit("http://h0.example.org/page/"), F.col("id").cast("string")).alias("url"),
-            F.lit(1.0).alias("priority"),
-        )
-        p = plan_of(eng._fetch(sched))
+    synth_pages(spark, 200, seed=1).write.parquet(str(tmp_path / "pages"))
+    pages = spark.read.parquet(str(tmp_path / "pages"))
+    p = _fetch_plan(spark, pages, tmp_path / "s")
+    assert _python_nodes(p) == [], p
+    p = _fetch_plan(spark, pages, tmp_path / "h", extractor="html")
+    assert _python_nodes(p) == ["ArrowEvalPython"], p
+
+
+@pytest.mark.parametrize("extractor", ["synthetic", "html"])
+def test_crawl_batch_python_nodes(spark, tmp_path, extractor):
+    """Every table a 3-batch crawl writes, planned as handed to
+    ``SnapStore.write_df``: with the synthetic extractor no plan has a
+    Python node, so a batch launches no Python worker; with the html
+    extractor each scheduled write has exactly one ArrowEvalPython. Pages
+    and seeds are read back from parquet, so the generators' own
+    mapInPandas is not in the plans."""
+    from warc_spark.operators.frontier import FrontierConfig, FrontierEngine
+    from warc_spark.plans.snapstore import SnapStore
+    from warc_spark.sources.pages import synth_pages, synth_seeds
+
+    class CapturingStore(SnapStore):
+        def __init__(self, root):
+            super().__init__(root)
+            self.plans = []
+
+        def write_df(self, df, batch, name):
+            self.plans.append((batch, name, plan_of(df)))
+            return super().write_df(df, batch, name)
+
+    synth_pages(spark, 400, seed=3, n_hosts=8).write.parquet(str(tmp_path / "pages"))
+    synth_seeds(spark, 400, n_seeds=12, seed=3, n_hosts=8).write.parquet(
+        str(tmp_path / "seeds")
+    )
+    store = CapturingStore(str(tmp_path / "snap"))
+    eng = FrontierEngine(
+        spark, spark.read.parquet(str(tmp_path / "pages")), store,
+        config=FrontierConfig(max_batches=3, extractor=extractor,
+                              seen_compact_every=2),
+    )
+    try:
+        assert len(eng.run(spark.read.parquet(str(tmp_path / "seeds")))) == 3
+    finally:
         eng.pages.unpersist()
-        assert len(_node_blocks(p, "ArrowEvalPython")) == 1, p
-        assert "BatchEvalPython" not in p
+    names = [name for _, name, _ in store.plans]
+    assert names.count("scheduled") == 3 and "seen_compact" in names, names
+    for batch, name, p in store.plans:
+        if extractor == "synthetic":
+            assert _python_nodes(p) == [], (batch, name, p)
+        elif name == "scheduled":
+            assert _python_nodes(p) == ["ArrowEvalPython"], (batch, p)
 
 
 def _node_blocks(formatted_plan: str, node_name: str) -> list[str]:

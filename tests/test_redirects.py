@@ -173,8 +173,8 @@ class TestUrljoinParity:
         ``rfc_join``). One Spark job over the
         full cross product (405 cases). Subset bounds honored by
         construction: bases carry a non-empty path, references are
-        non-empty, and no run of 4+ consecutive '..' stops short of the
-        root (see test_dot_segment_runs_past_three_diverge)."""
+        non-empty, and no run of 9+ consecutive '..' stops short of the
+        root (see test_deep_dot_segment_runs)."""
         from urllib.parse import urljoin
 
         bases = [
@@ -235,30 +235,30 @@ class TestUrljoinParity:
         ]
         assert not mismatches, mismatches[:10]
 
-    def test_dot_segment_runs_past_three_diverge(self, spark):
-        """Pins the documented boundary of ``_remove_dot_segments``: its
-        ``/seg/../`` pass also matches a ``..`` as the segment, so inside a
-        run of 4+ consecutive ``..`` that does not climb past the root,
-        ``/../../`` pairs cancel each other instead of popping two real
-        segments. These refs resolve differently from urljoin, and this
-        test asserts exactly how; a run of 3 still matches."""
+    def test_deep_dot_segment_runs(self, spark):
+        """Runs of consecutive ``..`` up to 8 deep pop real segments
+        exactly as urljoin does, also when they stop short of the root
+        (the ``/seg/../`` pass never takes a ``..`` for a segment). One
+        nesting level clears per pass, so a 9-deep run is the documented
+        bound of ``_remove_dot_segments``: it keeps the outermost pair,
+        and this test asserts exactly how."""
         from urllib.parse import urljoin
 
         base = "http://h.example.org/p"
+        nine = "/" + "/".join(f"s{i}" for i in range(9)) + "/.." * 9 + "/x"
+        eight = "/" + "/".join(f"s{i}" for i in range(8)) + "/.." * 8 + "/x"
         cases = {
-            # ref: (what redirect_edges returns, RFC 3986 / urljoin)
-            "/a/b/c/../../../x": ("http://h.example.org/x",) * 2,
-            "/a/b/c/d/../../../../x": (
-                "http://h.example.org/a/b/x", "http://h.example.org/x"),
-            "a/b/c/d/e/../../../../../x": (
-                "http://h.example.org/a/b/x", "http://h.example.org/x"),
-            "/a/b/c/d/e/f/../../../../../../x?q=1": (
-                "http://h.example.org/a/b/x?q=1", "http://h.example.org/x?q=1"),
-            "a/b/c/d/e/../../../../..": (
-                "http://h.example.org/a/b/c/d/", "http://h.example.org/"),
+            # ref: what redirect_edges returns (urljoin parity unless noted)
+            "/a/b/c/../../../x": "http://h.example.org/x",
+            "/a/b/c/d/../../../../x": "http://h.example.org/x",
+            "a/b/c/d/e/../../../../../x": "http://h.example.org/x",
+            "/a/b/c/d/e/f/../../../../../../x?q=1": "http://h.example.org/x?q=1",
+            "a/b/c/d/e/../../../../..": "http://h.example.org/",
             # network-path reference: dot removal runs on its path too
-            "//cdn.example.org/a/b/c/d/e/../../../../../x": (
-                "http://cdn.example.org/a/b/x", "http://cdn.example.org/x"),
+            "//cdn.example.org/a/b/c/d/e/../../../../../x": "http://cdn.example.org/x",
+            eight: "http://h.example.org/x",
+            # the bound: RFC 3986 / urljoin give http://h.example.org/x
+            nine: "http://h.example.org/s0/../x",
         }
         tagged = spark.createDataFrame(
             [(r, base, 301, r) for r in cases],
@@ -268,11 +268,14 @@ class TestUrljoinParity:
             row.i: row.target
             for row in redirect_edges(tagged, extra_cols=("i",)).collect()
         }
-        for ref, (ours, rfc) in cases.items():
-            assert got[ref] == ours, ref
+        for ref, want in cases.items():
+            assert got[ref] == want, ref
             auth, _, rest = ref[2:].partition("/")
             oracle = (
                 urljoin(urljoin(base, "//" + auth), "/" + rest)
                 if ref.startswith("//") else urljoin(base, ref)
             )
-            assert oracle == rfc, ref
+            if ref == nine:
+                assert oracle == "http://h.example.org/x"
+            else:
+                assert oracle == want, ref

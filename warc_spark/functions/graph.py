@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.pages import extract_page_udf, page_bodies
+from ..sources.pages import extract_page_col, page_bodies
 
 # mirrors kernels/urlnorm._URL_RE's host group, as a pure JVM expression
 # (lower-cased, trailing root-dot stripped) — SQL-replayable in oracles
@@ -76,18 +76,17 @@ def host_graph_from_pages(
     html_col: str = "html",
 ) -> DataFrame:
     """``(src, dst, weight)`` host edges straight from an input_hint pages
-    table (url, html, ...): ONE Arrow pass of a links-only extraction
-    kernel (the binary column crosses the Arrow boundary once, and unlike
-    the fetch path no text is computed), then ``host_edges`` aggregates —
-    everything downstream of the kernel is slim host strings.
+    table (url, html, ...): a links-only extraction (unlike the fetch path
+    no text is computed; JVM built-ins for ``'synthetic'``, one Arrow pass
+    for ``'html'``), then ``host_edges`` aggregates — everything
+    downstream of the extraction is slim host strings.
     ``extractor='html'`` is the real-HTML kernel (tag-aware,
     ``<base>``-resolved hrefs); ``'synthetic'`` matches ``synth_pages``;
     any other name raises ValueError."""
-    ex = extract_page_udf("record", extractor, ("links",), url=True)
-    linked = pages.select(
-        F.col(url_col).alias("url"),
-        ex(F.col(html_col), F.col(url_col)).alias("out_links"),
+    links = extract_page_col(
+        F.col(html_col), "record", extractor, ("links",), url=F.col(url_col)
     )
+    linked = pages.select(F.col(url_col).alias("url"), links.alias("out_links"))
     return host_edges(linked)
 
 

@@ -16,7 +16,9 @@ tests/oracle_sim.py replicates exactly):
 4. scheduled    : fetched (simulated: looked up in the pages table — the
                   reference's from_response hook, warc/warc.py:215-242,
                   with the network replaced by the deterministic pages
-                  corpus); links extracted from html
+                  corpus); links + text extracted from html in the same
+                  select (synthetic extractor: JVM regexp built-ins, no
+                  Python node in the batch; html: one Arrow UDF)
 5. next frontier: politeness-deferred ∪ extracted links (priority =
                   parent*decay, max-merged per url), minus seen — one
                   exact left_anti join against the seen log (every url
@@ -62,7 +64,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.snapstore import SnapStore
-from ..sources.pages import extract_page_udf
+from ..sources.pages import extract_page_col
 from .politeness import flag_politeness
 from .priority import salted_priority_order
 from .robots import flag_robots, url_host
@@ -134,7 +136,9 @@ class FrontierEngine:
         self.budgets = budgets
         self.cfg = config or FrontierConfig()
         # built here, so an unknown extractor fails before any batch runs
-        self._page_udf = extract_page_udf("record", self.cfg.extractor, url=True)
+        self._page = extract_page_col(
+            F.col("html"), "record", self.cfg.extractor, url=F.col("url")
+        )
         # The fetch-join layout: partition AND sort the corpus by url ONCE
         # (on a real deployment this is the Iceberg table's bucket + sort
         # order). Every batch's fetch join then only shuffles the schedule
@@ -222,33 +226,19 @@ class FrontierEngine:
     def _fetch(self, sched: DataFrame) -> DataFrame:
         """Step 4: LEFT sort-merge join to the pre-partitioned+sorted pages
         cache (only the schedule side shuffles; missing pages kept), then
-        links + text from one struct UDF (html crosses Arrow once) + payload
-        digest."""
-        return (
-            sched.join(self.pages.hint("merge"), "url", "left")
-            .withColumn(
-                "status",
-                F.when(F.col("html").isNotNull(), "found").otherwise("missing"),
-            )
-            .withColumn("_page", self._page_udf(F.col("html"), F.col("url")))
-            .withColumn(
-                "links",
-                F.when(
-                    F.col("html").isNotNull(), F.col("_page.links")
-                ).otherwise(F.array().cast("array<string>")),
-            )
-            .withColumn(
-                "text_extracted",
-                F.when(F.col("html").isNotNull(), F.col("_page.text")),
-            )
-            .withColumn(
-                "digest",
-                F.when(
-                    F.col("html").isNotNull(),
-                    F.concat(F.lit("sha1:"), F.sha1(F.col("html"))),
-                ),
-            )
-            .drop("html", "_page")
+        one select: status, links + text, payload digest. The synthetic
+        extractor is JVM built-ins, so the fetch runs no Python; the html
+        extractor's struct UDF sends html across Arrow once."""
+        found = F.col("html").isNotNull()
+        return sched.join(self.pages.hint("merge"), "url", "left").select(
+            *sched.columns,
+            F.when(found, "found").otherwise("missing").alias("status"),
+            F.when(found, self._page["links"])
+            .otherwise(F.array().cast("array<string>"))
+            .alias("links"),
+            self._page["text"].alias("text_extracted"),
+            F.when(found, F.concat(F.lit("sha1:"), F.sha1(F.col("html"))))
+            .alias("digest"),
         )
 
     def _run_batch(
@@ -358,7 +348,9 @@ class FrontierEngine:
         # ≤ this one). read_seen_urls uses the latest compacted prefix +
         # deltas, so the per-batch read opens O(compact interval) dirs, not
         # O(#batches).
-        seen = self.store.read_seen_urls(self.spark, batch)
+        seen = self.store.read_seen_urls(
+            self.spark, batch, tables.get("blocked", {}).get("path")
+        )
         next_frontier = merged_cands.join(seen, "url", "left_anti")
         tables["frontier"] = self.store.write_df(next_frontier, batch, "frontier")
         _mark("write_frontier", _t)

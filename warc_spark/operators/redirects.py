@@ -46,23 +46,31 @@ _ORIGIN_RE = r"^([a-zA-Z][a-zA-Z0-9+.\-]*://[^/?#]+)"
 _BASE_PATH_RE = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/?#]*([^?#]*)"
 
 
+# one path segment other than '..' (RE2-safe, no lookahead): no leading
+# dot, or one dot then a non-dot, or '..' then more. '.' segments are
+# already gone when the '/seg/../' passes run.
+_SEGMENT = r"(?:[^./][^/]*|\.[^./][^/]*|\.\.[^/]+)"
+
+
 def _remove_dot_segments(p):
     """RFC 3986 §5.2.4 over a PATH column as bounded regexp passes (pure
     JVM): ``/./`` runs and trailing ``/.`` collapse (one pass each — the
     run-quantified pattern handles any depth), then ``/seg/../`` pairs
-    (4 passes — each pass clears one nesting level across the whole
-    string), then leading ``/../`` runs pop to root. Deterministic
-    documented subset: ``[^/]+`` also matches a ``..`` segment, so a run of
-    4+ consecutive ``..`` that stops short of the root cancels ``/../../``
-    pairs inside itself (``/a/b/c/d/../../../../x`` -> ``/a/b/x``, RFC 3986
-    gives ``/x``); pinned by tests/test_redirects.py."""
+    (8 passes — each pass clears one nesting level across the whole
+    string), then leading ``/../`` runs pop to root. ``seg`` is any segment
+    but ``..`` (``_SEGMENT``), so a run of ``..`` pops real segments only.
+    Deterministic documented subset: a run of up to 8 consecutive ``..``
+    resolves as RFC 3986 does; a deeper run that stops short of the root
+    keeps unresolved segments (``/s0/s1/../s8`` then nine ``/..`` and
+    ``/x`` gives ``/s0/../x``, RFC 3986 gives ``/x``); pinned by
+    tests/test_redirects.py."""
     # '(/.)+/' -> '/' collapses a run of any length in ONE global pass
     # (no lookahead — the DuckDB/RE2 oracle replays the same pattern)
     p = F.regexp_replace(p, r"(/\.)+/", "/")
     p = F.regexp_replace(p, r"(/\.)+$", "/")
-    for _ in range(4):
-        p = F.regexp_replace(p, r"/[^/]+/\.\./", "/")
-        p = F.regexp_replace(p, r"/[^/]+/\.\.$", "/")
+    for _ in range(8):
+        p = F.regexp_replace(p, "/" + _SEGMENT + r"/\.\./", "/")
+        p = F.regexp_replace(p, "/" + _SEGMENT + r"/\.\.$", "/")
     return F.regexp_replace(p, r"^(/\.\.)+(/|$)", "/")
 
 

@@ -19,7 +19,9 @@ Layout (all paths immutable once written; `_latest` is the atomic commit):
 A snapshot is committed by writing its manifest and then atomically
 replacing ``_latest`` — a crash mid-batch leaves ``_latest`` at k-1 and the
 half-written batch dir is simply ignored/overwritten on resume (exact-resume
-semantics; verified by tests/test_frontier.py::test_resume_*).
+semantics; verified by tests/test_frontier.py::test_resume_*). Optional
+tables (``blocked``) are read only when the committed manifest lists them,
+so a crashed attempt's leftover never enters the seen log.
 
 The store assumes a local (POSIX) filesystem that every executor and the
 driver share: commits, the seen-table swap and existence checks are plain
@@ -168,21 +170,31 @@ class SnapStore:
         info["path"] = final
         return info
 
-    def read_seen_urls(self, spark: SparkSession, upto: int) -> DataFrame:
+    def read_seen_urls(
+        self, spark: SparkSession, upto: int, blocked: str | None = None
+    ) -> DataFrame:
         """urls scheduled or robots-blocked in batches 0..upto: the latest
         compacted prefix (if any) plus the per-batch ``scheduled`` and
         ``blocked`` deltas after it. Equivalent to
         ``read_all_scheduled(upto).select("url")`` plus every blocked table,
-        but opens O(interval) dirs instead of O(#batches)."""
+        but opens O(interval) dirs instead of O(#batches).
+
+        A batch's ``blocked`` table is read only when its committed
+        manifest lists it: a crashed attempt's leftover dir is ignored. A
+        caller still running batch ``upto`` (uncommitted) passes the path
+        of the ``blocked`` table it wrote, if any, as ``blocked``."""
         c = self._latest_compact(upto)
         start = 0
         paths = []
         if c is not None:
             paths.append(os.path.join(self.batch_dir(c), "seen_compact"))
             start = c + 1
+        last = self.latest()
         for k in range(start, upto + 1):
             paths.append(os.path.join(self.batch_dir(k), "scheduled"))
-            blocked = os.path.join(self.batch_dir(k), "blocked")
-            if os.path.exists(os.path.join(blocked, "_SUCCESS")):
-                paths.append(blocked)
+            committed = last is not None and k <= last
+            if committed and "blocked" in self.manifest(k)["tables"]:
+                paths.append(os.path.join(self.batch_dir(k), "blocked"))
+        if blocked is not None:
+            paths.append(blocked)
         return spark.read.schema("url string").parquet(*paths)

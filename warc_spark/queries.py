@@ -1669,9 +1669,9 @@ def warc_parse_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     match instead of only the in-query self-check. Record framing matches
     sources/pages.gen_pages_pdf; at sf0.1 this is the same 20k-record
     parse workload the r3/r4 bench legs measured."""
-    from .sources.pages import extract_page_udf
+    from .sources.pages import extract_page_col
 
-    extract_udf = extract_page_udf("payload", "synthetic", ("text",))
+    extracted = extract_page_col("payload", "payload", "synthetic", ("text",))
     d = t(spark, sf_dir, "documents")
     rows = d.select(
         "doc_id", "text", "lang", "source",
@@ -1715,7 +1715,7 @@ def warc_parse_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         parsed.withColumn(
             "text_identical",
-            (extract_udf(F.col("payload")) == F.col("text"))
+            (extracted == F.col("text"))
             & (F.col("target_uri") == F.col("url"))
             & F.col("error").isNull(),
         )
