@@ -108,7 +108,6 @@ tmpw = tempfile.mkdtemp(prefix="warm_")
 warm = FrontierEngine(spark, synth_pages(spark, 2000, seed=7), SnapStore(tmpw),
                       config=FrontierConfig(max_batches=2, default_budget=8))
 warm.run(synth_seeds(spark, 2000, n_seeds=20, seed=7))
-warm.pages.unpersist()
 shutil.rmtree(tmpw, ignore_errors=True)
 
 n_pages = %(n_pages)d
@@ -283,7 +282,7 @@ SCALING_PAIR={lo},{hi} python bench_scaling.py`.
 
 Job: synthetic Common-Crawl-style pages table ({n_pages:,} pages, Zipf host
 skew), {batches} frontier batches, URLs scheduled+fetch-simulated per
-run as tabulated below (politeness budget 65,536/host, salted priority ordering,
+run as tabulated below (politeness budget 65,536/host, fetch order as data,
 exact URL-seen dedup as one anti-join against the seen log, per-batch
 snapshot checkpoints; per-batch metrics ride the write jobs via
 df.observe). Fetch simulation does the real

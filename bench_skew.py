@@ -1,17 +1,15 @@
-"""Host-skew stress evidence (north_star: "salted repartition +
-sort-within-partitions to defeat host skew"; VERDICT r2 #7): the SAME
-frontier job on a uniform-ish (natural Zipf) corpus vs a 30%-hot-host
-corpus (``synth_pages(hot_frac=0.3)`` — one host holds 30% of the pages,
-link targets AND seeds), plus a hot-corpus leg with salting disabled
-(``n_salts=1``) as the contrast.
+"""Host-skew stress evidence (north_star: "defeat host skew"; VERDICT r2
+#7): the SAME frontier job on a uniform-ish (natural Zipf) corpus vs a
+30%-hot-host corpus (``synth_pages(hot_frac=0.3)`` — one host holds 30% of
+the pages, link targets AND seeds).
 
-What flat throughput proves: every per-batch stage that keys by host —
-the politeness window and the salted fetch-order repartition — sees one
-key carrying 30% of the rows. The salted repartition spreads the hot
-host over ``n_salts`` partitions and WindowGroupLimit prunes the
-politeness rank before the sort, so no task serializes on the hot key;
-throughput (urls scheduled+fetched/sec) on the hot corpus should match
-the uniform corpus to within epoch noise.
+What the legs compare: a batch exchanges frontier-sized data by ``host``
+once, for the politeness window. It flags ranks instead of filtering them,
+so Spark plans no ``WindowGroupLimit`` and every row of the hot host goes
+to one window task. The fetch join's url exchange, the batch's only other
+schedule-side shuffle, hashes each url on its own and so spreads the hot
+host over every partition. Throughput (urls scheduled+fetched/sec) on the
+hot corpus vs the uniform corpus is the cost of that one hot window task.
 
 Methodology matches bench_scaling.py: all legs run interleaved in ONE
 JVM (same epoch), several rounds, medians reported. Updates the
@@ -53,7 +51,7 @@ def build_corpus(spark, n_pages, hot_frac, n_part):
     return pages
 
 
-def run_leg(spark, pages, seeds, batches, n_salts, budget=1 << 20):
+def run_leg(spark, pages, seeds, batches, budget=1 << 20):
     from warc_spark.operators.frontier import FrontierConfig, FrontierEngine
     from warc_spark.plans.snapstore import SnapStore
 
@@ -65,11 +63,9 @@ def run_leg(spark, pages, seeds, batches, n_salts, budget=1 << 20):
             # of the hot host each batch (fewer urls scheduled per batch ->
             # throughput not comparable leg-to-leg); uncapped, both corpora
             # schedule the same url volume and the comparison isolates the
-            # skew-sensitive operators (politeness window, salted ordering)
-            # instead of politeness semantics
-            config=FrontierConfig(
-                max_batches=batches, default_budget=budget, n_salts=n_salts,
-            ),
+            # skew-sensitive operators (the politeness window, the fetch
+            # join's exchange) instead of politeness semantics
+            config=FrontierConfig(max_batches=batches, default_budget=budget),
             pages_prepared=True,
         )
         t0 = time.time()
@@ -108,18 +104,17 @@ def main() -> None:
     )
 
     # warm both code paths untimed
-    run_leg(spark, uni_pages, uni_seeds.limit(2000), 1, 8)
-    run_leg(spark, hot_pages, hot_seeds.limit(2000), 1, 8)
+    run_leg(spark, uni_pages, uni_seeds.limit(2000), 1)
+    run_leg(spark, hot_pages, hot_seeds.limit(2000), 1)
 
     legs = [
-        ("uniform_salted", uni_pages, uni_seeds, 8),
-        ("hot_salted", hot_pages, hot_seeds, 8),
-        ("hot_unsalted", hot_pages, hot_seeds, 1),
+        ("uniform", uni_pages, uni_seeds),
+        ("hot", hot_pages, hot_seeds),
     ]
     results: dict[str, list[dict]] = {name: [] for name, *_ in legs}
     for i in range(rounds):
-        for name, pages, seeds, n_salts in legs:
-            r = run_leg(spark, pages, seeds, batches, n_salts)
+        for name, pages, seeds in legs:
+            r = run_leg(spark, pages, seeds, batches)
             r["round"] = i
             results[name].append(r)
             print(json.dumps({"leg": name, **r}), flush=True)
@@ -129,18 +124,14 @@ def main() -> None:
         name: sorted(rs, key=lambda r: r["urls_per_sec"])[len(rs) // 2]
         for name, rs in results.items()
     }
-    ratio_hot = med["hot_salted"]["urls_per_sec"] / med["uniform_salted"]["urls_per_sec"]
-    wall_ratio = med["hot_salted"]["sec"] / med["uniform_salted"]["sec"]
-    ratio_unsalted = (
-        med["hot_unsalted"]["urls_per_sec"] / med["hot_salted"]["urls_per_sec"]
-    )
+    ratio_hot = med["hot"]["urls_per_sec"] / med["uniform"]["urls_per_sec"]
+    wall_ratio = med["hot"]["sec"] / med["uniform"]["sec"]
     report = {
         "n_pages": n_pages, "n_seeds": n_seeds, "batches": batches,
         "hot_frac": hot_frac, "cpus": cpus, "rounds": rounds,
         "median": {k: v["urls_per_sec"] for k, v in med.items()},
         "hot_vs_uniform_throughput_ratio": round(ratio_hot, 3),
         "hot_vs_uniform_wall_ratio": round(wall_ratio, 3),
-        "unsalted_vs_salted_hot_ratio": round(ratio_unsalted, 3),
         "results": results,
     }
     print(json.dumps(report))
@@ -164,16 +155,12 @@ on ONE host**, all legs interleaved in one JVM ({rounds} rounds, medians):
 {rows}
 
 - hot-host batch wall-time = **{wall_ratio:.2f}x** the uniform corpus and
-  throughput {ratio_hot:.2f}x (the north_star claim: the salted repartition
-  spreads the hot host over n_salts partitions and the politeness rank is
-  WindowGroupLimit-pruned before any sort, so no task serializes on the hot
-  key and batch wall-time stays flat under 30% single-host skew).
-- disabling salting on the hot corpus (n_salts=1): {ratio_unsalted:.2f}x the
-  salted throughput — at sandbox scale a ~450k-row hot partition still fits
-  one task's memory and sorts in well under a second, so the visible penalty
-  is bounded by epoch noise; at 100 TB an unsalted 30%-host partition is an
-  out-of-memory straggler, which is why salting is the default (the unit
-  test asserts the partition spread, test_salted_order_splits_hot_host).
+  throughput {ratio_hot:.2f}x. The fetch join's url exchange spreads the hot
+  host over every partition; the politeness window's host exchange is the
+  batch's one host-keyed shuffle, and with no `WindowGroupLimit` (ranks are
+  flagged, not filtered) the hot host's rows all reach one window task.
+  The max/median task time of that window stage is the signal to watch
+  at larger scale.
 
 Reproduce: `python bench_skew.py` (env: SKEW_PAGES, SKEW_SEEDS,
 SKEW_BATCHES, SKEW_ROUNDS, SKEW_HOT_FRAC, SKEW_CPUS).

@@ -385,12 +385,14 @@ class TestDistributedProbe:
 class TestFixedCost:
     """Per-batch fixed cost is counted in Spark jobs: each one is
     scheduling latency that does not shrink with cluster width. A batch
-    runs the scheduled write (six jobs, the fetch join's schedule-side
-    exchange among them) and the frontier write (three, the seen-log
-    broadcast among them). The reads that open their inputs run none, and
-    there is no membership-filter build, merge, probe or count."""
+    runs the scheduled write (five jobs: the politeness exchange, the gate
+    cache, the fetch join's schedule-side exchange, the fetched cache and
+    the write) and the frontier write (three: the seen-log broadcast, the
+    candidates' aggregation exchange and the write). The reads that open
+    their inputs run none; there is no fetch-order exchange, and no
+    membership-filter build, merge, probe or count."""
 
-    MAX_JOBS_PER_BATCH = 9
+    MAX_JOBS_PER_BATCH = 8
 
     def test_jobs_per_batch(self, spark, pages_df, seeds_df, tmp_path):
         sc = spark.sparkContext
@@ -424,6 +426,54 @@ class TestFixedCost:
             for k in (1, 2)
         ]
         assert 0 < max(jobs) <= self.MAX_JOBS_PER_BATCH, jobs
+
+
+class TestPagesCache:
+    """The engine caches its own url-partitioned copy of the corpus only
+    while ``run()`` runs; a corpus the caller prepared stays the caller's."""
+
+    def test_own_cache_released_on_return(self, spark, pages_df, seeds_df, tmp_path):
+        from pyspark import StorageLevel
+
+        eng = FrontierEngine(
+            spark, pages_df, SnapStore(str(tmp_path / "snap")),
+            config=FrontierConfig(max_batches=2, default_budget=4),
+        )
+        assert len(eng.run(seeds_df)) == 2
+        assert eng.pages.storageLevel == StorageLevel.NONE
+
+    def test_own_cache_released_on_raise(self, spark, pages_df, seeds_df, tmp_path):
+        from pyspark import StorageLevel
+
+        class FailingStore(SnapStore):
+            def commit(self, batch, *args, **kwargs):
+                if batch == 1:
+                    raise RuntimeError("commit failed")
+                return super().commit(batch, *args, **kwargs)
+
+        eng = FrontierEngine(
+            spark, pages_df, FailingStore(str(tmp_path / "snap")),
+            config=FrontierConfig(max_batches=3, default_budget=4),
+        )
+        with pytest.raises(RuntimeError, match="commit failed"):
+            eng.run(seeds_df)
+        assert eng.pages.storageLevel == StorageLevel.NONE
+
+    def test_prepared_cache_kept(self, spark, pages_df, seeds_df, tmp_path):
+        from pyspark import StorageLevel
+
+        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        pages = pages_df.select("url", "html").repartition(n_part, "url").persist()
+        try:
+            eng = FrontierEngine(
+                spark, pages, SnapStore(str(tmp_path / "snap")),
+                config=FrontierConfig(max_batches=2, default_budget=4),
+                pages_prepared=True,
+            )
+            assert len(eng.run(seeds_df)) == 2
+            assert pages.storageLevel != StorageLevel.NONE
+        finally:
+            pages.unpersist()
 
 
 class TestSchemaKnownReads:

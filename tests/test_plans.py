@@ -96,11 +96,14 @@ def _fetch_plan(spark, pages, tmp_path, extractor="synthetic", **kw) -> str:
         F.concat(F.lit("http://h0.example.org/page/"), F.col("id").cast("string")).alias("url"),
         (F.col("id") / 50.0).alias("priority"),
     )
+    owns = not kw.get("pages_prepared")
+    if owns:  # the steady state of run(): the corpus layout is cached
+        eng.pages.persist().count()
     try:
-        eng.pages.count()  # the steady state: the corpus layout is built
         return plan_of(eng._fetch(sched))
     finally:
-        eng.pages.unpersist()
+        if owns:
+            eng.pages.unpersist()
 
 
 def _assert_corpus_stationary(p: str) -> None:
@@ -188,10 +191,7 @@ def test_crawl_batch_python_nodes(spark, tmp_path, extractor):
         config=FrontierConfig(max_batches=3, extractor=extractor,
                               seen_compact_every=2),
     )
-    try:
-        assert len(eng.run(spark.read.parquet(str(tmp_path / "seeds")))) == 3
-    finally:
-        eng.pages.unpersist()
+    assert len(eng.run(spark.read.parquet(str(tmp_path / "seeds")))) == 3
     names = [name for _, name, _ in store.plans]
     assert names.count("scheduled") == 3 and "seen_compact" in names, names
     for batch, name, p in store.plans:
@@ -199,6 +199,85 @@ def test_crawl_batch_python_nodes(spark, tmp_path, extractor):
             assert _python_nodes(p) == [], (batch, name, p)
         elif name == "scheduled":
             assert _python_nodes(p) == ["ArrowEvalPython"], (batch, p)
+
+
+def _exchange_nodes(jplan) -> list:
+    """The exchange nodes executing a physical plan now would run. A
+    cached relation is walked only while its buffers are unbuilt: one an
+    earlier job built is read from memory, and its exchanges do not run
+    again."""
+    name = jplan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _exchange_nodes(jplan.executedPlan())
+    if name == "InMemoryTableScanExec":
+        builder = jplan.relation().cacheBuilder()
+        if builder.isCachedColumnBuffersLoaded():
+            return []
+        return _exchange_nodes(builder.cachedPlan())
+    out = [jplan] if name in ("BroadcastExchangeExec", "ShuffleExchangeExec") else []
+    children = jplan.children()
+    for i in range(children.size()):
+        out += _exchange_nodes(children.apply(i))
+    return out
+
+
+def _run_exchanges(jplan) -> list[str]:
+    """The exchanges a physical plan runs, sorted by name
+    (``hashpartitioning(url, host)``, ``BroadcastExchange``). Exchanges
+    with the same result count once: Spark reuses the first."""
+    import re
+
+    nodes = []
+    for e in _exchange_nodes(jplan):
+        if not any(e.sameResult(o) for o in nodes):
+            nodes.append(e)
+    names = []
+    for e in nodes:
+        if e.getClass().getSimpleName() == "BroadcastExchangeExec":
+            names.append("BroadcastExchange")
+        else:
+            part = re.sub(r"#\d+", "", e.outputPartitioning().toString())
+            names.append(re.sub(r", \d+\)$", ")", part))
+    return sorted(names)
+
+
+def test_crawl_batch_exchanges(spark, tmp_path):
+    """Every exchange of a steady batch, named. The scheduled write runs
+    the politeness window's host exchange and the fetch join's
+    schedule-side url exchange, and no fetch-order exchange between them;
+    the frontier write runs the seen-log broadcast and the candidates'
+    (url, host) aggregation (the anti-join is pushed into both union
+    branches, and the second broadcast reuses the first). A cache an
+    earlier job built is read from memory, so its exchanges are not this
+    write's: the corpus cache (built in batch 0) for both writes, and the
+    gate and fetched caches (built by the scheduled write) for the
+    frontier write."""
+    from warc_spark.operators.frontier import FrontierConfig, FrontierEngine
+    from warc_spark.plans.snapstore import SnapStore
+    from warc_spark.sources.pages import synth_pages, synth_seeds
+
+    class CapturingStore(SnapStore):
+        def __init__(self, root):
+            super().__init__(root)
+            self.exchanges = {}
+
+        def write_df(self, df, batch, name):
+            jplan = df._jdf.queryExecution().executedPlan()
+            self.exchanges[(batch, name)] = _run_exchanges(jplan)
+            return super().write_df(df, batch, name)
+
+    store = CapturingStore(str(tmp_path / "snap"))
+    eng = FrontierEngine(
+        spark, synth_pages(spark, 400, seed=3, n_hosts=8), store,
+        config=FrontierConfig(max_batches=3),
+    )
+    assert len(eng.run(synth_seeds(spark, 400, n_seeds=12, seed=3, n_hosts=8))) == 3
+    assert store.exchanges[(1, "scheduled")] == [
+        "hashpartitioning(host)", "hashpartitioning(url)",
+    ], store.exchanges
+    assert store.exchanges[(1, "frontier")] == [
+        "BroadcastExchange", "hashpartitioning(url, host)",
+    ], store.exchanges
 
 
 def _node_blocks(formatted_plan: str, node_name: str) -> list[str]:

@@ -1,11 +1,10 @@
-"""Scheduler building blocks: politeness window, robots gate, salted
-priority ordering (skew split + within-partition order)."""
+"""Scheduler building blocks: politeness window, robots gate, seed-table
+merge, and the fetch exchange's spread of a hot host."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from warc_spark.operators.politeness import apply_politeness, topk_per_key
-from warc_spark.operators.priority import salted_priority_order
 from warc_spark.operators.robots import ROBOTS_SCHEMA, apply_robots, url_host, url_path
 
 
@@ -124,30 +123,32 @@ def test_url_helpers(spark):
     assert rows[1].h == "x.org" and rows[1].p == "/"
 
 
-def test_salted_order_splits_hot_host(spark):
-    # one host dominates; salting must spread it over multiple partitions
+def test_fetch_exchange_spreads_hot_host(spark, tmp_path):
+    """A hot host is not one task's work: the fetch join's url exchange,
+    the batch's only schedule-side shuffle, puts one host's rows in every
+    shuffle partition. Order within a batch is data — (priority desc, url)
+    — and is checked on the written tables, not on partitions."""
+    from warc_spark.operators.frontier import FrontierEngine
+    from warc_spark.plans.snapstore import SnapStore
+    from warc_spark.sources.pages import synth_pages
+
     rows = [(f"http://hot.example.org/{i}", "hot.example.org", float(i % 100)) for i in range(2000)]
     rows += [(f"http://cold{i}.example.org/", f"cold{i}.example.org", 1.0) for i in range(50)]
-    df = spark.createDataFrame(rows, "url string, host string, priority double")
-    ordered = salted_priority_order(df, n_partitions=8, n_salts=8)
-    pid = ordered.withColumn("pid", F.spark_partition_id())
-    hot_parts = (
-        pid.filter(F.col("host") == "hot.example.org").select("pid").distinct().count()
-    )
-    assert hot_parts >= 4  # hot host spread across partitions, not one
-
-    # within each partition rows are (priority desc, url) ordered
-    import pandas as pd
-
-    def check(pdf: pd.DataFrame) -> pd.DataFrame:
-        expected = pdf.sort_values(["priority", "url"], ascending=[False, True])
-        ok = (pdf["url"].to_numpy() == expected["url"].to_numpy()).all()
-        return pd.DataFrame({"ok": [bool(ok)]})
-
-    res = ordered.mapInPandas(
-        lambda it: (check(pdf) for pdf in [pd.concat(list(it))] if len(pdf)), "ok boolean"
-    ).collect()
-    assert all(r.ok for r in res)
+    sched = spark.createDataFrame(rows, "url string, host string, priority double")
+    eng = FrontierEngine(spark, synth_pages(spark, 200, seed=1), SnapStore(str(tmp_path)))
+    eng.pages.persist()
+    try:
+        hot_parts = (
+            eng._fetch(sched)
+            .withColumn("pid", F.spark_partition_id())
+            .filter(F.col("host") == "hot.example.org")
+            .select("pid")
+            .distinct()
+            .count()
+        )
+    finally:
+        eng.pages.unpersist()
+    assert hot_parts == int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def test_topk_deterministic_ties(spark):

@@ -14,7 +14,7 @@ Re-expresses the record semantics of ``internetarchive/warc`` (reference at
 - ``operators`` the crawl engine: URL-seen set (exact anti-join against
                 the seen log; partitioned Bloom blobs + cuckoo as standalone
                 operators), robots gating,
-                per-host politeness budgets, salted priority queue.
+                per-host politeness budgets, priority order as data.
 - ``plans``     SparkSession factory with scale-tuned configs, snapshot store
                 (checkpoint/exact-resume with per-partition lineage + metrics).
 - ``streaming`` Structured Streaming variants of the frontier ingest path.

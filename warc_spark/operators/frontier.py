@@ -1,6 +1,6 @@
 """The frontier loop (SURVEY.md §2.B E9-E11): BFS-ish batched crawl with
-fetch simulation, URL-seen dedup, robots gating, politeness budgets, salted
-priority ordering, and per-batch snapshot checkpointing.
+fetch simulation, URL-seen dedup, robots gating, politeness budgets, and
+per-batch snapshot checkpointing.
 
 Batch semantics (the contract the pure-Python oracle simulator in
 tests/oracle_sim.py replicates exactly):
@@ -26,13 +26,17 @@ tests/oracle_sim.py replicates exactly):
 6. checkpoint   : scheduled/frontier written, manifest committed
 
 Physical design for scale:
-- the pages corpus is hash-partitioned AND sorted by url once at engine
-  construction (the Iceberg bucket/sort-order story), and the fetch join
-  carries a ``merge`` hint on the pages side: the sort-merge join
-  exchanges and sorts only the (budget-bounded) schedule side and the
+- the pages corpus is hash-partitioned AND sorted by url and cached for
+  the length of ``run()`` (the Iceberg bucket/sort-order story), and the
+  fetch join carries a ``merge`` hint on the pages side: the sort-merge
+  join exchanges and sorts only the (budget-bounded) schedule side and the
   corpus never moves, whatever its size. Without the hint a corpus under
   ``autoBroadcastJoinThreshold`` was collected and broadcast again in
   every batch;
+- the fetch join's url exchange is the batch's only schedule-side
+  shuffle. Every url hashes on its own, so a hot host spreads over every
+  fetch task; the one host-keyed exchange left is the politeness
+  window's, which AQE's skew-join splitting does not reach;
 - robots flag + politeness rank are computed as *columns* on persisted
   frames, so allowed/blocked/scheduled/deferred all come from one pass —
   no anti-joins, no plan re-execution;
@@ -66,7 +70,6 @@ from pyspark.sql import functions as F
 from ..plans.snapstore import SnapStore
 from ..sources.pages import extract_page_col
 from .politeness import flag_politeness
-from .priority import salted_priority_order
 from .robots import flag_robots, url_host
 from .seen import BloomSeenSet
 
@@ -80,7 +83,6 @@ class FrontierConfig:
     default_budget: int = 4
     decay: float = 0.8
     max_batches: int = 20
-    n_salts: int = 8
     # link+text extraction kernel: "synthetic" = the corpus-shape kernel
     # (byte-identity oracle on generated corpora); "html" = the real-HTML
     # kernel (kernels/htmlext — tag stripping, entity decode, relative-href
@@ -144,7 +146,10 @@ class FrontierEngine:
         # order). Every batch's fetch join then only shuffles the schedule
         # side; the pages side is a cached, pre-sorted exchange-free scan.
         # ``pages_prepared=True`` says the caller already holds pages in
-        # exactly that cached layout (several engines sharing one corpus).
+        # exactly that cached layout (several engines sharing one corpus)
+        # and keeps owning that cache; the engine's own copy is cached only
+        # while ``run()`` runs.
+        self._owns_pages = not pages_prepared
         if pages_prepared:
             self.pages = pages
         else:
@@ -153,7 +158,6 @@ class FrontierEngine:
                 pages.select("url", "html")
                 .repartition(n_part, "url")
                 .sortWithinPartitions("url")
-                .persist()
             )
         # The engine keeps no membership filter: dedup is the exact
         # anti-join against the seen log. ``bloom`` stays only because the
@@ -169,7 +173,17 @@ class FrontierEngine:
         snapshot). Returns the list of batch manifests. A resume reads only
         the last frontier table and the seen log; other batch dirs and
         manifest config keys (e.g. filter state from older stores) are
-        ignored."""
+        ignored. The engine's own pages cache is released when the run
+        returns or raises."""
+        if self._owns_pages:
+            self.pages.persist()
+        try:
+            return self._run(seeds, resume)
+        finally:
+            if self._owns_pages:
+                self.pages.unpersist()
+
+    def _run(self, seeds: DataFrame | None, resume: bool) -> list[dict]:
         cfg = self.cfg
         last = self.store.latest() if resume else None
         if last is not None:
@@ -278,22 +292,23 @@ class FrontierEngine:
         )
         is_sched = F.col("robots_allowed") & F.col("kept")
 
-        # salted fetch-order partitioning (the executor-side hot path).
         # Crawl order is data: (batch, priority desc, url) is a total order —
-        # no global rank window (a single-partition serialization point).
-        sched_plan = salted_priority_order(
-            gated.filter(is_sched).select("url", "host", "priority"),
-            n_salts=cfg.n_salts,
-        ).withColumn("batch", F.lit(batch))
+        # no global rank window (a single-partition serialization point) and
+        # no fetch-order exchange: the fetch join's url exchange places rows.
+        sched = (
+            gated.filter(is_sched)
+            .select("url", "host", "priority")
+            .withColumn("batch", F.lit(batch))
+        )
 
         # 4. fetch simulation + page processing
-        fetched = self._fetch(sched_plan).persist()
+        fetched = self._fetch(sched).persist()
 
         # metrics ride the write job via df.observe (CollectMetrics in the
         # same plan — no separate agg job per batch; VERDICT r1 #8).
         sched_obs = Observation(f"sched_{batch}")
         sched_out = fetched.select(
-            "url", "host", "priority", "batch", "salt",
+            "url", "host", "priority", "batch",
             "status", F.size("links").alias("n_links"),
             "text_extracted", "digest",
         ).observe(

@@ -1,8 +1,12 @@
 """Per-host politeness budget (SURVEY.md §2.B E6).
 
 ``row_number() over (partition by host order by priority desc, url) <= k``
-— at scale this is one shuffle on the host key; skew on hot hosts is handled
-upstream by the salted priority queue (priority.py) and AQE skew splitting.
+— at scale this is one shuffle on the host key. A consumer that filters the
+rank (``topk_per_key``, or ``flag_politeness(...).filter(kept)``) lets Spark
+plan a ``WindowGroupLimit`` that prunes each map partition to the per-host
+top k before the shuffle. The frontier batch does not: it keeps the flag as
+a column and caches the ranked frame, so every row of a host goes to one
+window task, and AQE's skew-join splitting does not apply to windows.
 Per-host budget overrides come from a small broadcast table.
 """
 

@@ -1,63 +1,17 @@
-"""Host-skew-proof priority queue (SURVEY.md §2.B E8; north_star: "salted
-repartition + sort-within-partitions to defeat host skew").
+"""Frontier priorities from several seed signals (SURVEY.md §2.B E8).
 
-A crawl frontier is Zipf-skewed: one hot host can be 30%+ of the queue. A
-plain ``repartition(host)`` puts that host in one task; a global
-``orderBy`` is one total sort with the same skew. Instead:
-
-- partition key = ``(host, salt)`` where ``salt = pmod(xxhash64(url), S)``
-  — deterministic (same url -> same salt; no rand(), resume-safe), splitting
-  a hot host across up to S tasks;
-- ``sortWithinPartitions(priority desc, url)`` gives each task its
-  fetch order without a global shuffle-sort;
-- a *global* deterministic order, when needed (oracle comparison,
-  checkpointed manifests), is reified as explicit sort keys
-  ``(batch, -priority, url)`` — Spark DataFrames carry no row order, so
-  order must be data (SURVEY.md §1.5).
-
-AQE skew-join splitting stays enabled as the backstop for joins this module
-doesn't control.
+``merge_seed_tables`` folds graph rank, freshness and sitemap discovery
+into one ``(url, priority)`` frontier input. Fetch order is not an operator
+here: it is data, ``(batch, priority desc, url)``, written into every
+``scheduled`` table by ``FrontierEngine`` (Spark rows carry no order,
+SURVEY.md §1.5). Host skew is met by the fetch join's url exchange, which
+spreads a hot host over every partition (operators/frontier.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_priority_order(
-    frontier: DataFrame,
-    n_partitions: int | None = None,
-    n_salts: int = 8,
-    host_col: str = "host",
-    priority_col: str = "priority",
-    url_col: str = "url",
-) -> DataFrame:
-    """Executor-order the frontier for fetching: salted repartition +
-    sort-within-partitions. Returns the frontier with a ``salt`` column,
-    partitioned (host, salt) and locally ordered by (priority desc, url)."""
-    salted = frontier.withColumn(
-        "salt", F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_salts)).cast("int")
-    )
-    if n_partitions:
-        salted = salted.repartition(n_partitions, F.col(host_col), F.col("salt"))
-    else:
-        salted = salted.repartition(F.col(host_col), F.col("salt"))
-    return salted.sortWithinPartitions(F.desc(priority_col), F.col(url_col))
-
-
-def global_order_keys(
-    df: DataFrame, batch: int, priority_col: str = "priority", url_col: str = "url"
-) -> DataFrame:
-    """Reify the total crawl order as data: (batch, rank-within-batch).
-    Rank is computed per batch over (priority desc, url) — deterministic and
-    oracle-comparable. Used for manifests, not the fetch hot path."""
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc(priority_col), F.col(url_col))
-    return df.withColumn("batch", F.lit(batch)).withColumn(
-        "rank_in_batch", F.row_number().over(w)
-    )
 
 
 def merge_seed_tables(
