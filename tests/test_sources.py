@@ -2,7 +2,6 @@
 pages generator (incl. the byte-identity invariant), distributed WARC sink
 round-trip."""
 
-import glob
 import os
 
 import pandas as pd
@@ -165,14 +164,51 @@ def test_write_warc_streams_and_roundtrips_plain(spark, warc_file, tmp_path):
     out = str(tmp_path / "plain")
     manifest = write_warc(df, out, compress=False).collect()
     assert sum(m.records for m in manifest) == 25
-    # no stray .tmp files (stream sink renames atomically)
-    assert not glob.glob(os.path.join(out, "*.tmp"))
+    # no stray .tmp files, hidden in-progress names included (the stream
+    # sink renames atomically)
+    assert not [n for n in os.listdir(out) if n.endswith(".tmp")]
     for m in manifest:
         assert os.path.getsize(m.filename) == m.bytes
     back = read_warc(spark, os.path.join(out, "*.warc"))
     a = {(r.target_uri, bytes(r.payload)) for r in df.collect()}
     b = {(r.target_uri, bytes(r.payload)) for r in back.collect()}
     assert a == b
+
+
+@pytest.mark.parametrize("fmt", ["warc", "arc"])
+def test_killed_writer_part_not_read(spark, warc_file, tmp_path, fmt):
+    """A truncated part left under the writer's in-progress name (a worker
+    SIGKILLed mid-write) is invisible to a read of the output dir."""
+    import datetime as dt
+
+    from warc_spark.sources import read_arc, write_arc
+    from warc_spark.sources.warc_source import in_progress_path
+
+    out = str(tmp_path / fmt)
+    if fmt == "warc":
+        manifest = write_warc(read_warc(spark, warc_file[0]), out).collect()
+        read, ext = read_warc, ".warc.gz"
+    else:
+        date = dt.datetime(2026, 8, 1)
+        rows = [
+            {"url": "http://example.com/%d" % i, "ip_address": "127.0.0.1",
+             "arc_date": date, "content_type": "text/html",
+             "payload": b"payload %d" % i}
+            for i in range(20)
+        ]
+        df = spark.createDataFrame(rows).repartition(2)
+        manifest = write_arc(df, out, date=date).collect()
+        read, ext = read_arc, ".arc"
+    manifest = [m for m in manifest if m.records]
+    with open(manifest[0].filename, "rb") as f:
+        data = f.read()
+    with open(in_progress_path(os.path.join(out, "part-killed" + ext)), "wb") as f:
+        f.write(data[: len(data) // 2])
+    back = read(spark, out).collect()
+    assert len(back) == sum(m.records for m in manifest)
+    assert {os.path.basename(r.filename) for r in back} == {
+        os.path.basename(m.filename) for m in manifest
+    }
 
 
 def test_write_arc_roundtrip_and_golden(spark, tmp_path):

@@ -1,7 +1,7 @@
 """CLI entry point — the ``spark-submit --py-files`` story (north rule):
 
     # package the library for executors, then drive a crawl
-    python -c "from warc_spark.plans.session import _ship_package"  # or zip manually
+    python -m zipfile -c warc_spark_pkg.zip warc_spark
     spark-submit --py-files warc_spark_pkg.zip warc_spark/__main__.py crawl \\
         --pages /data/pages_parquet --seeds 100000 --out /data/crawl \\
         --batches 10 --budget 128

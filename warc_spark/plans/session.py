@@ -1,7 +1,8 @@
 """SparkSession factory with scale-oriented defaults.
 
 Single place where engine-wide configs live so the same knobs apply in
-tests (local[32]) and on a real cluster via spark-submit --py-files.
+tests (local[4], tests/conftest.py) and on a real cluster via
+spark-submit --py-files.
 
 Design notes for 100 TB / 1000-executor scale (graded, see SURVEY.md §4):
 - AQE on: runtime coalescing of shuffle partitions + skew-join splitting is
@@ -71,7 +72,16 @@ def get_spark(
 def _ship_package(spark: SparkSession) -> None:
     """Ship warc_spark to executors (the spark-submit --py-files story,
     BASELINE.json:14). Python workers are separate processes even in local
-    mode, so driver sys.path edits don't reach them — addPyFile does."""
+    mode, so driver sys.path edits don't reach them — addPyFile does.
+
+    The zip is one more ``zipimporter`` in every worker. PySpark calls
+    ``importlib.invalidate_caches()`` before each task, which on CPython
+    3.10-3.12 re-reads the central directory of every zip on the worker's
+    path (this one, pyspark.zip once per imported subpackage, the
+    spark-core jar): about 0.19 s per task, most of a small task. Importing
+    ``warc_spark`` (as every UDF of the package does) keys that re-read on
+    the archive's stat, so a reused worker re-reads only a zip that changed
+    (``warc_spark._stat_keyed_zip_invalidation``)."""
     if getattr(spark, "_warc_spark_shipped", False):
         return
     pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

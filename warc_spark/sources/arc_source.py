@@ -20,6 +20,7 @@ from pyspark.sql.types import (
 
 from ..kernels.arcrec import parse_arc_file
 from ..kernels.gzipmember import GZIP_MAGIC, iter_gzip_members
+from .warc_source import in_progress_path
 
 ARC_RECORD_SCHEMA = StructType(
     [
@@ -284,7 +285,7 @@ def write_arc(
         f = None
         n = 0
         fname = os.path.join(out_dir, "part-%s%s" % (uuid.uuid4().hex[:12], ext))
-        tmp = fname + ".tmp"
+        tmp = in_progress_path(fname)
 
         def _open():
             raw = open(tmp, "wb")
