@@ -67,6 +67,16 @@ def collect_batches(store, spark, n):
     return out
 
 
+def write_stray_filter_state(spark, path):
+    """A retired membership-filter dir as older stores hold it: one
+    (bucket, blob, n_items) row per bucket, with all-zero blobs — a filter
+    that knows none of the crawled urls."""
+    spark.createDataFrame(
+        [(b, bytes(512), 1) for b in range(8)],
+        "bucket int, blob binary, n_items bigint",
+    ).write.parquet(path)
+
+
 def run_engine(spark, pages_df, seeds_df, tmp_path, cfg=None, robots=None, budgets=None,
                resume=False, store=None):
     store = store or SnapStore(str(tmp_path / "snap"))
@@ -191,6 +201,35 @@ class TestResume:
         seen_b = {r.url for r in ref_store.read_all_scheduled(spark, 3).collect()}
         assert seen_a == seen_b
 
+    def test_fresh_run_refuses_committed_store(
+        self, spark, pages_df, seeds_df, tmp_path
+    ):
+        """A fresh run (``resume=False``) into a store that holds a
+        committed crawl fails before it writes anything. Running on would
+        mix the old crawl into the new one's seen log: with the seen log
+        compacted every 4 batches, the new batch 3 dedups against the old
+        batch 3's compact table, then rewrites that table while its own
+        plan still reads it."""
+        import os
+
+        cfg = FrontierConfig(max_batches=5, default_budget=4, seen_compact_every=4)
+        store, manifests = run_engine(spark, pages_df, seeds_df, tmp_path, cfg)
+        assert len(manifests) == 5
+
+        def listing():
+            return sorted(
+                (os.path.relpath(d, store.root), sorted(fs))
+                for d, _, fs in os.walk(store.root)
+            )
+
+        before = listing()
+        other = synth_seeds(spark, N_PAGES, n_seeds=12, seed=SEED + 1, n_hosts=N_HOSTS)
+        eng = FrontierEngine(spark, pages_df, store, config=cfg)
+        with pytest.raises(ValueError, match=r"resume=True.*empty directory"):
+            eng.run(other)
+        assert listing() == before
+        assert store.latest() == 4
+
     def test_manifest_lineage(self, spark, pages_df, seeds_df, tmp_path):
         # the retired filter geometry is still accepted, and never stored
         store, manifests = run_engine(
@@ -217,21 +256,14 @@ class TestResume:
         import json
         import os
 
-        from warc_spark.operators.seen import BloomSeenSet, CuckooSeenSet
-
         store, _ = run_engine(
             spark, pages_df, seeds_df, tmp_path / "legacy",
             FrontierConfig(max_batches=2, default_budget=4),
         )
-        stray = spark.createDataFrame([("http://nowhere.invalid/x",)], "url string")
         for k in (0, 1):
             d = store.batch_dir(k)
-            BloomSeenSet(n_buckets=8, m_bits=1 << 12).build_blobs(stray).write.parquet(
-                os.path.join(d, "bloom")
-            )
-            CuckooSeenSet(n_buckets=8).build_blobs(stray).write.parquet(
-                os.path.join(d, "cuckoo_state")
-            )
+            write_stray_filter_state(spark, os.path.join(d, "bloom"))
+            write_stray_filter_state(spark, os.path.join(d, "cuckoo_state"))
             os.makedirs(os.path.join(d, "bloom_state"))
         with open(store._snap_path(1)) as f:
             m = json.load(f)
@@ -347,8 +379,6 @@ class TestDistributedProbe:
         import json
         import os
 
-        from warc_spark.operators.seen import CuckooSeenSet
-
         ref_store, _ = run_engine(
             spark, pages_df, seeds_df, tmp_path / "ref",
             FrontierConfig(max_batches=4, default_budget=4),
@@ -359,9 +389,7 @@ class TestDistributedProbe:
             FrontierConfig(max_batches=2, default_budget=4),
         )
         state_dir = os.path.join(store.batch_dir(1), "cuckoo_state")
-        CuckooSeenSet(n_buckets=8).build_blobs(
-            spark.createDataFrame([("http://nowhere.invalid/x",)], "url string")
-        ).write.parquet(state_dir)
+        write_stray_filter_state(spark, state_dir)
         for k in (0, 1):
             p = store._snap_path(k)
             with open(p) as f:

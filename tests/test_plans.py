@@ -67,21 +67,6 @@ def test_politeness_window_group_limit(spark):
     assert "WindowGroupLimit" in plan_of(kept)
 
 
-def test_bloom_probe_map_no_exchange(spark):
-    """probe_with_map must not shuffle the candidate side: membership is a
-    broadcast blob map + scalar pandas UDF."""
-    from warc_spark.operators.seen import BloomSeenSet
-
-    bloom = BloomSeenSet(n_buckets=8, m_bits=1 << 12)
-    cands = spark.range(0, 100).select(
-        F.concat(F.lit("http://h"), F.col("id").cast("string"), F.lit(".x/p")).alias("url")
-    )
-    bc = spark.sparkContext.broadcast({0: bytes(1 << 9)})
-    p = plan_of(bloom.probe_with_map(cands, bc))
-    assert "Exchange" not in p
-    assert "ArrowEvalPython" in p or "BatchEvalPython" in p
-
-
 def _fetch_plan(spark, pages, tmp_path, extractor="synthetic", **kw) -> str:
     """The formatted plan of FrontierEngine._fetch over a 50-url schedule,
     at the session's default broadcast threshold."""
@@ -351,36 +336,6 @@ def test_bucketed_corpus_join_has_single_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_pages_bucketed")
 
 
-def test_distributed_probe_copartitioned_join(spark):
-    """BloomSeenSet.probe(broadcast=False): with broadcast disabled, the
-    candidate-blob join hash-partitions BOTH sides on bucket — the blob
-    state is never collected or broadcast (the 10^10-URL membership
-    plan)."""
-    import re as _re
-
-    from warc_spark.operators.seen import BloomSeenSet
-
-    bloom = BloomSeenSet(n_buckets=8, m_bits=1 << 12)
-    urls = spark.range(0, 200).select(
-        F.concat(F.lit("http://h"), (F.col("id") % 10).cast("string"),
-                 F.lit(".x/p"), F.col("id").cast("string")).alias("url")
-    )
-    blobs = bloom.build_blobs(urls)
-    cands = spark.range(200, 400).select(
-        F.concat(F.lit("http://h"), (F.col("id") % 10).cast("string"),
-                 F.lit(".x/p"), F.col("id").cast("string")).alias("url")
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        p = plan_of(bloom.probe(cands, blobs, broadcast=False))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    assert "BroadcastExchange" not in p, p
-    assert "BroadcastHashJoin" not in p, p
-    exchanges = [b for b in _node_blocks(p, "Exchange") if "bucket" in b]
-    assert len(exchanges) >= 2, p  # both sides partition on the bucket key
-
-
 def test_decontaminate_corpus_side_broadcast_only(spark, sf_dir):
     """The decontamination joins must both be broadcast (reference grams
     and contaminated-id set): the corpus side — 100 TB in production —
@@ -410,34 +365,6 @@ def test_pack_sequences_shuffle_is_slim(spark, sf_dir):
     p = plan_of(queries()["doc_pack_sequences"](spark, sf_dir))
     for b in _node_blocks(p, "Exchange"):
         assert "text" not in b, b
-
-
-def test_cuckoo_distributed_probe_copartitioned_join(spark):
-    """CuckooSeenSet.probe(broadcast=False): same placement contract as
-    bloom — the fingerprint state is hash-partitioned on bucket alongside
-    the candidates, never broadcast (the recrawl backend's tables are
-    BIGGER than bloom bitmaps, so this path matters even more)."""
-    from warc_spark.operators.seen import CuckooSeenSet
-
-    ck = CuckooSeenSet(n_buckets=8, table_buckets=1 << 8)
-    urls = spark.range(0, 200).select(
-        F.concat(F.lit("http://h"), (F.col("id") % 10).cast("string"),
-                 F.lit(".x/p"), F.col("id").cast("string")).alias("url")
-    )
-    blobs = ck.build_blobs(urls)
-    cands = spark.range(200, 400).select(
-        F.concat(F.lit("http://h"), (F.col("id") % 10).cast("string"),
-                 F.lit(".x/p"), F.col("id").cast("string")).alias("url")
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        p = plan_of(ck.probe(cands, blobs, broadcast=False))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    assert "BroadcastExchange" not in p, p
-    assert "BroadcastHashJoin" not in p, p
-    exchanges = [b for b in _node_blocks(p, "Exchange") if "bucket" in b]
-    assert len(exchanges) >= 2, p
 
 
 def test_resolve_redirects_edges_cached_no_leak(spark, tmp_path):

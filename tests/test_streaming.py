@@ -98,6 +98,42 @@ def test_streaming_bloom_seen_stateful_resume(spark, tmp_path):
     assert new_expected - urls1 <= urls2
 
 
+def test_streaming_bloom_kernel_pinned(spark):
+    """The Bloom kernel's outputs are the layout of every stored
+    ``streaming_bloom_seen`` checkpoint: the two seeded url hashes, the
+    double-hash bit positions and the host bucket. Pinned to fixed values
+    so a change to any of them (which would make a restarted stream forget
+    the urls its bitmaps hold) fails here."""
+    import pandas as pd
+
+    from warc_spark.streaming.stream import _bit_positions, _hash2, bucket_of
+
+    urls = [
+        "http://host0.example.org/page/0",
+        "https://Shop.Example.COM:8443/cart?id=7#top",
+        "http://a.b.c.example.net/x/y/z.html",
+        "ftp://files.example.org/pub/README",
+    ]
+    h1, h2 = _hash2(pd.Series(urls))
+    assert h1.tolist() == [
+        10436549747158546923, 18087295335819850597,
+        10356858257203207157, 596556129135566502,
+    ]
+    assert h2.tolist() == [
+        10742505201343883073, 9935252282777236027,
+        12508129664789972265, 11896123625069802135,
+    ]
+    assert _bit_positions(h1, h2, 7, 1 << 16).tolist() == [
+        [63979, 24876, 51309, 12206, 38639, 65072, 25969],
+        [13157, 42400, 6107, 35350, 64593, 28300, 57543],
+        [7157, 8478, 9799, 11120, 12441, 13762, 15083],
+        [7846, 4413, 980, 63083, 59650, 56217, 52784],
+    ]
+    df = spark.createDataFrame([(i, u) for i, u in enumerate(urls)], "i int, url string")
+    rows = df.select("i", bucket_of(F.col("url"), 16).alias("b")).orderBy("i").collect()
+    assert [r.b for r in rows] == [0, 4, 4, 11]
+
+
 def test_stream_wet_export_matches_batch(spark, landing_dir, tmp_path):
     """stream==batch parity for the WET export: draining the landing dir
     through stream_archive_export (foreachBatch -> the streamed WARC

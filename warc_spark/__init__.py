@@ -12,12 +12,12 @@ Re-expresses the record semantics of ``internetarchive/warc`` (reference at
                 Jaccard), embedding similarity search — training-data pipeline
                 operators over the documents/embeddings tables.
 - ``operators`` the crawl engine: URL-seen set (exact anti-join against
-                the seen log; partitioned Bloom blobs + cuckoo as standalone
-                operators), robots gating,
-                per-host politeness budgets, priority order as data.
+                the seen log), robots gating, per-host politeness budgets,
+                priority order as data.
 - ``plans``     SparkSession factory with scale-tuned configs, snapshot store
                 (checkpoint/exact-resume with per-partition lineage + metrics).
-- ``streaming`` Structured Streaming variants of the frontier ingest path.
+- ``streaming`` Structured Streaming variants of the frontier ingest path,
+                including an unbounded-horizon Bloom URL-seen operator.
 
 No code is copied from the reference (GPLv2); behavior is reimplemented from
 observed semantics with file:line citations in docstrings.

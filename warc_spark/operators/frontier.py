@@ -62,6 +62,7 @@ from __future__ import annotations
 
 import time
 from dataclasses import InitVar, dataclass
+from types import SimpleNamespace
 from typing import Any
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -71,7 +72,6 @@ from ..plans.snapstore import SnapStore
 from ..sources.pages import extract_page_col
 from .politeness import flag_politeness
 from .robots import flag_robots, url_host
-from .seen import BloomSeenSet
 
 # the frontier table as the engine writes it; read back with this schema,
 # opening it launches no schema-inference job
@@ -159,11 +159,12 @@ class FrontierEngine:
                 .repartition(n_part, "url")
                 .sortWithinPartitions("url")
             )
-        # The engine keeps no membership filter: dedup is the exact
-        # anti-join against the seen log. ``bloom`` stays only because the
-        # benchmark's crawl workload wraps ``bloom.merge_blob_map``; drop it
-        # once a benchmark change stops referencing it.
-        self.bloom = BloomSeenSet()
+        # The engine keeps no membership filter and never calls this: dedup
+        # is the exact anti-join against the seen log. Like the retired
+        # ``FrontierConfig`` InitVars, the placeholder stays only because
+        # the benchmark's crawl workload reads and rebinds
+        # ``bloom.merge_blob_map``; drop both once a benchmark change stops.
+        self.bloom = SimpleNamespace(merge_blob_map=None)
 
     def _with_host(self, df: DataFrame) -> DataFrame:
         return df.withColumn("host", url_host(F.col("url")))
@@ -173,8 +174,18 @@ class FrontierEngine:
         snapshot). Returns the list of batch manifests. A resume reads only
         the last frontier table and the seen log; other batch dirs and
         manifest config keys (e.g. filter state from older stores) are
-        ignored. The engine's own pages cache is released when the run
+        ignored. A fresh run (``resume=False``) refuses a store that already
+        holds a committed crawl: its batch dirs would enter the new crawl's
+        seen log. The engine's own pages cache is released when the run
         returns or raises."""
+        last = self.store.latest()
+        if not resume and last is not None:
+            raise ValueError(
+                f"{self.store.root} already holds a committed crawl "
+                f"(snapshot {last}): continue it with "
+                "resume=True (--resume), or start a fresh crawl in an empty "
+                "directory"
+            )
         if self._owns_pages:
             self.pages.persist()
         try:

@@ -150,7 +150,7 @@ class SnapStore:
     def expire_seen(self, spark: SparkSession, urls: DataFrame) -> dict[str, Any]:
         """Remove urls from the seen log (recrawl semantics): rewrite the
         compacted seen table at the latest batch WITHOUT them. Subsequent
-        reads exclude the urls, so the emit-dedup's exact rescue treats
+        reads exclude the urls, so the frontier's emit anti-join passes
         them as new; a later recrawl re-appends them via its own batch's
         scheduled delta — third and later sightings dedup normally. On a
         real deployment this is an Iceberg/Delta DELETE on the seen table."""

@@ -11,13 +11,15 @@ Scale notes:
 - file-source streaming scales by files-per-trigger; each WARC drop is an
   independent task (per-record gzip members keep it splittable, SURVEY §1.4);
 - ``withWatermark + dropDuplicates(url)`` is the streaming URL-seen set —
-  state is bounded by the watermark horizon; the batch engine's partitioned
-  bloom blobs are the unbounded-horizon complement;
+  state is bounded by the watermark horizon; ``streaming_bloom_seen`` (one
+  Bloom bitmap per host-hash bucket) is the unbounded-horizon complement;
 - windowed counts use the event-time ``warc_ts``, tolerating late fetches.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -67,6 +69,37 @@ def streaming_url_dedup(pages_stream: DataFrame, watermark: str = "2 hours") -> 
     return pages_stream.withWatermark("warc_ts", watermark).dropDuplicates(["url"])
 
 
+# The streaming Bloom kernel. The hash keys, the double-hash positions and
+# the bucket expression are the layout of every ``streaming_bloom_seen``
+# checkpoint: changing any of them makes a restarted stream forget the urls
+# its stored bitmaps hold (pinned by tests/test_streaming.py).
+_HASH_KEY_1 = "warcsparkbloomh1"
+_HASH_KEY_2 = "warcsparkbloomh2"
+
+
+def _hash2(urls: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    arr = urls.astype(object).to_numpy()
+    h1 = pd.util.hash_array(arr, hash_key=_HASH_KEY_1)
+    h2 = pd.util.hash_array(arr, hash_key=_HASH_KEY_2)
+    return h1, h2
+
+
+def _bit_positions(h1: np.ndarray, h2: np.ndarray, k: int, m_bits: int) -> np.ndarray:
+    """(n, k) bit positions via double hashing h1 + i*h2 mod m."""
+    i = np.arange(k, dtype=np.uint64)
+    with np.errstate(over="ignore"):
+        return ((h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(m_bits)).astype(
+            np.int64
+        )
+
+
+def bucket_of(url_col, n_buckets: int):
+    """Deterministic state bucket of a url (JVM-side xxhash64 of its
+    lower-cased host): a host's urls share one Bloom bitmap."""
+    host = F.lower(F.regexp_extract(url_col, r"//([^/:?#]+)", 1))
+    return F.pmod(F.xxhash64(host), F.lit(n_buckets)).cast("int")
+
+
 def streaming_bloom_seen(
     pages_stream: DataFrame,
     n_buckets: int = 16,
@@ -75,20 +108,17 @@ def streaming_bloom_seen(
     url_col: str = "url",
 ) -> DataFrame:
     """Custom stateful streaming operator (``applyInPandasWithState``):
-    an UNBOUNDED-horizon streaming URL-seen set — the streaming face of the
-    batch engine's partitioned Bloom blobs (operators/seen.py, SURVEY §2.B
-    E4). ``dropDuplicates`` + watermark bounds state by evicting old keys;
+    an UNBOUNDED-horizon streaming URL-seen set (SURVEY §2.B E4; the batch
+    frontier dedups with an exact anti-join against its seen log instead).
+    ``dropDuplicates`` + watermark bounds state by evicting old keys;
     here the state is one Bloom bitmap per host-hash bucket (fixed bytes,
     never grows), so urls deduplicate across the entire stream lifetime —
     and across restarts via the streaming checkpoint. Emits first-seen rows
     only.
 
-    Same state layout, same double-hash kernel as the batch path; at scale
-    the operator shuffles by bucket once (the groupBy) and each bucket's
-    state is m_bits/8 bytes regardless of url count.
+    At scale the operator shuffles by bucket once (the groupBy) and each
+    bucket's state is m_bits/8 bytes regardless of url count.
     """
-    import numpy as np
-    import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import (
         BinaryType,
@@ -96,8 +126,6 @@ def streaming_bloom_seen(
         StructField,
         StructType,
     )
-
-    from ..operators.seen import _bit_positions, _hash2, bucket_of
 
     out_schema = StructType([StructField(url_col, StringType())])
     state_schema = StructType([StructField("blob", BinaryType())])
