@@ -107,6 +107,52 @@ def test_export_cdx(spark, cli_warc, tmp_path, capsys):
     assert len(keys) == 8 and all(k.startswith("example,cli)") for k in keys)
 
 
+def test_ingest_split_bytes_same_pages(spark, cli_warc, tmp_path, capsys):
+    """``ingest`` writes the same pages whether it scans whole files or
+    member-aligned ranges (``--split-bytes``, here several per file)."""
+    def pages(*extra):
+        out = str(tmp_path / ("pages" + "".join(extra)))
+        res = _run(capsys, ["ingest", "--warc", cli_warc, "--out", out, *extra])
+        assert res["pages"] == 8
+        return {(r.url, bytes(r.html), r.text)
+                for r in spark.read.parquet(out).collect()}
+
+    split = str(os.path.getsize(cli_warc) // 3)
+    assert pages() == pages("--split-bytes", split)
+
+
+def test_index_subcommand(spark, cli_warc, tmp_path, capsys):
+    """``index --format warc``: one row per gzip member; ``--format arc``:
+    one row per record."""
+    import datetime as dt
+
+    from warc_spark.sources import write_arc
+
+    out = str(tmp_path / "widx")
+    res = _run(capsys, ["index", "--path", cli_warc, "--out", out])
+    idx = sorted((r.offset, r.length, r.member_index)
+                 for r in spark.read.parquet(out).collect())
+    assert res["entries"] == 8 and [m for _, _, m in idx] == list(range(8))
+    assert idx[0][0] == 0 and sum(n for _, n, _ in idx) == os.path.getsize(cli_warc)
+
+    date = dt.datetime(2026, 8, 2)
+    arcs = str(tmp_path / "arcs")
+    write_arc(
+        spark.createDataFrame(
+            [{"url": "http://cli.example/%d" % i, "ip_address": "127.0.0.1",
+              "arc_date": date, "content_type": "text/html",
+              "payload": b"payload %d" % i} for i in range(5)]
+        ).coalesce(1),
+        arcs, date=date,
+    ).collect()
+    out = str(tmp_path / "aidx")
+    res = _run(capsys, ["index", "--path", arcs, "--out", out,
+                        "--format", "arc"])
+    urls = sorted(r.url for r in spark.read.parquet(out).collect())
+    assert res["entries"] == 5
+    assert urls == sorted("http://cli.example/%d" % i for i in range(5))
+
+
 def test_resolve_subcommand(spark, tmp_path, capsys):
     """WARC with a 301 chain, a dangling redirect, and a 200 terminal ->
     the resolve CLI's parquet mapping. The chain url also has an EARLIER

@@ -230,6 +230,21 @@ class TestResume:
         assert listing() == before
         assert store.latest() == 4
 
+    def test_resume_without_crawl_or_seeds_refused(self, spark, pages_df, tmp_path):
+        """``run(None, resume=True)`` on a store with no committed crawl has
+        nothing to continue and no seeds to start from: it raises before
+        it caches the pages or writes anything (it used to persist the
+        pages and then fail on ``None.select``)."""
+        import os
+
+        store = SnapStore(str(tmp_path / "empty"))
+        eng = FrontierEngine(spark, pages_df, store, config=FrontierConfig())
+        with pytest.raises(ValueError, match="nothing to resume"):
+            eng.run(None, resume=True)
+        assert not eng.pages.is_cached
+        assert store.latest() is None
+        assert not [fs for _, _, fs in os.walk(store.root) if fs]
+
     def test_manifest_lineage(self, spark, pages_df, seeds_df, tmp_path):
         # the retired filter geometry is still accepted, and never stored
         store, manifests = run_engine(

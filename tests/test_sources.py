@@ -120,14 +120,26 @@ def test_synth_seeds(spark):
     assert (pdf["priority"] <= 1.0).all()
 
 
+def _full(rows, record_index=None):
+    """Full record tuples in file order; ``record_index`` overrides the
+    rows' own (random-access reads carry -1)."""
+    return [
+        (r.filename, r.record_index if record_index is None else record_index,
+         r.offset, r.size, r.target_uri, bytes(r.payload), r.payload_digest,
+         r.record_id)
+        for r in sorted(rows, key=lambda r: (r.offset, r.record_id))
+    ]
+
+
 def test_presplit_scan_matches_read_warc(spark, warc_file, tmp_path):
     """Member-offset pre-split scan: >1 input split over one multi-member
     file must yield byte-identical records to the whole-file scan
-    (reference member framing, warc/gzip2.py:88-109)."""
+    (reference member framing, warc/gzip2.py:88-109), and so must the
+    random-access read of every member in the index."""
     from warc_spark.sources import (
         index_warc_members,
         plan_warc_splits,
-        read_warc_presplit,
+        read_warc_records,
     )
 
     gz, _ = warc_file
@@ -142,20 +154,14 @@ def test_presplit_scan_matches_read_warc(spark, warc_file, tmp_path):
     split_bytes = max(1, file_bytes // 5)  # force >1 split
     splits = plan_warc_splits(idx, split_bytes).collect()
     assert len(splits) > 1
-    got = read_warc_presplit(spark, gz, split_bytes=split_bytes).collect()
-    ref = read_warc(spark, gz).collect()
-    key = lambda r: r.offset
-    got_t = [
-        (r.filename, r.record_index, r.offset, r.size, r.target_uri,
-         bytes(r.payload), r.payload_digest, r.record_id)
-        for r in sorted(got, key=key)
+    ref = _full(read_warc(spark, gz).collect())
+    assert _full(read_warc(spark, gz, split_bytes=split_bytes).collect()) == ref
+    assert _full(
+        read_warc(spark, gz, split_bytes=split_bytes, index=idx).collect()
+    ) == ref
+    assert _full(read_warc_records(spark, idx).collect(), -1) == [
+        (t[0], -1) + t[2:] for t in ref
     ]
-    ref_t = [
-        (r.filename, r.record_index, r.offset, r.size, r.target_uri,
-         bytes(r.payload), r.payload_digest, r.record_id)
-        for r in sorted(ref, key=key)
-    ]
-    assert got_t == ref_t
 
 
 def test_write_warc_streams_and_roundtrips_plain(spark, warc_file, tmp_path):
@@ -283,16 +289,18 @@ def test_dispatch_presplit(spark, warc_file):
 
 
 def test_presplit_plain_file_fallback(spark, warc_file):
-    """Plain (uncompressed) WARCs go through the presplit path as one
-    ranged member per file — same records as read_warc."""
-    from warc_spark.sources import read_warc_presplit
+    """Plain (uncompressed) WARCs go through the split and random-access
+    paths as one ranged member per file — and every record keeps its own
+    byte span, as in read_warc (both used to report offset 0 and the file
+    size for every record)."""
+    from warc_spark.sources import index_warc_members, read_warc_records
 
     _, plain = warc_file
-    got = {(r.target_uri, bytes(r.payload))
-           for r in read_warc_presplit(spark, plain, split_bytes=100).collect()}
-    ref = {(r.target_uri, bytes(r.payload))
-           for r in read_warc(spark, plain).collect()}
-    assert got == ref and len(got) == 25
+    ref = _full(read_warc(spark, plain).collect())
+    assert len(ref) == 25 and len({t[2] for t in ref}) == 25
+    assert _full(read_warc(spark, plain, split_bytes=100).collect()) == ref
+    got = read_warc_records(spark, index_warc_members(spark, plain)).collect()
+    assert _full(got, -1) == [(t[0], -1) + t[2:] for t in ref]
 
 
 def test_random_access_by_offset_index(spark, warc_file):
@@ -323,32 +331,85 @@ def test_random_access_by_offset_index(spark, warc_file):
 
 
 def test_streamed_member_index_matches_whole_file(spark, warc_file):
-    """The bounded-memory streamed indexer must produce the identical
-    member index as the whole-file one — forced through many tiny chunk
-    boundaries (chunk_bytes=64) so member frames straddle reads — and the
-    presplit scan over it must equal read_warc."""
-    from warc_spark.sources import (
-        index_warc_members,
-        index_warc_members_streamed,
-        read_warc_presplit,
-    )
+    """The bounded-memory member indexer must give exactly the member
+    geometry ``iter_gzip_members`` finds over the whole file's bytes —
+    forced through many tiny chunk boundaries (chunk_bytes=64) so member
+    frames straddle reads — and the split scan over it must equal
+    read_warc. Plain files index as one whole-file member."""
+    from warc_spark.kernels.gzipmember import iter_gzip_members
+    from warc_spark.sources import index_warc_members
 
     gz, plain = warc_file
-    whole = index_warc_members(spark, gz)
-    paths = [r.path for r in whole.select("path").distinct().collect()]
-    streamed = index_warc_members_streamed(spark, paths, chunk_bytes=64)
-    key = lambda r: (r.path, r.offset, r.length, r.member_index)  # noqa: E731
-    assert sorted(map(key, streamed.collect())) == sorted(map(key, whole.collect()))
+    key = lambda r: (r.offset, r.length, r.member_index)  # noqa: E731
+    with open(gz, "rb") as f:
+        want = [(off, size, i) for i, (off, size, _) in
+                enumerate(iter_gzip_members(f.read()))]
+    streamed = index_warc_members(spark, [gz], chunk_bytes=64)
+    assert sorted(map(key, streamed.collect())) == want and len(want) == 25
     got = {(r.target_uri, bytes(r.payload))
-           for r in read_warc_presplit(spark, gz, index=streamed).collect()}
+           for r in read_warc(spark, gz, split_bytes=1, index=streamed).collect()}
     ref = {(r.target_uri, bytes(r.payload))
            for r in read_warc(spark, gz).collect()}
     assert got == ref and len(got) == 25
-    # plain files: one whole-file member, same as the whole-file indexer
-    pwhole = index_warc_members(spark, plain)
-    ppaths = [r.path for r in pwhole.select("path").distinct().collect()]
-    pstreamed = index_warc_members_streamed(spark, ppaths, chunk_bytes=64)
-    assert sorted(map(key, pstreamed.collect())) == sorted(map(key, pwhole.collect()))
+    pstreamed = index_warc_members(spark, plain, chunk_bytes=64).collect()
+    assert list(map(key, pstreamed)) == [(0, os.path.getsize(plain), 0)]
+
+
+def test_readers_path_with_space(spark, warc_file, tmp_path):
+    """Spark lists a file under a dir with a space as an unencoded Hadoop
+    URI (``file:/a b/x``); every ranged read still opens it."""
+    import shutil
+
+    from warc_spark.sources import index_warc_members, read_warc_records
+
+    gz, _ = warc_file
+    d = tmp_path / "with space"
+    d.mkdir()
+    shutil.copy(gz, d / "sample.warc.gz")
+    ref = _full(read_warc(spark, gz).collect())
+    assert _full(read_warc(spark, str(d)).collect()) == ref
+    assert _full(read_warc(spark, str(d), split_bytes=1000).collect()) == ref
+    idx = index_warc_members(spark, str(d))
+    assert read_warc_records(spark, idx).count() == 25
+
+
+def test_readers_list_files_without_content(spark, warc_file, tmp_path):
+    """Every archive reader lists its files through Spark's binaryFile
+    source without the ``content`` column — the bytes are ranged-read
+    through pyarrow.fs, never pulled into the JVM."""
+    import datetime as dt
+    import re
+
+    from warc_spark.sources import (
+        index_arc_records,
+        index_warc_members,
+        read_arc,
+        write_arc,
+    )
+
+    gz, _ = warc_file
+    date = dt.datetime(2026, 8, 1)
+    arcs = str(tmp_path / "arcs")
+    write_arc(
+        spark.createDataFrame([{"url": "http://example.com/", "ip_address": "127.0.0.1",
+                                "arc_date": date, "content_type": "text/html",
+                                "payload": b"p"}]),
+        arcs, date=date,
+    ).collect()
+    readers = {
+        "read_warc": read_warc(spark, gz),
+        "read_warc split": read_warc(spark, gz, split_bytes=1 << 20),
+        "index_warc_members": index_warc_members(spark, gz),
+        "read_arc": read_arc(spark, arcs),
+        "index_arc_records": index_arc_records(spark, arcs),
+    }
+    for name, df in readers.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        schemas = re.findall(r"FileScan binaryFile.*?ReadSchema: (struct<[^>]*>)", plan)
+        assert schemas, (name, plan)
+        for schema in schemas:
+            assert "content" not in schema, (name, schema)
+        assert df.count() > 0, name
 
 
 def test_arc_random_access_by_offset_index(spark, tmp_path):

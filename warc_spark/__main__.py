@@ -83,7 +83,7 @@ def _build_parser() -> argparse.ArgumentParser:
     g.add_argument(
         "--split-bytes", type=int, default=None,
         help="intra-file parallel scan with ranged reads of ~N-byte "
-             "chunks (read_warc_presplit) instead of one task per file",
+             "chunks (read_warc split_bytes) instead of one task per file",
     )
     g.add_argument("--master", default=None)
 
@@ -252,15 +252,11 @@ def main(argv: list[str] | None = None) -> int:
     args = _build_parser().parse_args(argv)
     if args.cmd == "ingest":
         from .plans import get_spark
-        from .sources import read_warc, read_warc_presplit
+        from .sources import read_warc
         from .sources.pages import pages_from_records
 
         spark = get_spark(app="warc_spark_ingest", master=args.master)
-        records = (
-            read_warc_presplit(spark, args.warc, split_bytes=args.split_bytes)
-            if args.split_bytes
-            else read_warc(spark, args.warc)
-        )
+        records = read_warc(spark, args.warc, split_bytes=args.split_bytes)
         pages = pages_from_records(records, extractor=args.extractor)
         pages.write.mode("overwrite").parquet(args.out)
         n = spark.read.parquet(args.out).count()

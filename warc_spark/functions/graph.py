@@ -164,7 +164,6 @@ def pagerank(
     iterations: int = 3,
     damping: float = 0.85,
     persist_every: int = 6,
-    cache_static: bool = True,
 ) -> DataFrame:
     """Weighted PageRank over a ``(src, dst, weight)`` edge table.
 
@@ -181,16 +180,15 @@ def pagerank(
     distinct-neighbor counts. Deterministic at any parallelism up to
     float-sum ordering (callers comparing across engines should round).
 
-    ``cache_static`` (default on) lazily persists the iteration-invariant
-    frames (normalized edge shares, node set, source-node set) — without
-    it Spark recomputes the edge aggregation subtree once per USE (~4x
-    per iteration; exchange reuse recovers only part of it), which at
-    100 TB means re-scanning the corpus K times. Lazy ``persist`` keeps
+    The iteration-invariant frames (normalized edge shares, node set,
+    source-node set) are lazily persisted — without that Spark recomputes
+    the edge aggregation subtree once per USE (~4x per iteration; exchange
+    reuse recovers only part of it), which at 100 TB means re-scanning the
+    corpus K times. Lazy ``persist`` keeps
     the whole recurrence action-free and lineage-recoverable; caches
     belong to the session until it clears them (the GraphX/ALS trade).
     """
-    if cache_static:
-        edges = edges.persist()
+    edges = edges.persist()
     nodes = (
         edges.select(F.col("src").alias("host"))
         .unionByName(edges.select(F.col("dst").alias("host")))
@@ -204,11 +202,9 @@ def pagerank(
     share = edges.join(out_w.select("src", "out_w"), "src").select(
         "src", "dst", (F.col("weight") / F.col("out_w")).alias("share")
     )
-    src_nodes = out_w.select(F.col("src").alias("host"))
-    if cache_static:
-        nodes = nodes.persist()
-        share = share.persist()
-        src_nodes = src_nodes.persist()
+    nodes = nodes.persist()
+    share = share.persist()
+    src_nodes = out_w.select(F.col("src").alias("host")).persist()
 
     ranks = nodes.crossJoin(F.broadcast(n_row)).select(
         "host", (F.lit(1.0) / F.col("n_nodes")).alias("pr")
@@ -258,7 +254,6 @@ def pagerank(
 def hits(
     edges: DataFrame,
     iterations: int = 2,
-    cache_static: bool = True,
     persist_every: int = 4,
 ) -> DataFrame:
     """Weighted HITS (hubs & authorities, Kleinberg) over a
@@ -286,15 +281,13 @@ def hits(
     with a lazy per-interval ``localCheckpoint``."""
     if iterations < 1:
         raise ValueError("hits() needs at least one iteration")
-    if cache_static:
-        edges = edges.persist()
+    edges = edges.persist()
     nodes = (
         edges.select(F.col("src").alias("host"))
         .unionByName(edges.select(F.col("dst").alias("host")))
         .distinct()
+        .persist()
     )
-    if cache_static:
-        nodes = nodes.persist()
 
     hub = nodes.select("host", F.lit(1.0).alias("hub"))
     auth = None
@@ -338,7 +331,6 @@ def hits(
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 20,
-    cache_static: bool = True,
 ) -> DataFrame:
     """Undirected connected components over a ``(src, dst, *)`` edge
     table by iterated min-label propagation: every node starts labeled
@@ -367,16 +359,14 @@ def connected_components(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         .distinct()
+        .persist()
     )
-    if cache_static:
-        sym = sym.persist()
     labels = (
         sym.select(F.col("src").alias("host"))
         .distinct()
         .select("host", F.col("host").alias("component"))
+        .persist()
     )
-    if cache_static:
-        labels = labels.persist()
     for _ in range(max_iterations):
         neighbor_min = (
             sym.join(labels, sym.dst == labels.host)
@@ -404,10 +394,9 @@ def connected_components(
         prev.unpersist()
         if changed == 0:
             break
-    if cache_static:
-        # the returned labels frame is itself persisted+materialized, so
-        # the symmetric edge cache is only a recompute shortcut now
-        sym.unpersist()
+    # the returned labels frame is itself persisted+materialized, so the
+    # symmetric edge cache is only a recompute shortcut now
+    sym.unpersist()
     return labels
 
 

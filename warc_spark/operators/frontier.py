@@ -176,7 +176,8 @@ class FrontierEngine:
         manifest config keys (e.g. filter state from older stores) are
         ignored. A fresh run (``resume=False``) refuses a store that already
         holds a committed crawl: its batch dirs would enter the new crawl's
-        seen log. The engine's own pages cache is released when the run
+        seen log. A resume without seeds needs a committed crawl to
+        continue. The engine's own pages cache is released when the run
         returns or raises."""
         last = self.store.latest()
         if not resume and last is not None:
@@ -185,6 +186,11 @@ class FrontierEngine:
                 f"(snapshot {last}): continue it with "
                 "resume=True (--resume), or start a fresh crawl in an empty "
                 "directory"
+            )
+        if resume and last is None and seeds is None:
+            raise ValueError(
+                f"nothing to resume: {self.store.root} holds no committed "
+                "crawl, and no seeds were given to start one"
             )
         if self._owns_pages:
             self.pages.persist()

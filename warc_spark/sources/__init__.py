@@ -17,11 +17,9 @@ from .warc_source import (  # noqa: F401
     WARC_RECORD_SCHEMA,
     split_http_payload,
     index_warc_members,
-    index_warc_members_streamed,
     parse_warc_column,
     plan_warc_splits,
     read_warc,
-    read_warc_presplit,
     read_warc_records,
     write_warc,
 )

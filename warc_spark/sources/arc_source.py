@@ -20,7 +20,7 @@ from pyspark.sql.types import (
 
 from ..kernels.arcrec import parse_arc_file
 from ..kernels.gzipmember import GZIP_MAGIC, iter_gzip_members
-from .warc_source import in_progress_path
+from .warc_source import _list_files, _open_ranged, in_progress_path
 
 ARC_RECORD_SCHEMA = StructType(
     [
@@ -76,17 +76,23 @@ def _records_of_arc(name: str, data: bytes) -> list[dict]:
     return [_arc_row(rec, name, idx, version) for idx, rec in enumerate(it)]
 
 
+def _read_file(p: str) -> bytes:
+    with _open_ranged(p) as fh:
+        return fh.read()
+
+
 def read_arc(spark: SparkSession, path: str) -> DataFrame:
-    files = spark.read.format("binaryFile").load(path)
+    """Scan ARC file(s) (plain, member-per-record gzip or whole-file gzip)
+    into a records table, one task reading whole files."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for name, data in zip(pdf["path"], pdf["content"]):
-                rows.extend(_records_of_arc(os.path.basename(name), bytes(data)))
+            for p in pdf["path"]:
+                rows.extend(_records_of_arc(os.path.basename(p), _read_file(p)))
             yield pd.DataFrame(rows, columns=[f.name for f in ARC_RECORD_SCHEMA.fields])
 
-    return files.select("path", "content").mapInPandas(gen, ARC_RECORD_SCHEMA)
+    return _list_files(spark, path).select("path").mapInPandas(gen, ARC_RECORD_SCHEMA)
 
 
 ARC_INDEX_SCHEMA = StructType(
@@ -116,14 +122,13 @@ def index_arc_records(spark: SparkSession, path: str) -> DataFrame:
     ranged read can parse a record without re-reading the file header."""
     from ..kernels.arcrec import parse_arc_file_indexed, parse_arc_records_indexed
 
-    files = spark.read.format("binaryFile").load(path)
     cols = [f.name for f in ARC_INDEX_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for p, data in zip(pdf["path"], pdf["content"]):
-                data = bytes(data)
+            for p in pdf["path"]:
+                data = _read_file(p)
                 if data[:2] == GZIP_MAGIC:
                     members = list(iter_gzip_members(data))
                     # version from the file header (first member's start)
@@ -163,7 +168,7 @@ def index_arc_records(spark: SparkSession, path: str) -> DataFrame:
                         )
             yield pd.DataFrame(rows, columns=cols)
 
-    return files.select("path", "content").mapInPandas(gen, ARC_INDEX_SCHEMA)
+    return _list_files(spark, path).select("path").mapInPandas(gen, ARC_INDEX_SCHEMA)
 
 
 def read_arc_records(spark: SparkSession, index: DataFrame) -> DataFrame:
@@ -176,7 +181,6 @@ def read_arc_records(spark: SparkSession, index: DataFrame) -> DataFrame:
     from pyspark.sql import functions as F
 
     from ..kernels.arcrec import parse_arc_records_indexed
-    from .warc_source import _open_ranged
 
     rec_names = {f.name for f in ARC_RECORD_SCHEMA.fields}
     keep = [

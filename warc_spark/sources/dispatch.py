@@ -16,24 +16,18 @@ def detect_format(filename: str) -> str:
 
 
 def open_archive(
-    spark: SparkSession,
-    path: str,
-    format: str | None = None,
-    split_bytes: int | None = None,
-    **kw,
+    spark: SparkSession, path: str, format: str | None = None, **kw
 ) -> DataFrame:
     """Records DataFrame for a WARC or ARC path (format auto-detected from
-    the filename, like the reference's ``warc.open``). Pass ``split_bytes``
-    to scan gzipped WARCs with intra-file parallelism (member-offset
-    pre-splitting — one 1 GB file becomes many ranged-read tasks)."""
+    the filename, like the reference's ``warc.open``). ``kw`` goes to the
+    reader: e.g. ``split_bytes`` scans WARCs with intra-file parallelism
+    (``read_warc``)."""
     from .arc_source import read_arc
-    from .warc_source import read_warc, read_warc_presplit
+    from .warc_source import read_warc
 
     if format in (None, "auto"):
         format = detect_format(path)
     if format == "warc":
-        if split_bytes is not None:
-            return read_warc_presplit(spark, path, split_bytes=split_bytes, **kw)
         return read_warc(spark, path, **kw)
     if format == "arc":
         return read_arc(spark, path, **kw)

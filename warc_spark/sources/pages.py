@@ -420,7 +420,7 @@ def pages_from_records(
     extractor: str = "synthetic",
     require_status: int | None = None,
 ) -> DataFrame:
-    """WARC records table (``read_warc``/``read_warc_presplit`` output) ->
+    """WARC records table (``read_warc`` output, split or not) ->
     the input_hint pages table (url, warc_ts, html, text, lang): response
     records re-serialized to their wire bytes (byte-identical — round-trip
     law in tests/test_kernels_warc.py), text extracted from the payload,
