@@ -1,6 +1,8 @@
 """Frontier engine vs the single-process oracle simulator: crawl ordering,
 URL-seen set, robots/politeness semantics, checkpoint/exact-resume."""
 
+import functools
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -67,6 +69,12 @@ def collect_batches(store, spark, n):
     return out
 
 
+def read_scheduled(store, spark, upto):
+    """Every batch's ``scheduled`` table for batches 0..upto, as one frame."""
+    frames = [store.read_df(spark, k, "scheduled") for k in range(upto + 1)]
+    return functools.reduce(lambda a, b: a.unionByName(b), frames)
+
+
 def write_stray_filter_state(spark, path):
     """A retired membership-filter dir as older stores hold it: one
     (bucket, blob, n_items) row per bucket, with all-zero blobs — a filter
@@ -103,7 +111,7 @@ class TestCrawlOracle:
         # final URL-seen set matches exactly
         seen = {
             r.url
-            for r in store.read_all_scheduled(spark, len(manifests) - 1).collect()
+            for r in read_scheduled(store, spark, len(manifests) - 1).collect()
         }
         assert seen == sim.seen
 
@@ -125,7 +133,7 @@ class TestCrawlOracle:
         for k, (g, s) in enumerate(zip(got, sim.batches)):
             assert g == s, f"batch {k} ordering mismatch"
         # robots-blocked hosts never scheduled
-        all_sched = store.read_all_scheduled(spark, len(manifests) - 1)
+        all_sched = read_scheduled(store, spark, len(manifests) - 1)
         assert all_sched.filter(F.col("host") == "host2.example.org").count() == 0
         # per-batch politeness budget respected
         per_host = (
@@ -197,8 +205,8 @@ class TestResume:
         got = collect_batches(store, spark, 4)
         ref = collect_batches(ref_store, spark, 4)
         assert got == ref
-        seen_a = {r.url for r in store.read_all_scheduled(spark, 3).collect()}
-        seen_b = {r.url for r in ref_store.read_all_scheduled(spark, 3).collect()}
+        seen_a = {r.url for r in read_scheduled(store, spark, 3).collect()}
+        seen_b = {r.url for r in read_scheduled(ref_store, spark, 3).collect()}
         assert seen_a == seen_b
 
     def test_fresh_run_refuses_committed_store(
@@ -559,7 +567,7 @@ class TestSchemaKnownReads:
         )
         assert len(inferred) > 0  # the tracker does see inference jobs
         assert frontier.count() == manifests[2]["metrics"]["frontier_after"]
-        logged = store.read_all_scheduled(spark, 2).select("url").unionByName(
+        logged = read_scheduled(store, spark, 2).select("url").unionByName(
             spark.read.parquet(*(store.batch_dir(k) + "/blocked" for k in range(3)))
         )
         assert {r.url for r in seen.collect()} == {r.url for r in logged.collect()}
@@ -585,13 +593,13 @@ class TestSeenCompaction:
             assert os.path.exists(os.path.join(d, "_SUCCESS"))
             compacted = {r.url for r in spark.read.parquet(d).collect()}
             scheduled = {
-                r.url for r in store_c.read_all_scheduled(spark, k).collect()
+                r.url for r in read_scheduled(store_c, spark, k).collect()
             }
             assert compacted == scheduled
         # read_seen_urls equals the full scheduled set at every horizon
         for k in range(len(mc)):
             a = {r.url for r in store_c.read_seen_urls(spark, k).collect()}
-            b = {r.url for r in store_c.read_all_scheduled(spark, k).collect()}
+            b = {r.url for r in read_scheduled(store_c, spark, k).collect()}
             assert a == b
 
 
@@ -649,7 +657,7 @@ class TestRecrawl:
             config=FrontierConfig(max_batches=2, default_budget=4),
         )
         eng.run(seeds_df)
-        sched = [r.url for r in store.read_all_scheduled(spark, 1)
+        sched = [r.url for r in read_scheduled(store, spark, 1)
                  .orderBy("url").collect()]
         expired, kept_seen = set(sched[:3]), set(sched[3:5])
         eng.expire_urls(

@@ -444,3 +444,19 @@ def test_wat_records_single_scan(spark, tmp_path):
             assert "WARC-Target-URI" not in names
         else:
             assert "WARC-Target-URI" in names
+
+
+def test_core_count_parses_masters(monkeypatch):
+    """``spark.default.parallelism`` follows the master's task slots:
+    ``local-cluster[n,c,m]`` has n*c, and only a real cluster master
+    falls back to SPARK_GRAFT_CLUSTER_CORES."""
+    import os
+
+    from warc_spark.plans.session import _core_count
+
+    monkeypatch.setenv("SPARK_GRAFT_CLUSTER_CORES", "48")
+    assert _core_count("local[4]") == 4
+    assert _core_count("local[*]") == (os.cpu_count() or 8)
+    assert _core_count("local-cluster[2,1,1024]") == 2
+    assert _core_count("local-cluster[3,2,512]") == 6
+    assert _core_count("spark://host:7077") == 48

@@ -12,12 +12,8 @@ import pytest
 
 from warc_spark.kernels.gzipmember import compress_records_as_members
 from warc_spark.kernels.warcrec import make_record
-from warc_spark.operators.revisit import (
-    REVISIT_PROFILE,
-    revisit_dedup,
-    write_warc_deduped,
-)
-from warc_spark.sources import read_warc
+from warc_spark.operators.revisit import REVISIT_PROFILE, revisit_dedup
+from warc_spark.sources import read_warc, write_warc
 
 
 def _payload(k: int) -> bytes:
@@ -100,7 +96,7 @@ def test_deterministic_at_any_parallelism(spark, dup_warc):
 def test_roundtrip_through_sink_and_reader(spark, dup_warc, tmp_path):
     df = read_warc(spark, dup_warc)
     out = str(tmp_path / "deduped")
-    manifest = write_warc_deduped(df, out, compress=True).collect()
+    manifest = write_warc(revisit_dedup(df), out, compress=True).collect()
     assert sum(m.records for m in manifest) == 12
     back = read_warc(spark, os.path.join(out, "*.warc.gz"))
     rows = back.collect()

@@ -4,8 +4,8 @@ merge, and the fetch exchange's spread of a hot host."""
 import pytest
 from pyspark.sql import functions as F
 
-from warc_spark.operators.politeness import apply_politeness, topk_per_key
-from warc_spark.operators.robots import ROBOTS_SCHEMA, apply_robots, url_host, url_path
+from warc_spark.operators.politeness import flag_politeness, topk_per_key
+from warc_spark.operators.robots import ROBOTS_SCHEMA, flag_robots, url_host, url_path
 
 
 @pytest.fixture(scope="module")
@@ -20,7 +20,7 @@ def frontier(spark):
 
 
 def test_politeness_default_budget(spark, frontier):
-    kept = apply_politeness(frontier, None, default_budget=5)
+    kept = flag_politeness(frontier, None, default_budget=5).filter("kept")
     counts = kept.groupBy("host").count().collect()
     assert all(r["count"] == 5 for r in counts)
     # keeps the top-priority urls specifically
@@ -32,7 +32,7 @@ def test_politeness_budget_overrides(spark, frontier):
     budgets = spark.createDataFrame(
         [("host1.example.org", 2)], "host string, max_fetches_per_batch int"
     )
-    kept = apply_politeness(frontier, budgets, default_budget=4)
+    kept = flag_politeness(frontier, budgets, default_budget=4).filter("kept")
     counts = {r.host: r["count"] for r in kept.groupBy("host").count().collect()}
     assert counts["host1.example.org"] == 2
     assert counts["host0.example.org"] == 4
@@ -44,7 +44,6 @@ def test_politeness_domain_level_budget(spark):
     domain's subdomains (how large crawls cap farm-style *.example.co.uk
     hosts), no new operator needed."""
     from warc_spark.functions.graph import domain_of_expr
-    from warc_spark.operators.politeness import flag_politeness
 
     rows = [
         (f"http://{sub}.farm.co.uk/p/{i}", f"{sub}.farm.co.uk", float(10 - i))
@@ -106,7 +105,7 @@ def test_robots_gate(spark, frontier):
         ],
         ROBOTS_SCHEMA,
     )
-    kept = apply_robots(frontier, robots)
+    kept = flag_robots(frontier, robots).filter("robots_allowed")
     h0 = [r.url for r in kept.filter(F.col("host") == "host0.example.org").collect()]
     assert all("/p/1" not in u for u in h0)
     assert len(h0) == 9  # p/0, p/2..9
@@ -223,11 +222,7 @@ def test_robots_longest_match_precedence():
 def test_robots_gate_v2_wildcards(spark):
     """The JVM gate with Allow + wildcard rules must agree with the
     pure-Python twin on every url."""
-    from warc_spark.operators.robots import (
-        apply_robots,
-        robots_blocked,
-        robots_rules_from_bodies,
-    )
+    from warc_spark.operators.robots import robots_blocked, robots_rules_from_bodies
 
     body = (
         "User-agent: *\n"
@@ -253,7 +248,9 @@ def test_robots_gate_v2_wildcards(spark):
         [(u, "h.example.org", 1.0) for u in urls],
         "url string, host string, priority double",
     )
-    kept = {r.url for r in apply_robots(frontier, rules).collect()}
+    kept = {
+        r.url for r in flag_robots(frontier, rules).filter("robots_allowed").collect()
+    }
     parsed = (["/private/ok", "/p"], ["/private", "/*.cgi$", "/"])
     expected = {
         u
@@ -270,7 +267,7 @@ def test_robots_gate_v2_wildcards(spark):
 
 
 def test_robots_rules_from_bodies_feeds_gate(spark):
-    from warc_spark.operators.robots import apply_robots, robots_rules_from_bodies
+    from warc_spark.operators.robots import robots_rules_from_bodies
 
     bodies = spark.createDataFrame(
         [
@@ -295,17 +292,16 @@ def test_robots_rules_from_bodies_feeds_gate(spark):
         ],
         "url string, host string, priority double",
     )
-    kept = {r.url for r in apply_robots(frontier, rules).collect()}
+    kept = {
+        r.url for r in flag_robots(frontier, rules).filter("robots_allowed").collect()
+    }
     assert kept == {"http://h0.example.org/ok", "http://h3.example.org/new"}
 
 
 def test_budgets_from_crawl_delay(spark):
     """robots Crawl-delay -> per-host per-batch budgets, end to end through
     the politeness gate."""
-    from warc_spark.operators.politeness import (
-        apply_politeness,
-        budgets_from_crawl_delay,
-    )
+    from warc_spark.operators.politeness import budgets_from_crawl_delay
     from warc_spark.operators.robots import robots_rules_from_bodies
 
     bodies = spark.createDataFrame(
@@ -333,7 +329,7 @@ def test_budgets_from_crawl_delay(spark):
         ],
         "url string, host string, priority double",
     )
-    kept = apply_politeness(frontier, budgets, default_budget=3)
+    kept = flag_politeness(frontier, budgets, default_budget=3).filter("kept")
     per_host = {
         r.host: r["count"] for r in kept.groupBy("host").count().collect()
     }

@@ -2,6 +2,7 @@
 pages generator (incl. the byte-identity invariant), distributed WARC sink
 round-trip."""
 
+import datetime as dt
 import os
 
 import pandas as pd
@@ -131,6 +132,29 @@ def _full(rows, record_index=None):
     ]
 
 
+ARC_DATE = dt.datetime(2026, 8, 1)
+
+
+def _arc_fields(i: int) -> dict:
+    """Header fields of ARC test record ``i`` (payload ``payload i``)."""
+    return {
+        "url": "http://example.com/%d" % i, "ip_address": "127.0.0.1",
+        "date": "20260801000000", "content_type": "text/html",
+        "length": str(len(b"payload %d" % i)), "result_code": "200",
+        "checksum": "-", "location": "-", "offset": "0", "filename": "part.arc",
+    }
+
+
+def _arc_input(spark, n: int):
+    """``n`` ARC_RECORD_SCHEMA-shaped rows for write_arc."""
+    return spark.createDataFrame([
+        {"url": "http://example.com/%d" % i, "ip_address": "127.0.0.1",
+         "arc_date": ARC_DATE, "content_type": "text/html",
+         "payload": b"payload %d" % i}
+        for i in range(n)
+    ])
+
+
 def test_presplit_scan_matches_read_warc(spark, warc_file, tmp_path):
     """Member-offset pre-split scan: >1 input split over one multi-member
     file must yield byte-identical records to the whole-file scan
@@ -215,6 +239,45 @@ def test_killed_writer_part_not_read(spark, warc_file, tmp_path, fmt):
     assert {os.path.basename(r.filename) for r in back} == {
         os.path.basename(m.filename) for m in manifest
     }
+
+
+@pytest.mark.parametrize("wrap", [False, True])
+def test_part_file_commits_or_drops(tmp_path, wrap):
+    """The sinks' shared part-file writer: a part with no record creates
+    no file, a clean exit renames the part into place (a wrapper such as
+    write_arc's whole-part gzip flushed into it first), and an error
+    unlinks the in-progress file."""
+    import gzip
+
+    from warc_spark.sources.warc_source import _PartFile
+
+    def start(raw, name):
+        f = gzip.GzipFile(fileobj=raw, mode="wb", mtime=0)
+        f.write(b"head:" + name.encode())
+        return f
+
+    kw = {"start": start} if wrap else {}
+    with _PartFile(str(tmp_path), ".x", **kw) as empty:
+        pass
+    assert empty.manifest().empty and os.listdir(tmp_path) == []
+    with _PartFile(str(tmp_path), ".x", **kw) as part:
+        part.write(b"a")
+        part.write(b"b")
+    (m,) = part.manifest().itertuples()
+    assert (m.filename, m.records, m.bytes) == (
+        part.name, 2, os.path.getsize(part.name)
+    )
+    with open(part.name, "rb") as f:
+        data = f.read()
+    name = os.path.basename(part.name)
+    assert (gzip.decompress(data) if wrap else data) == (
+        b"head:" + name.encode() + b"ab" if wrap else b"ab"
+    )
+    with pytest.raises(RuntimeError):
+        with _PartFile(str(tmp_path), ".x", **kw) as failed:
+            failed.write(b"a")
+            raise RuntimeError("task failed mid-part")
+    assert os.listdir(tmp_path) == [name]
 
 
 def test_write_arc_roundtrip_and_golden(spark, tmp_path):
@@ -360,7 +423,14 @@ def test_readers_path_with_space(spark, warc_file, tmp_path):
     URI (``file:/a b/x``); every ranged read still opens it."""
     import shutil
 
-    from warc_spark.sources import index_warc_members, read_warc_records
+    from warc_spark.sources import (
+        index_arc_records,
+        index_warc_members,
+        read_arc,
+        read_arc_records,
+        read_warc_records,
+        write_arc,
+    )
 
     gz, _ = warc_file
     d = tmp_path / "with space"
@@ -371,6 +441,14 @@ def test_readers_path_with_space(spark, warc_file, tmp_path):
     assert _full(read_warc(spark, str(d), split_bytes=1000).collect()) == ref
     idx = index_warc_members(spark, str(d))
     assert read_warc_records(spark, idx).count() == 25
+    arcs = str(tmp_path / "arc with space")
+    write_arc(_arc_input(spark, 5).coalesce(1), arcs, date=ARC_DATE).collect()
+    aref = sorted((r.record_index, r.url) for r in read_arc(spark, arcs).collect())
+    assert len(aref) == 5
+    aidx = index_arc_records(spark, arcs)
+    assert aidx.count() == 5
+    got = read_arc_records(spark, aidx).collect()
+    assert sorted((r.record_index, r.url) for r in got) == aref
 
 
 def test_readers_list_files_without_content(spark, warc_file, tmp_path):
@@ -529,6 +607,83 @@ def test_arc_random_access_by_offset_index(spark, tmp_path):
         for r in read_arc(spark, os.path.join(out_gz, "*.arc.gz")).collect()
     }
     assert by_ordinal == ref_gz
+
+
+def test_arc_v1_whole_file_gzip_random_access(spark, tmp_path):
+    """A whole-file-gzip v1 ARC is one member that starts with the
+    ``filedesc://`` header: random access through its index finds the
+    header inside the member, takes v1 from it and returns each record
+    once, with its per-file ordinal."""
+    from warc_spark.sources import (
+        index_arc_records,
+        read_arc,
+        read_arc_records,
+        write_arc,
+    )
+
+    out = str(tmp_path / "v1gz")
+    write_arc(
+        _arc_input(spark, 6).coalesce(1), out, version=1, date=ARC_DATE,
+        compress=True,
+    ).collect()
+    key = lambda r: (r.url, bytes(r.payload), r.arc_version, r.arc_date)  # noqa: E731
+    ref = {r.record_index: key(r) for r in read_arc(spark, out).collect()}
+    assert sorted(ref) == list(range(6))
+    assert {v[2] for v in ref.values()} == {1}
+    idx = index_arc_records(spark, out)
+    assert idx.select("offset", "length").distinct().count() == 1
+    assert {r.arc_version for r in idx.collect()} == {1}
+    got = read_arc_records(spark, idx).collect()
+    assert len(got) == 6
+    assert {r.record_index: key(r) for r in got} == ref
+
+
+def test_arc_member_index_geometry(spark, tmp_path):
+    """Over a member-per-record ``.arc.gz`` each index row addresses its
+    record's own member: the ``(offset, length)`` ``iter_gzip_members``
+    finds over the file's bytes (the header-only first member holds no
+    record)."""
+    from warc_spark.kernels.arcrec import make_filedesc_record, serialize_arc_record
+    from warc_spark.kernels.gzipmember import compress_gzip_member, iter_gzip_members
+    from warc_spark.sources import index_arc_records
+
+    path = str(tmp_path / "members.arc.gz")
+    header = make_filedesc_record("members.arc.gz", 2, date=ARC_DATE)
+    blobs = [serialize_arc_record(*header, 2)] + [
+        serialize_arc_record(_arc_fields(i), "payload %d" % i, 2) for i in range(7)
+    ]
+    with open(path, "wb") as f:
+        for b in blobs:
+            f.write(compress_gzip_member((b + "\n").encode("latin-1")))
+    with open(path, "rb") as f:
+        members = [(off, size) for off, size, _ in iter_gzip_members(f.read())]
+    got = sorted(
+        (r.offset, r.length, r.record_index, r.arc_version, r.url)
+        for r in index_arc_records(spark, path).collect()
+    )
+    assert got == [
+        (off, size, i, 2, "http://example.com/%d" % i)
+        for i, (off, size) in enumerate(members[1:])
+    ]
+
+
+def test_arc_unparseable_date_reads_null(spark, tmp_path):
+    """An ARC date that is not 14 digits reads back as a null ``arc_date``
+    (the batch's one vectorized date conversion coerces it); the rest of
+    the record still reads."""
+    from warc_spark.kernels.arcrec import serialize_arc_file
+    from warc_spark.sources import read_arc
+
+    text = serialize_arc_file(
+        [(_arc_fields(0), "payload 0")], "bad.arc", version=1, date=ARC_DATE
+    ) + "http://example.com/bad 127.0.0.1 2026-08-01 text/html 3\nabc\n\n"
+    path = tmp_path / "bad.arc"
+    path.write_bytes(text.encode("latin-1"))
+    rows = sorted(read_arc(spark, str(path)).collect(), key=lambda r: r.record_index)
+    assert [(r.url, r.arc_date, bytes(r.payload)) for r in rows] == [
+        ("http://example.com/0", ARC_DATE, b"payload 0"),
+        ("http://example.com/bad", None, b"abc"),
+    ]
 
 
 def test_pages_from_records_feeds_frontier(spark, tmp_path):

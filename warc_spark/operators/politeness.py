@@ -2,9 +2,9 @@
 
 ``row_number() over (partition by host order by priority desc, url) <= k``
 — at scale this is one shuffle on the host key. A consumer that filters the
-rank (``topk_per_key``, or ``flag_politeness(...).filter(kept)``) lets Spark
-plan a ``WindowGroupLimit`` that prunes each map partition to the per-host
-top k before the shuffle. The frontier batch does not: it keeps the flag as
+rank (``topk_per_key``, or ``flag_politeness(...).filter("kept")``, the way
+to cut a frontier to its budget) lets Spark plan a ``WindowGroupLimit`` that
+prunes each map partition to the per-host top k before the shuffle. The frontier batch does not: it keeps the flag as
 a column and caches the ranked frame, so every row of a host goes to one
 window task, and AQE's skew-join splitting does not apply to windows.
 Per-host budget overrides come from a small broadcast table.
@@ -102,21 +102,3 @@ def budgets_from_crawl_delay(
             F.least(F.col("max_fetches_per_batch"), F.lit(int(max_budget))),
         )
     return out
-
-
-def apply_politeness(
-    frontier: DataFrame,
-    budgets: DataFrame | None = None,
-    default_budget: int = 8,
-    host_col: str = "host",
-    priority_col: str = "priority",
-    url_col: str = "url",
-) -> DataFrame:
-    """Cut the frontier to at most budget-per-host urls for this batch."""
-    return (
-        flag_politeness(
-            frontier, budgets, default_budget, host_col, priority_col, url_col
-        )
-        .filter(F.col("kept"))
-        .drop("kept")
-    )

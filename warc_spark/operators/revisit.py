@@ -147,11 +147,3 @@ def revisit_dedup(records: DataFrame) -> DataFrame:
         .withColumn("is_revisit", dup)
     )
     return rewritten.drop("_refers_to", "_refers_date", "_refers_uri", "_digest")
-
-
-def write_warc_deduped(df: DataFrame, out_dir: str, **kwargs) -> DataFrame:
-    """``revisit_dedup`` then the streamed ``write_warc`` sink; returns
-    the sink manifest. Convenience for the archive-compaction workflow."""
-    from ..sources.warc_source import write_warc
-
-    return write_warc(revisit_dedup(df), out_dir, **kwargs)

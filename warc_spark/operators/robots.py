@@ -158,22 +158,6 @@ def flag_robots(
     return gated.withColumn(flag_col, ~blocked).drop("disallow_prefixes")
 
 
-def apply_robots(
-    frontier: DataFrame,
-    robots: DataFrame | None,
-    url_col: str = "url",
-    host_col: str = "host",
-) -> DataFrame:
-    """Drop urls disallowed by their host's rules."""
-    if robots is None:
-        return frontier
-    return (
-        flag_robots(frontier, robots, url_col, host_col)
-        .filter(F.col("robots_allowed"))
-        .drop("robots_allowed")
-    )
-
-
 # ---------------------------------------------------------------------------
 # robots.txt parsing: raw fetched bodies -> the rules table
 # ---------------------------------------------------------------------------

@@ -100,6 +100,9 @@ def _ship_package(spark: SparkSession) -> None:
 
 
 def _core_count(master: str) -> int:
+    """Task slots of ``master``: ``local[n]`` has n, ``local[*]`` the
+    machine's cores, ``local-cluster[n,c,m]`` n workers of c cores each;
+    any other master reads ``SPARK_GRAFT_CLUSTER_CORES`` (default 64)."""
     if master.startswith("local["):
         inner = master[6:-1]
         if inner == "*":
@@ -108,6 +111,9 @@ def _core_count(master: str) -> int:
             return int(inner)
         except ValueError:
             return 8
+    if master.startswith("local-cluster["):
+        workers, cores, _ = master[14:-1].split(",")
+        return int(workers) * int(cores)
     return int(os.environ.get("SPARK_GRAFT_CLUSTER_CORES", "64"))
 
 

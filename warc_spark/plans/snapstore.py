@@ -122,12 +122,6 @@ class SnapStore:
         reader = spark.read if schema is None else spark.read.schema(schema)
         return reader.parquet(os.path.join(self.batch_dir(batch), name))
 
-    def read_all_scheduled(self, spark: SparkSession, upto: int) -> DataFrame:
-        paths = [
-            os.path.join(self.batch_dir(k), "scheduled") for k in range(upto + 1)
-        ]
-        return spark.read.parquet(*paths)
-
     # -- seen-url compaction (LSM-style) ----------------------------------
     def _latest_compact(self, upto: int) -> int | None:
         for k in range(upto, -1, -1):
@@ -175,9 +169,9 @@ class SnapStore:
     ) -> DataFrame:
         """urls scheduled or robots-blocked in batches 0..upto: the latest
         compacted prefix (if any) plus the per-batch ``scheduled`` and
-        ``blocked`` deltas after it. Equivalent to
-        ``read_all_scheduled(upto).select("url")`` plus every blocked table,
-        but opens O(interval) dirs instead of O(#batches).
+        ``blocked`` deltas after it. Equivalent to the urls of every
+        ``scheduled`` and ``blocked`` table of batches 0..upto, but opens
+        O(interval) dirs instead of O(#batches).
 
         A batch's ``blocked`` table is read only when its committed
         manifest lists it: a crashed attempt's leftover dir is ignored. A

@@ -1,5 +1,14 @@
-"""Vectorized ARC v1/v2 ingest (mirror of warc_source for the ARC format;
-reference read path /root/reference/warc/arc.py:307-382)."""
+"""Vectorized ARC v1/v2 ingest/egest (the ARC mirror of warc_source; the
+reference's read path is warc/arc.py:307-382).
+
+One scan, two kernels: every ARC reader is warc_source's archive scan
+(``_scan_ranges``) run with this module's kernel, ``_arc_records``, in
+place of the WARC one. ``read_arc`` scans one range per file,
+``read_arc_records`` one range per indexed record or gzip member, and
+``index_arc_records`` maps the same kernel to index rows. The sink,
+``write_arc``, streams each task's records into one part file through the
+part-file writer ``write_warc`` uses (``_PartFile``).
+"""
 
 from __future__ import annotations
 
@@ -8,6 +17,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -18,9 +28,15 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..kernels.arcrec import parse_arc_file
+from ..kernels.arcrec import parse_arc_file_indexed, parse_arc_records_indexed
 from ..kernels.gzipmember import GZIP_MAGIC, iter_gzip_members
-from .warc_source import _list_files, _open_ranged, in_progress_path
+from .warc_source import (
+    MANIFEST_SCHEMA,
+    _list_files,
+    _open_ranged,
+    _PartFile,
+    _scan_ranges,
+)
 
 ARC_RECORD_SCHEMA = StructType(
     [
@@ -42,57 +58,83 @@ ARC_RECORD_SCHEMA = StructType(
 )
 
 
-def _arc_row(rec, name: str, index: int, version: int) -> dict:
-    """One parsed ARC record -> an ARC_RECORD_SCHEMA row (every reader
-    builds its rows here)."""
-    f = rec.fields
-    return {
-        "filename": name,
-        "record_index": index,
-        "arc_version": version,
-        "url": f.get("url"),
-        "ip_address": f.get("ip_address"),
-        "arc_date": pd.to_datetime(
-            f.get("date"), format="%Y%m%d%H%M%S", errors="coerce"
-        ),
-        "content_type": f.get("content_type"),
-        "result_code": f.get("result_code") or None,
-        "checksum": f.get("checksum") or None,
-        "location": f.get("location") or None,
-        "offset": f.get("offset") or None,
-        "arc_filename": f.get("filename") or None,
-        "length": int(f["length"]) if f.get("length") else 0,
-        "payload": rec.payload.encode("latin-1"),
-    }
+def _arc_records(data: bytes, start: int, version: int | None):
+    """Kernel: the bytes of one ARC range (file offset ``start``) ->
+    ``(offset, length, version, record)`` per record, in file space.
+
+    A gzip range is split into members, decompressed one at a time, and
+    each record carries its member's ``(offset, size)`` in compressed
+    space (the IA member-per-record convention; a whole-file-gzip ARC is
+    one member holding every record). A plain range carries each record's
+    own span, header line plus payload: the reference's v2 ``offset``
+    field (arc.py:126-127) as real file geometry. Text that starts with
+    a ``filedesc://`` file header takes the version from it (arc.py:319-333);
+    any other text needs ``version`` (an index carries it)."""
+    gz = data[:2] == GZIP_MAGIC
+    for m_off, m_size, raw in iter_gzip_members(data) if gz else [(0, 0, data)]:
+        text = raw.decode("latin-1")
+        if text.startswith("filedesc://"):
+            recs = parse_arc_file_indexed(text)
+            version = next(recs)
+        elif version is None:
+            raise IOError("ARC range at %d has no filedesc:// header and no "
+                          "version" % (start + m_off))
+        else:
+            recs = parse_arc_records_indexed(text, version)
+        for off, length, rec in recs:
+            if gz:
+                yield start + m_off, m_size, version, rec
+            else:
+                yield start + off, length, version, rec
 
 
-def _records_of_arc(name: str, data: bytes) -> list[dict]:
-    if data[:2] == GZIP_MAGIC:
-        text = b"".join(p for _, _, p in iter_gzip_members(data)).decode("latin-1")
-    else:
-        text = data.decode("latin-1")
-    it = parse_arc_file(text)
-    version = next(it)
-    return [_arc_row(rec, name, idx, version) for idx, rec in enumerate(it)]
+def _arc_rows(
+    data: bytes, name: str, start: int, first_index: int, version: int | None
+) -> list[dict]:
+    """The ARC kernel in the scan's shape: one range's bytes ->
+    ARC_RECORD_SCHEMA rows, ``record_index`` counting up from
+    ``first_index``. ``arc_date`` stays the raw string here;
+    ``_finalize_arc_batch`` converts a whole batch at once."""
+    rows = []
+    for i, (_, _, ver, rec) in enumerate(_arc_records(data, start, version)):
+        f = rec.fields
+        rows.append({
+            "filename": name,
+            "record_index": first_index + i,
+            "arc_version": ver,
+            "url": f.get("url"),
+            "ip_address": f.get("ip_address"),
+            "arc_date": f.get("date"),
+            "content_type": f.get("content_type"),
+            "result_code": f.get("result_code") or None,
+            "checksum": f.get("checksum") or None,
+            "location": f.get("location") or None,
+            "offset": f.get("offset") or None,
+            "arc_filename": f.get("filename") or None,
+            "length": int(f["length"]) if f.get("length") else 0,
+            "payload": rec.payload.encode("latin-1"),
+        })
+    return rows
 
 
-def _read_file(p: str) -> bytes:
-    with _open_ranged(p) as fh:
-        return fh.read()
+def _finalize_arc_batch(rows: list[dict]) -> pd.DataFrame:
+    """rows -> batch DataFrame, the 14-digit ARC dates converted in one
+    vectorized pass (an unparseable date becomes null)."""
+    out = pd.DataFrame(rows, columns=[f.name for f in ARC_RECORD_SCHEMA.fields])
+    out["arc_date"] = pd.to_datetime(
+        out["arc_date"], format="%Y%m%d%H%M%S", errors="coerce"
+    )
+    return out
 
 
 def read_arc(spark: SparkSession, path: str) -> DataFrame:
     """Scan ARC file(s) (plain, member-per-record gzip or whole-file gzip)
-    into a records table, one task reading whole files."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p in pdf["path"]:
-                rows.extend(_records_of_arc(os.path.basename(p), _read_file(p)))
-            yield pd.DataFrame(rows, columns=[f.name for f in ARC_RECORD_SCHEMA.fields])
-
-    return _list_files(spark, path).select("path").mapInPandas(gen, ARC_RECORD_SCHEMA)
+    into a records table: one range per file, each taking its version
+    from its file header."""
+    return _scan_ranges(
+        _list_files(spark, path), [], _arc_rows, ARC_RECORD_SCHEMA,
+        _finalize_arc_batch,
+    )
 
 
 ARC_INDEX_SCHEMA = StructType(
@@ -110,62 +152,27 @@ ARC_INDEX_SCHEMA = StructType(
 def index_arc_records(spark: SparkSession, path: str) -> DataFrame:
     """Offset index for ARC files — the ARC mirror of
     ``index_warc_members`` (VERDICT r2 #8): one row per record
-    ``(path, offset, length, record_index, arc_version, url)``.
-
-    Plain files: ``offset`` is the byte position of the record's header
-    line and ``length`` spans header line + payload — the reference's v2
-    ``offset`` header-field semantics (/root/reference/warc/arc.py:126-127)
-    realized as actual file geometry. Gzipped files: ``(offset, length)``
-    address the record's gzip member in compressed space (the IA
-    member-per-record convention; a whole-file-gzip ARC indexes as one
+    ``(path, offset, length, record_index, arc_version, url)``, the
+    geometry ``_arc_records`` gives. Plain files: ``offset`` is the byte
+    position of the record's header line and ``length`` spans header line
+    + payload. Gzipped files: ``(offset, length)`` address the record's
+    gzip member in compressed space (a whole-file-gzip ARC indexes as one
     member covering all records). ``arc_version`` rides the index so a
     ranged read can parse a record without re-reading the file header."""
-    from ..kernels.arcrec import parse_arc_file_indexed, parse_arc_records_indexed
-
     cols = [f.name for f in ARC_INDEX_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for p in pdf["path"]:
-                data = _read_file(p)
-                if data[:2] == GZIP_MAGIC:
-                    members = list(iter_gzip_members(data))
-                    # version from the file header (first member's start)
-                    head = members[0][2].decode("latin-1")
-                    it = parse_arc_file_indexed(head)
-                    version = next(it)
-                    first_recs = list(it)
-                    idx = 0
-                    for mi, (off, size, payload) in enumerate(members):
-                        if mi == 0:
-                            recs = first_recs
-                        else:
-                            recs = list(
-                                parse_arc_records_indexed(
-                                    payload.decode("latin-1"), version
-                                )
-                            )
-                        for _, _, rec in recs:
-                            rows.append(
-                                {
-                                    "path": p, "offset": off, "length": size,
-                                    "record_index": idx, "arc_version": version,
-                                    "url": rec.fields.get("url"),
-                                }
-                            )
-                            idx += 1
-                else:
-                    it = parse_arc_file_indexed(data.decode("latin-1"))
-                    version = next(it)
-                    for idx, (off, size, rec) in enumerate(it):
-                        rows.append(
-                            {
-                                "path": p, "offset": off, "length": size,
-                                "record_index": idx, "arc_version": version,
-                                "url": rec.fields.get("url"),
-                            }
-                        )
+                with _open_ranged(p) as fh:
+                    data = fh.read()
+                rows.extend(
+                    (p, off, length, i, ver, rec.fields.get("url"))
+                    for i, (off, length, ver, rec) in enumerate(
+                        _arc_records(data, 0, None)
+                    )
+                )
             yield pd.DataFrame(rows, columns=cols)
 
     return _list_files(spark, path).select("path").mapInPandas(gen, ARC_INDEX_SCHEMA)
@@ -174,81 +181,28 @@ def index_arc_records(spark: SparkSession, path: str) -> DataFrame:
 def read_arc_records(spark: SparkSession, index: DataFrame) -> DataFrame:
     """Distributed RANDOM ACCESS over ARC files: fetch exactly the records
     named by an ``index_arc_records``-shaped table via ranged reads (the
-    ARC mirror of ``read_warc_records``; remote schemes supported through
-    the same ``pyarrow.fs`` opener). Plain offsets slice one record;
-    gzip offsets decompress one member (all its records are returned).
-    Extra index columns pass through."""
-    from pyspark.sql import functions as F
-
-    from ..kernels.arcrec import parse_arc_records_indexed
-
+    ARC mirror of ``read_warc_records``, through the same scan). Plain
+    offsets slice one record; gzip offsets decompress one member (all its
+    records are returned). Extra index columns pass through."""
     rec_names = {f.name for f in ARC_RECORD_SCHEMA.fields}
     keep = [
         c for c in index.columns
         if c not in ("path",) and c not in rec_names  # record cols win
     ]
-    out_schema = StructType(
-        [index.schema[c] for c in keep] + list(ARC_RECORD_SCHEMA.fields)
-    )
-    rec_cols = [f.name for f in ARC_RECORD_SCHEMA.fields]
-
     # A whole-file-gzip ARC indexes every record against the SAME member
-    # (path, offset, length) — fetching per index row would re-parse the
+    # (path, offset, length) — a range per index row would re-parse the
     # member once per record (NxN duplicate records; ADVICE r3). Group to
-    # one fetch per distinct member and remember the member's base ordinal
+    # one range per distinct member, starting at the member's base ordinal
     # so the emitted record_index stays the per-file ordinal the index
     # carries. Slim shuffle: index metadata only, never payload bytes.
-    base_expr = (
-        F.min("record_index") if "record_index" in index.columns else F.lit(0)
-    )
-    index = index.groupBy("path", "offset", "length", "arc_version").agg(
-        base_expr.alias("rec_base__"),
+    first = F.min("record_index") if "record_index" in index.columns else F.lit(0)
+    ranges = index.groupBy("path", "offset", "length", "arc_version").agg(
+        first.cast("long").alias("first_index"),
         *[F.first(c).alias(c) for c in keep],
+    ).withColumnRenamed("offset", "start")
+    return _scan_ranges(
+        ranges, keep, _arc_rows, ARC_RECORD_SCHEMA, _finalize_arc_batch
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows, keeps = [], []
-            handles: dict[str, object] = {}
-            try:
-                for row in pdf.itertuples(index=False):
-                    p = row.path
-                    fh = handles.get(p)
-                    if fh is None:
-                        fh = handles[p] = _open_ranged(p)
-                    fh.seek(int(row.offset))
-                    raw = fh.read(int(row.length))
-                    if raw[:2] == GZIP_MAGIC:
-                        text = next(iter_gzip_members(raw))[2].decode("latin-1")
-                        if text.startswith("filedesc://"):
-                            # whole-file member: skip the 3-line file header
-                            # + separator before the records
-                            pos = 0
-                            for _ in range(4):
-                                pos = text.find("\n", pos) + 1
-                            text = text[pos:]
-                    else:
-                        text = raw.decode("latin-1")
-                    version = int(row.arc_version)
-                    name = os.path.basename(p)
-                    for ri, (_, _, rec) in enumerate(
-                        parse_arc_records_indexed(text, version)
-                    ):
-                        rows.append(
-                            _arc_row(rec, name, int(row.rec_base__) + ri, version)
-                        )
-                        keeps.append({c: getattr(row, c) for c in keep})
-            finally:
-                for fh in handles.values():
-                    fh.close()
-            rec_df = pd.DataFrame(rows, columns=rec_cols)
-            keep_df = pd.DataFrame(keeps, columns=keep)
-            yield pd.concat(
-                [keep_df.reset_index(drop=True), rec_df.reset_index(drop=True)],
-                axis=1,
-            )
-
-    return index.mapInPandas(gen, out_schema)
 
 
 def write_arc(
@@ -268,10 +222,8 @@ def write_arc(
     made deterministic). Expects ARC_RECORD_SCHEMA-shaped columns (the
     ``read_arc`` output round-trips directly); ``length`` is recomputed
     from the payload. Returns the (filename, records, bytes) manifest."""
-    import gzip
-    import uuid
-
     import datetime as _dt
+    import gzip
 
     from ..kernels.arcrec import (
         format_arc_date,
@@ -283,35 +235,24 @@ def write_arc(
         raise ValueError("date must be injected (reference uses utcnow())")
     os.makedirs(out_dir, exist_ok=True)
     ext = ".arc.gz" if compress else ".arc"
-    manifest_schema = "filename string, records bigint, bytes bigint"
+
+    def start(raw, name: str):
+        # one gzip member for the whole part (mtime pinned for reproducible
+        # bytes); the readers see it as one member holding every record
+        f = gzip.GzipFile(fileobj=raw, mode="wb", mtime=0) if compress else raw
+        fd_fields, fd_payload = make_filedesc_record(
+            name, version, org=org, ip_address=ip_address, date=date,
+        )
+        f.write(
+            (serialize_arc_record(fd_fields, fd_payload, version) + "\n")
+            .encode("latin-1")
+        )
+        return f
 
     def sink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        f = None
-        n = 0
-        fname = os.path.join(out_dir, "part-%s%s" % (uuid.uuid4().hex[:12], ext))
-        tmp = in_progress_path(fname)
-
-        def _open():
-            raw = open(tmp, "wb")
-            if compress:
-                # one gzip member for the whole part (mtime pinned for
-                # reproducible bytes); read_arc joins members before parsing
-                return gzip.GzipFile(fileobj=raw, mode="wb", mtime=0), raw
-            return raw, raw
-
-        try:
+        with _PartFile(out_dir, ext, start) as part:
             for pdf in batches:
                 for row in pdf.itertuples():
-                    if f is None:
-                        f, raw = _open()
-                        fd_fields, fd_payload = make_filedesc_record(
-                            os.path.basename(fname), version,
-                            org=org, ip_address=ip_address, date=date,
-                        )
-                        f.write(
-                            (serialize_arc_record(fd_fields, fd_payload, version) + "\n")
-                            .encode("latin-1")
-                        )
                     payload = (
                         bytes(row.payload).decode("latin-1")
                         if row.payload is not None
@@ -331,35 +272,13 @@ def write_arc(
                         "location": getattr(row, "location", None) or "-",
                         "offset": getattr(row, "offset", None) or "0",
                         "filename": getattr(row, "arc_filename", None)
-                        or os.path.basename(fname),
+                        or os.path.basename(part.name),
                     }
-                    f.write(
+                    part.write(
                         (serialize_arc_record(fields, payload, version) + "\n")
                         .encode("latin-1")
                     )
-                    n += 1
-            if f is None:
-                yield pd.DataFrame(columns=["filename", "records", "bytes"])
-                return
-            if raw is not f:
-                f.close()  # flush the gzip trailer into raw
-                nbytes = raw.tell()
-                raw.close()
-            else:
-                nbytes = f.tell()
-                f.close()
-            f = None
-            os.replace(tmp, fname)
-        finally:
-            if f is not None:  # error path: drop the partial tmp file
-                try:
-                    f.close()
-                    if raw is not f:
-                        raw.close()
-                finally:
-                    if os.path.exists(tmp):
-                        os.unlink(tmp)
-        yield pd.DataFrame([{"filename": fname, "records": n, "bytes": nbytes}])
+        yield part.manifest()
 
     cols = [c for c in (f.name for f in ARC_RECORD_SCHEMA.fields) if c in df.columns]
-    return df.select(cols).mapInPandas(sink, manifest_schema)
+    return df.select(cols).mapInPandas(sink, MANIFEST_SCHEMA)

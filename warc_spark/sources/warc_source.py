@@ -3,14 +3,18 @@
 Replaces the reference's single-threaded pull iterator
 (/root/reference/warc/warc.py:363-393) with an Arrow-batched ``mapInPandas``
 scan: one input row per byte range of an archive file, one output row per
-record. Every reader is that one scan (``_scan_ranges``) over a different
-range plan: whole files (``read_warc``), member-aligned splits
-(``read_warc(split_bytes=...)``), or the rows of an offset index
+record. This module owns the one archive scan (``_scan_ranges``), for both
+formats: it takes a format's bytes->rows kernel, so WARC runs it with
+``_warc_rows`` and ``arc_source`` with its ARC kernel. Every reader is that
+scan over a different range plan: whole files (``read_warc``), member-aligned
+splits (``read_warc(split_bytes=...)``), or the rows of an offset index
 (``read_warc_records``). The per-record gzip member framing
 (warc/gzip2.py:1-13) is what makes this parallel-safe — members are
 independently decompressable, so a file can be split at member offsets and
 the ranges scanned by different tasks (the 100 TB path). Each task reads its
 bytes through ``pyarrow.fs`` (``_open_ranged``); Spark only lists the files.
+Both sinks (``write_warc`` and arc_source's ``write_arc``) write through one
+part-file writer (``_PartFile``).
 
 Scale notes:
 - parsing is per-range-independent: no shuffle, no state, map-only stage.
@@ -216,48 +220,59 @@ def _open_ranged(p: str):
 
 
 def _list_files(spark: SparkSession, path: str | list[str]) -> DataFrame:
-    """``(path, length)`` per file under ``path`` (a path, glob or list).
-    Spark's ``binaryFile`` source reads a file's bytes only when the
-    ``content`` column is selected, so this listing never reads any;
-    the readers fetch the bytes themselves through ``_open_ranged``."""
-    return spark.read.format("binaryFile").load(path).select("path", "length")
+    """One whole-file range ``(path, start, length, first_index)`` per file
+    under ``path`` (a path, glob or list). Spark's ``binaryFile`` source
+    reads a file's bytes only when the ``content`` column is selected, so
+    this listing never reads any; the readers fetch the bytes themselves
+    through ``_open_ranged``."""
+    zero = F.lit(0).cast("long")
+    return spark.read.format("binaryFile").load(path).select(
+        "path", zero.alias("start"), "length", zero.alias("first_index")
+    )
 
 
 def _scan_ranges(
-    ranges: DataFrame, keep: list[str], strict: bool, payload_cap: int | None
+    ranges: DataFrame, keep: list[str], rows_of, schema: StructType, finalize
 ) -> DataFrame:
-    """The one WARC scan: ``(path, start, length, first_index, *keep)``
-    range rows -> ``keep`` columns + WARC_RECORD_SCHEMA rows. Each task
-    ranged-reads its rows' bytes and runs ``_warc_rows`` on them. One file
-    is open at a time; consecutive ranges of a file share its handle."""
-    out_schema = StructType(
-        [ranges.schema[c] for c in keep] + list(WARC_RECORD_SCHEMA.fields)
-    )
+    """The one archive scan, for both formats: ``(path, start, length,
+    first_index[, arc_version], *keep)`` range rows -> ``keep`` columns +
+    ``schema`` rows. Each task ranged-reads its rows' bytes and runs the
+    format's kernel, ``rows_of(data, name, start, first_index, version)``
+    -> row dicts, on them; ``finalize`` turns a batch's row dicts into
+    its DataFrame. ``version`` is the range's ``arc_version`` (null: ARC
+    detects it from the ``filedesc://`` header at the range start); WARC
+    ranges have no such column and get None. One file is open at a time;
+    consecutive ranges of a file share its handle."""
+    out_schema = StructType([ranges.schema[c] for c in keep] + list(schema.fields))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: list[dict] = []
             src: list[int] = []  # the range row each record came from
+            versions = (
+                pdf["arc_version"] if "arc_version" in pdf else [None] * len(pdf)
+            )
             fh, fh_path = None, None
             try:
-                for i, (p, start, length, first) in enumerate(zip(
-                    pdf["path"], pdf["start"], pdf["length"], pdf["first_index"]
+                for i, (p, start, length, first, version) in enumerate(zip(
+                    pdf["path"], pdf["start"], pdf["length"], pdf["first_index"],
+                    versions,
                 )):
                     if p != fh_path:
                         if fh is not None:
                             fh.close()
                         fh, fh_path = _open_ranged(p), p
                     fh.seek(int(start))
-                    got = _warc_rows(
+                    got = rows_of(
                         fh.read(int(length)), os.path.basename(p), int(start),
-                        int(first), strict, payload_cap,
+                        int(first), None if pd.isna(version) else int(version),
                     )
                     rows.extend(got)
                     src.extend([i] * len(got))
             finally:
                 if fh is not None:
                     fh.close()
-            rec_df = _finalize_batch(rows)
+            rec_df = finalize(rows)
             if keep:
                 rec_df = pd.concat(
                     [pdf[keep].iloc[src].reset_index(drop=True), rec_df], axis=1
@@ -265,6 +280,17 @@ def _scan_ranges(
             yield rec_df
 
     return ranges.mapInPandas(gen, out_schema)
+
+
+def _scan_warc(
+    ranges: DataFrame, keep: list[str], strict: bool, payload_cap: int | None
+) -> DataFrame:
+    """``_scan_ranges`` with the WARC kernel (a WARC range has no version)."""
+
+    def rows_of(data, name, start, first, _version):
+        return _warc_rows(data, name, start, first, strict, payload_cap)
+
+    return _scan_ranges(ranges, keep, rows_of, WARC_RECORD_SCHEMA, _finalize_batch)
 
 
 def read_warc(
@@ -295,10 +321,7 @@ def read_warc(
     if split_bytes is None:
         if index is not None:
             raise ValueError("read_warc: an index is read only with split_bytes")
-        ranges = _list_files(spark, path).select(
-            "path", F.lit(0).cast("long").alias("start"), "length",
-            F.lit(0).cast("long").alias("first_index"),
-        )
+        ranges = _list_files(spark, path)
     else:
         idx = index if index is not None else index_warc_members(spark, path)
         n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -312,7 +335,7 @@ def read_warc(
                 F.col("first_member").alias("first_index"),
             )
         )
-    return _scan_ranges(ranges, [], strict, payload_cap)
+    return _scan_warc(ranges, [], strict, payload_cap)
 
 
 MEMBER_INDEX_SCHEMA = StructType(
@@ -413,7 +436,7 @@ def read_warc_records(
         "path", F.col("offset").alias("start"), "length",
         F.lit(-1).cast("long").alias("first_index"), *keep,
     )
-    return _scan_ranges(ranges, keep, strict, payload_cap)
+    return _scan_warc(ranges, keep, strict, payload_cap)
 
 
 def _finalize_batch(rows: list[dict]) -> pd.DataFrame:
@@ -464,6 +487,9 @@ def parse_warc_column(
     return df.mapInPandas(gen, out_schema)
 
 
+MANIFEST_SCHEMA = "filename string, records bigint, bytes bigint"
+
+
 def in_progress_path(fname: str) -> str:
     """Where a sink streams part file ``fname`` before renaming it into
     place: the same directory, under a leading ``.``. Spark's file listing
@@ -471,6 +497,60 @@ def in_progress_path(fname: str) -> str:
     read the partial file a SIGKILLed worker leaves behind."""
     head, tail = os.path.split(fname)
     return os.path.join(head, ".%s.tmp" % tail)
+
+
+class _PartFile:
+    """One sink task's output file, committed all or nothing: the part-file
+    protocol both sinks (``write_warc``, ``write_arc``) share. The file is
+    created on the first ``write`` under its hidden in-progress name
+    (``in_progress_path``), renamed into place when the ``with`` block ends
+    cleanly and unlinked when it raises, so readers never list a partial
+    part, even one a killed task left. ``start(raw, name)`` may wrap the
+    raw handle and write a file header; what it returns takes the records,
+    and closing it must flush into ``raw`` (write_arc's whole-part gzip)."""
+
+    def __init__(self, out_dir: str, ext: str, start=None):
+        self.name = os.path.join(out_dir, "part-%s%s" % (uuid.uuid4().hex[:12], ext))
+        self._tmp = in_progress_path(self.name)
+        self.records = 0
+        self._start = start
+        self._raw = self._fh = None
+
+    def write(self, record: bytes) -> None:
+        if self._raw is None:
+            self._raw = self._fh = open(self._tmp, "wb")
+            if self._start is not None:
+                self._fh = self._start(self._raw, os.path.basename(self.name))
+        self._fh.write(record)
+        self.records += 1
+
+    def __enter__(self) -> "_PartFile":
+        return self
+
+    def __exit__(self, exc_type, *_) -> None:
+        if self._raw is None:
+            return
+        ok = False
+        try:
+            if self._fh is not self._raw:
+                self._fh.close()  # flushes the wrapper's trailer into raw
+            self.nbytes = self._raw.tell()
+            ok = exc_type is None
+        finally:
+            self._raw.close()
+            if ok:
+                os.replace(self._tmp, self.name)
+            else:
+                os.unlink(self._tmp)
+
+    def manifest(self) -> pd.DataFrame:
+        """The task's ``(filename, records, bytes)`` row; none if it wrote
+        no record (and so created no file)."""
+        if not self.records:
+            return pd.DataFrame(columns=["filename", "records", "bytes"])
+        return pd.DataFrame(
+            [{"filename": self.name, "records": self.records, "bytes": self.nbytes}]
+        )
 
 
 def write_warc(
@@ -485,52 +565,24 @@ def write_warc(
     reference writer (warc/warc.py:265-272). Returns a manifest DataFrame
     (filename, records, bytes) — the action that triggers the write."""
     os.makedirs(out_dir, exist_ok=True)
-    manifest_schema = StructType(
-        [
-            StructField("filename", StringType()),
-            StructField("records", LongType()),
-            StructField("bytes", LongType()),
-        ]
-    )
     ext = ".warc.gz" if compress else ".warc"
 
     def sink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # Stream members to the part file as they are serialized — the
         # partition is never buffered in memory (a 1 GB output partition
         # costs one record of memory, not 1 GB; VERDICT r1 "What's wrong").
-        # The file is created lazily on the first record and the write is
-        # crash-safe via tmp-then-rename: the in-progress name is hidden, so
-        # readers never list a partial part, even one a killed task left.
-        f = None
-        n = 0
-        fname = os.path.join(out_dir, "part-%s%s" % (uuid.uuid4().hex[:12], ext))
-        tmp = in_progress_path(fname)
-        try:
+        with _PartFile(out_dir, ext) as part:
             for pdf in batches:
                 for names, hmap, payload in zip(
                     pdf["header_names"], pdf["headers"], pdf["payload"]
                 ):
-                    if f is None:
-                        f = open(tmp, "wb")
                     headers = [(nm, hmap[nm.lower()]) for nm in names]
                     blob = serialize_warc_record(headers, bytes(payload or b""))
-                    f.write(
+                    part.write(
                         compress_gzip_member(blob, compresslevel) if compress else blob
                     )
-                    n += 1
-            if f is None:
-                yield pd.DataFrame(columns=["filename", "records", "bytes"])
-                return
-            nbytes = f.tell()
-            f.close()
-            f = None
-            os.replace(tmp, fname)
-        finally:
-            if f is not None:  # error path: drop the partial tmp file
-                f.close()
-                os.unlink(tmp)
-        yield pd.DataFrame([{"filename": fname, "records": n, "bytes": nbytes}])
+        yield part.manifest()
 
     return df.select("header_names", "headers", "payload").mapInPandas(
-        sink, manifest_schema
+        sink, MANIFEST_SCHEMA
     )
