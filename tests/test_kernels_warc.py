@@ -285,3 +285,61 @@ class TestRoundTripProperties:
             assert pos == len(blob)
 
         check()
+
+
+class _FedCounter:
+    """Stands in for ``zlib`` inside ``gzipmember``: every decompressor it
+    makes adds the length of what it is fed to ``fed``."""
+
+    def __init__(self):
+        import zlib
+
+        self._zlib = zlib
+        self.fed = 0
+
+    def decompressobj(self, *a, **kw):
+        counter, d = self, self._zlib.decompressobj(*a, **kw)
+
+        class Counted:
+            def decompress(self, data):
+                counter.fed += len(data)
+                return d.decompress(data)
+
+            eof = property(lambda self: d.eof)
+            unused_data = property(lambda self: d.unused_data)
+
+        return Counted()
+
+
+def test_member_splitters_feed_linear_bytes(monkeypatch):
+    """Both member splitters feed zlib a small multiple of the file, not
+    the rest of a chunk per member (which is quadratic in the members per
+    chunk), and both still find every member's exact geometry. 10k
+    ~200-byte members make a ~2 MB file, inside one 8 MB streamed chunk."""
+    import io
+
+    from warc_spark.kernels import gzipmember
+
+    members = [
+        gzipmember.compress_gzip_member(
+            make_record(
+                b"payload %d " % i + b"x" * (i % 97), record_id="%d" % i,
+                date="2026-08-01T00:00:00Z",
+            ).to_bytes()
+        )
+        for i in range(10_000)
+    ]
+    data = b"".join(members)
+    geometry, off = [], 0
+    for m in members:
+        geometry.append((off, len(m)))
+        off += len(m)
+    counter = _FedCounter()
+    monkeypatch.setattr(gzipmember, "zlib", counter)
+    got = [(o, n) for o, n, _ in gzipmember.iter_gzip_members(data)]
+    assert got == geometry
+    assert counter.fed <= 3 * len(data), (counter.fed, len(data))
+    counter.fed = 0
+    got = list(gzipmember.iter_gzip_member_offsets_streamed(io.BytesIO(data)))
+    assert got == geometry
+    assert counter.fed <= 3 * len(data), (counter.fed, len(data))

@@ -186,6 +186,62 @@ def test_crawl_batch_python_nodes(spark, tmp_path, extractor):
             assert _python_nodes(p) == ["ArrowEvalPython"], (batch, p)
 
 
+def _map_nodes(formatted_plan: str) -> list[str]:
+    """The plan's mapInPandas/mapInArrow nodes."""
+    import re
+
+    return re.findall(r"^\(\d+\) (MapIn(?:Pandas|Arrow))\b", formatted_plan, re.M)
+
+
+def test_archive_readers_plan_map_in_arrow(spark, tmp_path):
+    """Every archive reader, and ``parse_warc_column``, plans its scan as
+    one MapInArrow node and no MapInPandas: records reach the JVM as Arrow
+    batches built column by column, with no pandas frame in between. The
+    indexes are read back from parquet, so their own (pandas) index pass
+    is not in the readers' plans, nor is the pages generator's."""
+    from warc_spark.sources import (
+        index_arc_records,
+        index_warc_members,
+        parse_warc_column,
+        read_arc,
+        read_arc_records,
+        read_warc,
+        read_warc_records,
+        synth_pages,
+        write_arc,
+        write_warc,
+    )
+
+    synth_pages(spark, 40, seed=5).write.parquet(str(tmp_path / "pages"))
+    pages = spark.read.parquet(str(tmp_path / "pages"))
+    recs = parse_warc_column(pages.select("html"), "html", keep=[])
+    warcs, arcs = str(tmp_path / "warcs"), str(tmp_path / "arcs")
+    write_warc(recs.select("header_names", "headers", "payload"), warcs).collect()
+    write_arc(
+        recs.select(
+            F.col("target_uri").alias("url"), F.lit("127.0.0.1").alias("ip_address"),
+            F.col("warc_date").alias("arc_date"), F.lit("text/html").alias("content_type"),
+            "payload",
+        ),
+        arcs, date="20260801000000", compress=True,
+    ).collect()
+    index_warc_members(spark, warcs).write.parquet(str(tmp_path / "widx"))
+    index_arc_records(spark, arcs).write.parquet(str(tmp_path / "aidx"))
+    widx = spark.read.parquet(str(tmp_path / "widx"))
+    aidx = spark.read.parquet(str(tmp_path / "aidx"))
+    readers = {
+        "parse_warc_column": parse_warc_column(pages, "html", keep=["url"]),
+        "read_warc": read_warc(spark, warcs),
+        "read_warc(split_bytes)": read_warc(spark, warcs, split_bytes=4096, index=widx),
+        "read_warc_records": read_warc_records(spark, widx),
+        "read_arc": read_arc(spark, arcs),
+        "read_arc_records": read_arc_records(spark, aidx),
+    }
+    for name, df in readers.items():
+        assert _map_nodes(plan_of(df)) == ["MapInArrow"], (name, plan_of(df))
+        assert df.count() == 40, name
+
+
 def _exchange_nodes(jplan) -> list:
     """The exchange nodes executing a physical plan now would run. A
     cached relation is walked only while its buffers are unbuilt: one an

@@ -944,3 +944,147 @@ def test_read_warc11_lax_with_fractional_date(spark, tmp_path):
     assert rows[0].version == "1.1"
     assert rows[0].warc_date.microsecond == 123456
     assert rows[0].payload == b"hello"
+
+
+def test_arc_whole_file_gzip_subset_reads_only_named_records(spark, tmp_path):
+    """A subset of a whole-file-gzip ARC's index reads back exactly the
+    records it names, each under its own ``record_index``: the index rows
+    share one member, and ``member_record`` says which of its records each
+    row is."""
+    from warc_spark.sources import index_arc_records, read_arc_records, write_arc
+
+    out = str(tmp_path / "gz")
+    rows = [
+        {"url": "http://e/%d" % i, "ip_address": "127.0.0.1",
+         "arc_date": ARC_DATE, "content_type": "text/html",
+         "payload": b"payload %d" % i}
+        for i in range(10)
+    ]
+    write_arc(
+        spark.createDataFrame(rows).coalesce(1).orderBy("url"), out,
+        date=ARC_DATE, compress=True,
+    ).collect()
+    idx = index_arc_records(spark, out)
+    assert sorted((r.record_index, r.member_record) for r in idx.collect()) == [
+        (i, i) for i in range(10)
+    ]
+    one = read_arc_records(spark, idx.filter(F.col("record_index") == 4)).collect()
+    assert [(r.url, r.record_index, bytes(r.payload)) for r in one] == [
+        ("http://e/4", 4, b"payload 4")
+    ]
+    two = read_arc_records(spark, idx.filter(F.col("record_index").isin(4, 7)))
+    assert sorted((r.url, r.record_index) for r in two.collect()) == [
+        ("http://e/4", 4), ("http://e/7", 7)
+    ]
+
+
+def _old_warc_dates(raw):
+    """The WARC date rule as a pandas batch conversion: the fixed 1.0
+    format, then an ISO-8601 retry of the misses; unparseable -> NaT."""
+    raw = pd.Series(raw, dtype=object)
+    ts = pd.to_datetime(raw, format="%Y-%m-%dT%H:%M:%SZ", errors="coerce")
+    miss = ts.isna() & raw.notna()
+    if miss.any():
+        ts[miss] = (
+            pd.to_datetime(raw[miss], format="ISO8601", errors="coerce", utc=True)
+            .dt.tz_localize(None)
+        )
+    return ts
+
+
+def _old_arc_dates(raw):
+    """The ARC date rule: ``%Y%m%d%H%M%S``; unparseable -> NaT."""
+    return pd.to_datetime(
+        pd.Series(raw, dtype=object), format="%Y%m%d%H%M%S", errors="coerce"
+    )
+
+
+def _naive(ts):
+    """An oracle Series as the values Spark reads: micros, NaT -> None."""
+    return [None if pd.isna(t) else t.floor("us").to_pydatetime() for t in ts]
+
+
+WARC_DATE_EDGES = [
+    "2026-08-01T23:01:53Z",            # valid 1.0
+    "2026-8-1T3:1:5Z",                 # non-padded fields
+    "2026-08-01T23:01:53.123456Z",     # 1.1 fractional seconds
+    "2026-08-01T23:01:53.123456789Z",  # nanoseconds
+    "2026-08-01T23:01:53+02:00",       # offset
+    "2026-02-30T00:00:00Z",            # no such day
+    "2026-08-01T23:01:53Z junk",       # trailing junk
+    " 2026-08-01T23:01:53Z",           # leading space
+    "",
+    None,
+]
+ARC_DATE_EDGES = [
+    "20260801231053", "20260230000000", "2026080123105", "202608012310531",
+    "2026-08-01", " 20260801231053", "20260801231053x", "", None,
+]
+
+
+def test_scan_date_conversion_matches_pandas_rules():
+    """The scan's date columns equal the pandas batch rules over an edge
+    corpus (Arrow's own strptime would turn 2026-02-30 into 2026-03-02;
+    the rule makes it null)."""
+    from warc_spark.sources.arc_source import _arc_dates
+    from warc_spark.sources.warc_source import _warc_dates
+
+    for convert, oracle, corpus in (
+        (_warc_dates, _old_warc_dates, WARC_DATE_EDGES),
+        (_arc_dates, _old_arc_dates, ARC_DATE_EDGES),
+    ):
+        got = convert(list(corpus))
+        assert str(got.type) == "timestamp[us, tz=UTC]"
+        values = [None if t is None else t.replace(tzinfo=None) for t in got.to_pylist()]
+        assert values == _naive(oracle(corpus)), corpus
+    assert _warc_dates(["2026-02-30T00:00:00Z"]).to_pylist() == [None]
+    assert _arc_dates(["20260230000000"]).to_pylist() == [None]
+    assert _warc_dates(["2026-08-01T23:01:53Z"]).to_pylist()[0].replace(
+        tzinfo=None
+    ) == dt.datetime(2026, 8, 1, 23, 1, 53)
+
+
+def test_scan_empty_range_is_typed_empty(spark, warc_file, tmp_path):
+    """A range that holds no record yields an empty batch of the scan's
+    Arrow schema, with and without ``keep`` columns: the readers return
+    no row for it, under the full schema, and a non-empty range in the
+    same batch still reads."""
+    from warc_spark.sources import (
+        ARC_RECORD_SCHEMA,
+        WARC_RECORD_SCHEMA,
+        read_arc_records,
+        read_warc_records,
+    )
+
+    gz, _ = warc_file
+    empty = tmp_path / "empty.warc"
+    empty.write_bytes(b"")
+    idx = spark.createDataFrame(
+        [(str(empty), 0, 0, "x")], "path string, offset long, length long, label string"
+    )
+    for keep in ([], ["label"]):
+        got = read_warc_records(spark, idx.select("path", "offset", "length", *keep))
+        assert got.collect() == []
+        assert got.schema.fields == (
+            [idx.schema["label"]] * len(keep) + WARC_RECORD_SCHEMA.fields
+        )
+    first = read_warc(spark, gz).filter(F.col("record_index") == 0).first()
+    both = idx.unionByName(spark.createDataFrame(
+        [(gz, first.offset, first.size, "y")],
+        "path string, offset long, length long, label string",
+    )).coalesce(1)
+    got = read_warc_records(spark, both).collect()
+    assert [(r.label, r.record_id) for r in got] == [("y", first.record_id)]
+
+    arc_idx = spark.createDataFrame(
+        [(str(empty), 0, 0, 2, "x")],
+        "path string, offset long, length long, arc_version int, label string",
+    )
+    for keep in ([], ["label"]):
+        got = read_arc_records(
+            spark, arc_idx.select("path", "offset", "length", "arc_version", *keep)
+        )
+        assert got.collect() == []
+        assert got.schema.fields == (
+            [arc_idx.schema["label"]] * len(keep) + ARC_RECORD_SCHEMA.fields
+        )

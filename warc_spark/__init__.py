@@ -6,7 +6,7 @@ Re-expresses the record semantics of ``internetarchive/warc`` (reference at
 - ``kernels``   pure-Python (no Spark) WARC/ARC/gzip parse + serialize kernels,
                 byte-compatible with the reference's golden test strings.
 - ``sources``   vectorized ingest: binary archive bytes -> records DataFrame
-                (Arrow-batched ``mapInPandas``), synthetic Common-Crawl-style
+                (Arrow-native ``mapInArrow`` scan), synthetic Common-Crawl-style
                 pages table generator (BASELINE.json input_hint shape).
 - ``functions`` text analysis, dedup (exact / MinHash-LSH / SimHash / n-gram
                 Jaccard), embedding similarity search — training-data pipeline

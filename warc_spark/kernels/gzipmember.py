@@ -20,15 +20,25 @@ import zlib
 GZIP_MAGIC = b"\x1f\x8b"
 
 
+def _first_slice(prev: int, chunk_bytes: int) -> int:
+    """How many bytes to feed zlib first for a member that follows one of
+    ``prev`` compressed bytes: twice that (members of one file are alike
+    in size), never above ``chunk_bytes``; the first member of a buffer
+    (``prev == 0``) gets a whole chunk."""
+    return min(2 * prev, chunk_bytes) if prev else chunk_bytes
+
+
 def iter_gzip_members(data: bytes, chunk_bytes: int = 1 << 20):
     """Yield ``(offset, compressed_size, decompressed_bytes)`` per member.
 
     Offsets are in *compressed* space, matching the reference's
     ``WARCFile.browse()``/``tell()`` semantics (warc/warc.py:284-313).
 
-    Each member is fed to zlib in ``chunk_bytes`` memoryview slices, so
-    the per-member overshoot (``unused_data``, which zlib materializes as
-    a COPY) is at most one chunk. The obvious one-shot
+    Each member is fed to zlib in memoryview slices: the first is twice
+    the previous member's size (``_first_slice``), and each further one
+    doubles, never above ``chunk_bytes``. zlib materializes what follows
+    the member end (``unused_data``) as a COPY, so that copy costs about
+    one member, not one chunk. The obvious one-shot
     ``d.decompress(data[pos:])`` re-copies the entire remaining file into
     ``unused_data`` for EVERY member — quadratic in member count, i.e.
     ~10^14 bytes of memcpy on a 1 GB member-per-record WARC.
@@ -36,14 +46,16 @@ def iter_gzip_members(data: bytes, chunk_bytes: int = 1 << 20):
     mv = memoryview(data)
     n = len(data)
     pos = 0
+    prev = 0
     while pos < n:
         if data[pos : pos + 2] != GZIP_MAGIC:
             raise OSError("Not a gzipped member at offset %d" % pos)
         d = zlib.decompressobj(wbits=31)
         out = []
         cur = pos
+        step = _first_slice(prev, chunk_bytes)
         while True:
-            chunk = mv[cur : cur + chunk_bytes]
+            chunk = mv[cur : cur + step]
             if not len(chunk):
                 raise OSError("truncated gzip member at offset %d" % pos)
             out.append(d.decompress(chunk))
@@ -51,8 +63,10 @@ def iter_gzip_members(data: bytes, chunk_bytes: int = 1 << 20):
             if d.eof:
                 consumed = cur - pos - len(d.unused_data)
                 break
+            step = min(2 * step, chunk_bytes)
         yield pos, consumed, b"".join(out)
         pos += consumed
+        prev = consumed
 
 
 def iter_gzip_member_offsets_streamed(fh, chunk_bytes: int = 8 << 20):
@@ -60,36 +74,45 @@ def iter_gzip_member_offsets_streamed(fh, chunk_bytes: int = 8 << 20):
     object (``read()``), using O(chunk_bytes) memory.
 
     This is the bounded-memory INDEX pass for arbitrarily large
-    multi-member files: a 100 GB WARC never materializes (and unlike
-    ``iter_gzip_members`` over a whole-file buffer, there is no
-    per-member tail re-slice — that copy is quadratic in member count).
-    Decompressed output is discarded; only the stream geometry is kept.
+    multi-member files: a 100 GB WARC never materializes. Within each
+    ``chunk_bytes`` read, members are fed to zlib in the same bounded
+    memoryview slices as ``iter_gzip_members``, so the ``unused_data``
+    copy at a member end costs about one member, not the rest of the
+    chunk (feeding the whole remainder is quadratic in the members per
+    chunk). Decompressed output is discarded; only the stream geometry
+    is kept.
     """
     pos = 0            # absolute offset of the current member's start
-    d = zlib.decompressobj(wbits=31)
+    d = None           # the current member's decompressor, None between members
     consumed = 0       # bytes of the current member consumed so far
-    mid_member = False
+    prev = 0
     while True:
-        chunk = fh.read(chunk_bytes)
-        if not chunk:
-            if mid_member:
+        buf = fh.read(chunk_bytes)
+        if not buf:
+            if d is not None:
                 raise OSError("truncated gzip member at offset %d" % pos)
             return
-        while chunk:
-            d.decompress(chunk)
-            if d.eof:
-                used = len(chunk) - len(d.unused_data)
-                consumed += used
-                yield pos, consumed
-                pos += consumed
-                chunk = d.unused_data
+        mv = memoryview(buf)
+        i = 0
+        while i < len(mv):
+            if d is None:
                 d = zlib.decompressobj(wbits=31)
                 consumed = 0
-                mid_member = False
+                step = _first_slice(prev, chunk_bytes)
+            piece = mv[i : i + step]
+            d.decompress(piece)
+            if d.eof:
+                used = len(piece) - len(d.unused_data)
+                consumed += used
+                i += used
+                yield pos, consumed
+                pos += consumed
+                prev = consumed
+                d = None
             else:
-                consumed += len(chunk)
-                mid_member = True
-                chunk = b""
+                consumed += len(piece)
+                i += len(piece)
+                step = min(2 * step, chunk_bytes)
 
 
 def split_gzip_members(data: bytes) -> list[tuple[int, int, bytes]]:

@@ -31,9 +31,13 @@ import base64
 import hashlib
 import re
 from dataclasses import dataclass, field
+from functools import lru_cache
 
 RE_VERSION = re.compile(rb"WARC/(\d+\.\d+)\r\n")
 RE_HEADER = re.compile(rb"([a-zA-Z_\-]+): *(.*)\r\n", re.DOTALL)
+# RE_HEADER over one decoded line, already split on its \r\n
+RE_HEADER_TEXT = re.compile(r"([a-zA-Z_\-]+): *(.*)", re.DOTALL)
+VERSION_1_0 = b"WARC/1.0\r\n"
 SUPPORTED_VERSIONS = ("1.0",)
 # lax-mode extras: versions whose record framing matches 1.0 byte-for-byte
 LAX_VERSIONS = ("1.0", "1.1")
@@ -87,7 +91,8 @@ class WARCRecord:
 
     ``headers`` preserves original order and case for byte-identical
     serialization; ``hmap`` (lower-cased name -> value) gives the reference's
-    case-insensitive lookup semantics.
+    case-insensitive lookup semantics. It is built from ``headers`` unless
+    the parser, which has already built it, passes it in.
     """
 
     headers: list[tuple[str, str]]
@@ -96,10 +101,11 @@ class WARCRecord:
     offset: int = -1          # byte offset of the record in its container
     size: int = -1            # serialized (or compressed-member) size
     error: str | None = None  # lax-mode parse error, None when clean
-    hmap: dict[str, str] = field(init=False, repr=False)
+    hmap: dict[str, str] | None = field(default=None, repr=False)
 
     def __post_init__(self) -> None:
-        self.hmap = {n.lower(): v for n, v in self.headers}
+        if self.hmap is None:
+            self.hmap = {n.lower(): v for n, v in self.headers}
 
     # -- case-insensitive header access (warc/utils.py:30-43) --------------
     def get(self, name: str, default: str | None = None) -> str | None:
@@ -154,6 +160,13 @@ class WARCRecord:
         return serialize_warc_record(self.headers, self.payload, self.version)
 
 
+@lru_cache(maxsize=1024)
+def _wire_name(name: str) -> bytes:
+    """``normalize_header_name(name)`` encoded plus the ``": "`` after it,
+    memoized: the same few header names repeat in every record."""
+    return normalize_header_name(name).encode() + b": "
+
+
 def serialize_warc_record(
     headers: list[tuple[str, str]], payload: bytes, version: str = "1.0"
 ) -> bytes:
@@ -161,8 +174,7 @@ def serialize_warc_record(
     payload, ``\\r\\n\\r\\n`` footer (warc/warc.py:90-104,159-164)."""
     out = [b"WARC/", version.encode(), b"\r\n"]
     for name, value in headers:
-        out.append(normalize_header_name(name).encode())
-        out.append(b": ")
+        out.append(_wire_name(name))
         out.append(value.encode() if isinstance(value, str) else value)
         out.append(b"\r\n")
     out.append(b"\r\n")
@@ -223,65 +235,97 @@ def make_record(
     return WARCRecord(headers=ordered, payload=payload or b"")
 
 
+def _parse_headers_1_0(data: bytes, pos: int):
+    """Fast path for a well-formed ``WARC/1.0`` record at ``pos``: one
+    search for the blank line that ends the header block, one decode of
+    the block, then a full match of each header line. Returns
+    ``(headers, next_pos)``, or None when the record is not that shape, so
+    the line loop of ``_parse_one`` parses it (and reports whatever is
+    wrong, exactly as before). Decoding the block at once gives the
+    line loop's per-value ``decode(errors="replace")``: UTF-8 is
+    self-synchronizing, and every byte the block is split on, or that a
+    name may hold, is ASCII."""
+    if not data.startswith(VERSION_1_0, pos):
+        return None
+    body = pos + len(VERSION_1_0)
+    end = data.find(b"\r\n\r\n", body - 2)
+    if end < 0:
+        return None
+    headers = []
+    if end >= body:
+        for line in data[body:end].decode(errors="replace").split("\r\n"):
+            m = RE_HEADER_TEXT.fullmatch(line)
+            if m is None:
+                return None
+            headers.append(m.groups())
+    return headers, end + 4
+
+
 def _parse_one(data: bytes, pos: int, strict: bool) -> tuple[WARCRecord | None, int]:
     """Parse one record starting at ``pos``; return (record, next_pos)."""
     start = pos
-    eol = data.find(b"\r\n", pos)
-    if eol < 0:
-        if data[pos:].strip() == b"":
-            return None, len(data)
-        if strict:
-            raise WARCFormatError("Bad version line: %r" % data[pos : pos + 64])
-        return (
-            WARCRecord([], b"", offset=start, error="bad version line"),
-            len(data),
-        )
-    version_line = data[pos : eol + 2]
-    m = RE_VERSION.match(version_line)
-    if not m:
-        if strict:
-            raise WARCFormatError("Bad version line: %r" % version_line)
-        return WARCRecord([], b"", offset=start, error="bad version line"), len(data)
-    version = m.group(1).decode()
-    if version not in SUPPORTED_VERSIONS:
-        # strict == the reference contract: 1.0 ONLY (warc/warc.py:316-318,
-        # SUPPORTED_VERSIONS). Lax additionally PARSES the later ISO
-        # revisions (1.1 adds fractional-second WARC-Dates; the framing is
-        # identical), since real archive sets mix 1.0 and 1.1 segments —
-        # the record's own `version` column carries what the file said.
-        if strict or version not in LAX_VERSIONS:
-            if strict:
-                raise WARCFormatError("Unsupported WARC version: %s" % version)
-            return (
-                WARCRecord([], b"", version=version, offset=start,
-                           error=f"unsupported version {version}"),
-                len(data),
-            )
-    pos = eol + 2
-
-    headers: list[tuple[str, str]] = []
-    while True:
+    fast = _parse_headers_1_0(data, pos)
+    if fast is not None:
+        headers, pos = fast
+        version = "1.0"
+    else:
         eol = data.find(b"\r\n", pos)
         if eol < 0:
+            if data[pos:].strip() == b"":
+                return None, len(data)
             if strict:
-                raise WARCFormatError("Unterminated header block")
+                raise WARCFormatError("Bad version line: %r" % data[pos : pos + 64])
             return (
-                WARCRecord(headers, b"", offset=start, error="unterminated headers"),
+                WARCRecord([], b"", offset=start, error="bad version line"),
                 len(data),
             )
-        line = data[pos : eol + 2]
+        version_line = data[pos : eol + 2]
+        m = RE_VERSION.match(version_line)
+        if not m:
+            if strict:
+                raise WARCFormatError("Bad version line: %r" % version_line)
+            return WARCRecord([], b"", offset=start, error="bad version line"), len(data)
+        version = m.group(1).decode()
+        if version not in SUPPORTED_VERSIONS:
+            # strict == the reference contract: 1.0 ONLY (warc/warc.py:316-318,
+            # SUPPORTED_VERSIONS). Lax additionally PARSES the later ISO
+            # revisions (1.1 adds fractional-second WARC-Dates; the framing is
+            # identical), since real archive sets mix 1.0 and 1.1 segments —
+            # the record's own `version` column carries what the file said.
+            if strict or version not in LAX_VERSIONS:
+                if strict:
+                    raise WARCFormatError("Unsupported WARC version: %s" % version)
+                return (
+                    WARCRecord([], b"", version=version, offset=start,
+                               error=f"unsupported version {version}"),
+                    len(data),
+                )
         pos = eol + 2
-        if line == b"\r\n":  # end of headers
-            break
-        m = RE_HEADER.match(line)
-        if not m or m.end() != len(line):
-            if strict:
-                raise WARCFormatError("Bad header line: %r" % line)
-            return (
-                WARCRecord(headers, b"", offset=start, error="bad header line"),
-                len(data),
-            )
-        headers.append((m.group(1).decode(), m.group(2).decode(errors="replace")))
+
+        headers: list[tuple[str, str]] = []
+        while True:
+            eol = data.find(b"\r\n", pos)
+            if eol < 0:
+                if strict:
+                    raise WARCFormatError("Unterminated header block")
+                return (
+                    WARCRecord(headers, b"", offset=start,
+                               error="unterminated headers"),
+                    len(data),
+                )
+            line = data[pos : eol + 2]
+            pos = eol + 2
+            if line == b"\r\n":  # end of headers
+                break
+            m = RE_HEADER.match(line)
+            if not m or m.end() != len(line):
+                if strict:
+                    raise WARCFormatError("Bad header line: %r" % line)
+                return (
+                    WARCRecord(headers, b"", offset=start, error="bad header line"),
+                    len(data),
+                )
+            headers.append((m.group(1).decode(), m.group(2).decode(errors="replace")))
 
     hmap = {n.lower(): v for n, v in headers}
     try:
@@ -297,11 +341,11 @@ def _parse_one(data: bytes, pos: int, strict: bool) -> tuple[WARCRecord | None, 
                 "Expected '\\r\\n\\r\\n', found %r" % data[pos : pos + 4]
             )
         rec = WARCRecord(headers, payload, version=version, offset=start,
-                         error="missing footer")
+                         error="missing footer", hmap=hmap)
         rec.size = pos - start
         return rec, pos
     pos += 4
-    rec = WARCRecord(headers, payload, version=version, offset=start)
+    rec = WARCRecord(headers, payload, version=version, offset=start, hmap=hmap)
     rec.size = pos - start
     return rec, pos
 

@@ -1,11 +1,13 @@
 """Vectorized ARC v1/v2 ingest/egest (the ARC mirror of warc_source; the
 reference's read path is warc/arc.py:307-382).
 
-One scan, two kernels: every ARC reader is warc_source's archive scan
-(``_scan_ranges``) run with this module's kernel, ``_arc_records``, in
-place of the WARC one. ``read_arc`` scans one range per file,
-``read_arc_records`` one range per indexed record or gzip member, and
-``index_arc_records`` maps the same kernel to index rows. The sink,
+One scan, two kernels: every ARC reader is warc_source's Arrow-native
+archive scan (``_scan_ranges``, a ``mapInArrow`` stage) run with this
+module's column kernel, ``_arc_kernel``, and finalizer, ``_arc_batch``, in
+place of the WARC pair; both read records through ``_arc_records``.
+``read_arc`` scans one range per file, ``read_arc_records`` one range per
+indexed record or gzip member (emitting only the records the index names),
+and ``index_arc_records`` maps ``_arc_records`` to index rows. The sink,
 ``write_arc``, streams each task's records into one part file through the
 part-file writer ``write_warc`` uses (``_PartFile``).
 """
@@ -16,8 +18,10 @@ import os
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -36,6 +40,8 @@ from .warc_source import (
     _open_ranged,
     _PartFile,
     _scan_ranges,
+    _to_batch,
+    _utc_timestamps,
 )
 
 ARC_RECORD_SCHEMA = StructType(
@@ -56,6 +62,8 @@ ARC_RECORD_SCHEMA = StructType(
         StructField("payload", BinaryType()),
     ]
 )
+# the Arrow schema Spark reads ARC_RECORD_SCHEMA batches in
+_ARC_ARROW = to_arrow_schema(ARC_RECORD_SCHEMA)
 
 
 def _arc_records(data: bytes, start: int, version: int | None):
@@ -88,43 +96,60 @@ def _arc_records(data: bytes, start: int, version: int | None):
                 yield start + off, length, version, rec
 
 
-def _arc_rows(
-    data: bytes, name: str, start: int, first_index: int, version: int | None
-) -> list[dict]:
-    """The ARC kernel in the scan's shape: one range's bytes ->
-    ARC_RECORD_SCHEMA rows, ``record_index`` counting up from
-    ``first_index``. ``arc_date`` stays the raw string here;
-    ``_finalize_arc_batch`` converts a whole batch at once."""
-    rows = []
-    for i, (_, _, ver, rec) in enumerate(_arc_records(data, start, version)):
+def _arc_kernel(cols: dict[str, list], data: bytes, name: str, rng: dict) -> int:
+    """The ARC kernel in the scan's shape (see ``_scan_ranges``): append one
+    range's records to the ARC_RECORD_SCHEMA column lists. ``record_index``
+    counts up from the range's ``first_index``, unless the range carries
+    ``picks``, a list of ``(member_record, record_index)``: then only the
+    records at those positions in the range's member are appended, each
+    with its own ``record_index``. ``arc_date`` stays the raw string;
+    ``_arc_batch`` converts the whole column at once."""
+    picks = rng.get("picks")
+    want = None if picks is None else {
+        p["member_record"]: p["record_index"] for p in picks
+    }
+    n = 0
+    for i, (_, _, ver, rec) in enumerate(
+        _arc_records(data, rng["start"], rng.get("arc_version"))
+    ):
+        if want is None:
+            index = rng["first_index"] + i
+        elif i in want:
+            index = want[i]
+        else:
+            continue
         f = rec.fields
-        rows.append({
-            "filename": name,
-            "record_index": first_index + i,
-            "arc_version": ver,
-            "url": f.get("url"),
-            "ip_address": f.get("ip_address"),
-            "arc_date": f.get("date"),
-            "content_type": f.get("content_type"),
-            "result_code": f.get("result_code") or None,
-            "checksum": f.get("checksum") or None,
-            "location": f.get("location") or None,
-            "offset": f.get("offset") or None,
-            "arc_filename": f.get("filename") or None,
-            "length": int(f["length"]) if f.get("length") else 0,
-            "payload": rec.payload.encode("latin-1"),
-        })
-    return rows
+        cols["filename"].append(name)
+        cols["record_index"].append(index)
+        cols["arc_version"].append(ver)
+        cols["url"].append(f.get("url"))
+        cols["ip_address"].append(f.get("ip_address"))
+        cols["arc_date"].append(f.get("date"))
+        cols["content_type"].append(f.get("content_type"))
+        cols["result_code"].append(f.get("result_code") or None)
+        cols["checksum"].append(f.get("checksum") or None)
+        cols["location"].append(f.get("location") or None)
+        cols["offset"].append(f.get("offset") or None)
+        cols["arc_filename"].append(f.get("filename") or None)
+        cols["length"].append(int(f["length"]) if f.get("length") else 0)
+        cols["payload"].append(rec.payload.encode("latin-1"))
+        n += 1
+    return n
 
 
-def _finalize_arc_batch(rows: list[dict]) -> pd.DataFrame:
-    """rows -> batch DataFrame, the 14-digit ARC dates converted in one
-    vectorized pass (an unparseable date becomes null)."""
-    out = pd.DataFrame(rows, columns=[f.name for f in ARC_RECORD_SCHEMA.fields])
-    out["arc_date"] = pd.to_datetime(
-        out["arc_date"], format="%Y%m%d%H%M%S", errors="coerce"
+def _arc_dates(raw: list) -> pa.Array:
+    """14-digit ARC dates -> timestamps, converted once per batch,
+    vectorized; an unparseable date becomes null."""
+    return _utc_timestamps(
+        pd.to_datetime(pd.Series(raw, dtype=object), format="%Y%m%d%H%M%S",
+                       errors="coerce")
     )
-    return out
+
+
+def _arc_batch(cols: dict[str, list]) -> pa.RecordBatch:
+    """The ARC finalizer: ARC column lists -> an ARC_RECORD_SCHEMA batch."""
+    cols["arc_date"] = _arc_dates(cols["arc_date"])
+    return _to_batch(cols, _ARC_ARROW)
 
 
 def read_arc(spark: SparkSession, path: str) -> DataFrame:
@@ -132,8 +157,7 @@ def read_arc(spark: SparkSession, path: str) -> DataFrame:
     into a records table: one range per file, each taking its version
     from its file header."""
     return _scan_ranges(
-        _list_files(spark, path), [], _arc_rows, ARC_RECORD_SCHEMA,
-        _finalize_arc_batch,
+        _list_files(spark, path), [], _arc_kernel, ARC_RECORD_SCHEMA, _arc_batch
     )
 
 
@@ -145,6 +169,7 @@ ARC_INDEX_SCHEMA = StructType(
         StructField("record_index", LongType()),  # per-file ordinal
         StructField("arc_version", IntegerType()),
         StructField("url", StringType()),
+        StructField("member_record", LongType()),  # position in its member
     ]
 )
 
@@ -152,13 +177,16 @@ ARC_INDEX_SCHEMA = StructType(
 def index_arc_records(spark: SparkSession, path: str) -> DataFrame:
     """Offset index for ARC files — the ARC mirror of
     ``index_warc_members`` (VERDICT r2 #8): one row per record
-    ``(path, offset, length, record_index, arc_version, url)``, the
-    geometry ``_arc_records`` gives. Plain files: ``offset`` is the byte
-    position of the record's header line and ``length`` spans header line
-    + payload. Gzipped files: ``(offset, length)`` address the record's
-    gzip member in compressed space (a whole-file-gzip ARC indexes as one
-    member covering all records). ``arc_version`` rides the index so a
-    ranged read can parse a record without re-reading the file header."""
+    ``(path, offset, length, record_index, arc_version, url,
+    member_record)``, the geometry ``_arc_records`` gives. Plain files:
+    ``offset`` is the byte position of the record's header line and
+    ``length`` spans header line + payload. Gzipped files: ``(offset,
+    length)`` address the record's gzip member in compressed space (a
+    whole-file-gzip ARC indexes as one member covering all records).
+    ``member_record`` is the record's position inside that member: 0 for
+    plain and member-per-record files, 0..n-1 across a whole-file-gzip
+    member. ``arc_version`` rides the index so a ranged read can parse a
+    record without re-reading the file header."""
     cols = [f.name for f in ARC_INDEX_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -167,12 +195,12 @@ def index_arc_records(spark: SparkSession, path: str) -> DataFrame:
             for p in pdf["path"]:
                 with _open_ranged(p) as fh:
                     data = fh.read()
-                rows.extend(
-                    (p, off, length, i, ver, rec.fields.get("url"))
-                    for i, (off, length, ver, rec) in enumerate(
-                        _arc_records(data, 0, None)
-                    )
-                )
+                prev, j = None, 0
+                recs = _arc_records(data, 0, None)
+                for i, (off, length, ver, rec) in enumerate(recs):
+                    j = j + 1 if off == prev else 0  # one member's records share off
+                    prev = off
+                    rows.append((p, off, length, i, ver, rec.fields.get("url"), j))
             yield pd.DataFrame(rows, columns=cols)
 
     return _list_files(spark, path).select("path").mapInPandas(gen, ARC_INDEX_SCHEMA)
@@ -182,27 +210,37 @@ def read_arc_records(spark: SparkSession, index: DataFrame) -> DataFrame:
     """Distributed RANDOM ACCESS over ARC files: fetch exactly the records
     named by an ``index_arc_records``-shaped table via ranged reads (the
     ARC mirror of ``read_warc_records``, through the same scan). Plain
-    offsets slice one record; gzip offsets decompress one member (all its
-    records are returned). Extra index columns pass through."""
+    offsets slice one record; gzip offsets decompress one member, and of
+    its records only those the index rows name (by ``member_record``) are
+    returned, each with its row's ``record_index``. An index without
+    ``member_record`` gets every record of each member it names, numbered
+    from the smallest ``record_index`` of the member's rows. Extra index
+    columns pass through; rows that share a whole-file-gzip member pass
+    one row's values to all its records."""
     rec_names = {f.name for f in ARC_RECORD_SCHEMA.fields}
     keep = [
         c for c in index.columns
-        if c not in ("path",) and c not in rec_names  # record cols win
+        if c not in ("path", "member_record") and c not in rec_names  # record cols win
     ]
     # A whole-file-gzip ARC indexes every record against the SAME member
     # (path, offset, length) — a range per index row would re-parse the
     # member once per record (NxN duplicate records; ADVICE r3). Group to
-    # one range per distinct member, starting at the member's base ordinal
-    # so the emitted record_index stays the per-file ordinal the index
-    # carries. Slim shuffle: index metadata only, never payload bytes.
-    first = F.min("record_index") if "record_index" in index.columns else F.lit(0)
+    # one range per distinct member that carries the positions asked for
+    # (``picks``), so the kernel emits just those records under their own
+    # per-file ordinals. Slim shuffle: index metadata only, never payload
+    # bytes.
+    has = set(index.columns)
+    first = F.min("record_index") if "record_index" in has else F.lit(0)
+    aggs = [first.cast("long").alias("first_index")]
+    if {"member_record", "record_index"} <= has:
+        aggs.append(F.collect_list(F.struct(
+            F.col("member_record").cast("long").alias("member_record"),
+            F.col("record_index").cast("long").alias("record_index"),
+        )).alias("picks"))
     ranges = index.groupBy("path", "offset", "length", "arc_version").agg(
-        first.cast("long").alias("first_index"),
-        *[F.first(c).alias(c) for c in keep],
+        *aggs, *[F.first(c).alias(c) for c in keep],
     ).withColumnRenamed("offset", "start")
-    return _scan_ranges(
-        ranges, keep, _arc_rows, ARC_RECORD_SCHEMA, _finalize_arc_batch
-    )
+    return _scan_ranges(ranges, keep, _arc_kernel, ARC_RECORD_SCHEMA, _arc_batch)
 
 
 def write_arc(

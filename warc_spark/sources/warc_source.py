@@ -1,13 +1,17 @@
 """Vectorized WARC ingest/egest: archive bytes <-> records DataFrame.
 
 Replaces the reference's single-threaded pull iterator
-(/root/reference/warc/warc.py:363-393) with an Arrow-batched ``mapInPandas``
+(warc/warc.py:363-393) with an Arrow-native ``mapInArrow``
 scan: one input row per byte range of an archive file, one output row per
 record. This module owns the one archive scan (``_scan_ranges``), for both
-formats: it takes a format's bytes->rows kernel, so WARC runs it with
-``_warc_rows`` and ``arc_source`` with its ARC kernel. Every reader is that
-scan over a different range plan: whole files (``read_warc``), member-aligned
-splits (``read_warc(split_bytes=...)``), or the rows of an offset index
+formats: it takes a format's kernel, which appends each record's values to
+per-column lists, and that format's finalizer, which builds one
+``pa.RecordBatch`` per batch from them; no pandas frame sits between the
+records and the JVM. WARC runs it with ``_warc_kernel``/``_warc_batch``
+and ``arc_source`` with its ARC pair; ``parse_warc_column`` runs the same
+WARC column kernel (``_append_warc``). Every reader is that scan over a
+different range plan: whole files (``read_warc``), member-aligned splits
+(``read_warc(split_bytes=...)``), or the rows of an offset index
 (``read_warc_records``). The per-record gzip member framing
 (warc/gzip2.py:1-13) is what makes this parallel-safe — members are
 independently decompressable, so a file can be split at member offsets and
@@ -30,8 +34,10 @@ import uuid
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -72,6 +78,8 @@ WARC_RECORD_SCHEMA = StructType(
         StructField("error", StringType()),
     ]
 )
+# the Arrow schema Spark reads WARC_RECORD_SCHEMA batches in
+_WARC_ARROW = to_arrow_schema(WARC_RECORD_SCHEMA)
 
 
 HTTP_SPLIT_SCHEMA = StructType(
@@ -132,67 +140,113 @@ def split_http_payload(
     )
 
 
-def _warc_row(
-    rec, name: str, index: int, offset: int, size: int, payload_cap: int | None
-) -> dict:
-    """One parsed WARC record -> a WARC_RECORD_SCHEMA row (every reader
-    builds its rows here)."""
-    payload = rec.payload if payload_cap is None else rec.payload[:payload_cap]
-    return {
-        "filename": name,
-        "record_index": index,
-        "offset": offset,
-        "size": size,
-        "version": rec.version,
-        "headers": rec.hmap,
-        "header_names": [n for n, _ in rec.headers],
-        "warc_type": rec.type,
-        "record_id": rec.record_id,
-        "warc_date": rec.date,  # raw string; vectorized to_datetime per batch
-        "target_uri": rec.url,
-        "ip_address": rec.ip_address,
-        "content_type": rec.get("Content-Type"),
-        "content_length": int(rec.hmap.get("content-length", "0") or 0),
-        "payload": payload,
-        "payload_digest": rec.checksum,
-        "error": rec.error,
-    }
-
-
-def _warc_rows(
-    data: bytes,
-    name: str,
-    start: int,
-    first_index: int,
-    strict: bool,
-    payload_cap: int | None,
-) -> list[dict]:
-    """Kernel: the bytes of one archive range -> WARC_RECORD_SCHEMA rows.
+def _warc_records(data: bytes, strict: bool):
+    """The bytes of one archive range -> ``(offset, size, record)`` per
+    WARC record, offsets relative to the range start.
 
     A gzip range is split into members, and every record carries its
     member's ``(offset, size)`` in compressed space (browse()/tell(),
     warc/warc.py:284-313). A plain range carries each record's own byte
-    span. ``start`` is the range's file offset, so both are file offsets.
-    ``record_index`` counts up from ``first_index``; a negative
-    ``first_index`` marks a random-access read, whose records are all -1."""
+    span."""
     if data[:2] == GZIP_MAGIC:
-        recs = (
-            (start + off, size, rec)
-            for off, size, payload in iter_gzip_members(data)
-            for rec in parse_warc_stream(payload, strict=strict)
-        )
+        for off, size, payload in iter_gzip_members(data):
+            for rec in parse_warc_stream(payload, strict=strict):
+                yield off, size, rec
     else:
-        recs = (
-            (start + rec.offset, rec.size, rec)
-            for rec in parse_warc_stream(data, strict=strict)
+        for rec in parse_warc_stream(data, strict=strict):
+            yield rec.offset, rec.size, rec
+
+
+def _append_warc(
+    cols: dict[str, list], rec, name: str, index: int, offset: int, size: int,
+    payload_cap: int | None,
+) -> None:
+    """The WARC column kernel: append one parsed record's value to each
+    WARC_RECORD_SCHEMA column list (every reader builds its columns
+    here). ``warc_date`` stays the raw string; ``_warc_batch`` converts
+    the whole column at once."""
+    hmap = rec.hmap
+    payload = rec.payload if payload_cap is None else rec.payload[:payload_cap]
+    cols["filename"].append(name)
+    cols["record_index"].append(index)
+    cols["offset"].append(offset)
+    cols["size"].append(size)
+    cols["version"].append(rec.version)
+    cols["headers"].append(hmap)
+    cols["header_names"].append([n for n, _ in rec.headers])
+    cols["warc_type"].append(hmap.get("warc-type"))
+    cols["record_id"].append(hmap.get("warc-record-id"))
+    cols["warc_date"].append(hmap.get("warc-date"))
+    cols["target_uri"].append(hmap.get("warc-target-uri"))
+    cols["ip_address"].append(hmap.get("warc-ip-address"))
+    cols["content_type"].append(hmap.get("content-type"))
+    cols["content_length"].append(int(hmap.get("content-length", "0") or 0))
+    cols["payload"].append(payload)
+    cols["payload_digest"].append(hmap.get("warc-payload-digest"))
+    cols["error"].append(rec.error)
+
+
+def _warc_kernel(strict: bool, payload_cap: int | None):
+    """The WARC kernel in the scan's shape (see ``_scan_ranges``): one
+    range's records appended to the column lists, ``offset`` in file
+    space (the range's ``start`` plus the record's offset in the range)
+    and ``record_index`` counting up from the range's ``first_index``; a
+    negative ``first_index`` marks a random-access read, whose records
+    are all -1."""
+
+    def kernel(cols: dict[str, list], data: bytes, name: str, rng: dict) -> int:
+        start, first = rng["start"], rng["first_index"]
+        n = 0
+        for off, size, rec in _warc_records(data, strict):
+            _append_warc(
+                cols, rec, name, first + n if first >= 0 else -1, start + off,
+                size, payload_cap,
+            )
+            n += 1
+        return n
+
+    return kernel
+
+
+def _utc_timestamps(ts: pd.Series) -> pa.Array:
+    """Naive pandas timestamps, read as UTC, as Spark's Arrow timestamp
+    column: what Spark's own pandas-to-Arrow conversion makes of them
+    under the UTC session (``get_spark``), nanoseconds cut to micros."""
+    return pa.Array.from_pandas(
+        ts.dt.tz_localize("UTC"), type=pa.timestamp("us", tz="UTC"), safe=False
+    )
+
+
+def _warc_dates(raw: list) -> pa.Array:
+    """WARC-Date strings -> timestamps, converted once per batch,
+    vectorized (a per-record to_datetime was the parse hot-spot): the
+    fixed 1.0 format first, then an ISO-8601 retry of the misses (WARC
+    1.1 allows fractional seconds); an unparseable date becomes null."""
+    raw = pd.Series(raw, dtype=object)
+    ts = pd.to_datetime(raw, format="%Y-%m-%dT%H:%M:%SZ", errors="coerce")
+    miss = ts.isna() & raw.notna()
+    if miss.any():
+        ts[miss] = (
+            pd.to_datetime(raw[miss], format="ISO8601", errors="coerce", utc=True)
+            .dt.tz_localize(None)
         )
-    return [
-        _warc_row(
-            rec, name, first_index + i if first_index >= 0 else -1, off, size,
-            payload_cap,
-        )
-        for i, (off, size, rec) in enumerate(recs)
-    ]
+    return _utc_timestamps(ts)
+
+
+def _to_batch(cols: dict[str, list], schema: pa.Schema) -> pa.RecordBatch:
+    """Per-column value lists -> one RecordBatch of ``schema``; a column
+    already converted to an Arrow array is taken as it is."""
+    arrays = []
+    for f in schema:
+        v = cols[f.name]
+        arrays.append(v if isinstance(v, pa.Array) else pa.array(v, type=f.type))
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+
+def _warc_batch(cols: dict[str, list]) -> pa.RecordBatch:
+    """The WARC finalizer: WARC column lists -> a WARC_RECORD_SCHEMA batch."""
+    cols["warc_date"] = _warc_dates(cols["warc_date"])
+    return _to_batch(cols, _WARC_ARROW)
 
 
 def _open_ranged(p: str):
@@ -231,66 +285,65 @@ def _list_files(spark: SparkSession, path: str | list[str]) -> DataFrame:
     )
 
 
+# the columns of a range row the scan hands its kernel; any other column
+# of the row is a ``keep`` column
+_RANGE_COLS = ("path", "start", "length", "first_index", "arc_version", "picks")
+
+
 def _scan_ranges(
-    ranges: DataFrame, keep: list[str], rows_of, schema: StructType, finalize
+    ranges: DataFrame, keep: list[str], kernel, schema: StructType, finalize
 ) -> DataFrame:
     """The one archive scan, for both formats: ``(path, start, length,
-    first_index[, arc_version], *keep)`` range rows -> ``keep`` columns +
-    ``schema`` rows. Each task ranged-reads its rows' bytes and runs the
-    format's kernel, ``rows_of(data, name, start, first_index, version)``
-    -> row dicts, on them; ``finalize`` turns a batch's row dicts into
-    its DataFrame. ``version`` is the range's ``arc_version`` (null: ARC
-    detects it from the ``filedesc://`` header at the range start); WARC
-    ranges have no such column and get None. One file is open at a time;
+    first_index[, arc_version][, picks], *keep)`` range rows -> ``keep``
+    columns + ``schema`` rows, as Arrow batches (``mapInArrow``). Each task
+    ranged-reads its rows' bytes and runs the format's kernel,
+    ``kernel(cols, data, name, rng) -> n``, on them: it appends the
+    range's ``n`` records to ``cols``, one value list per ``schema``
+    column, and ``rng`` is the range row as a dict. ``finalize`` turns a
+    batch's column lists into one ``pa.RecordBatch`` of the Arrow schema
+    Spark derives from ``schema``; the ``keep`` columns pass through as
+    ``batch.select(keep).take(src)``. One file is open at a time;
     consecutive ranges of a file share its handle."""
     out_schema = StructType([ranges.schema[c] for c in keep] + list(schema.fields))
+    ctl = [c for c in _RANGE_COLS if c in ranges.columns]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            cols: dict[str, list] = {f.name: [] for f in schema.fields}
             src: list[int] = []  # the range row each record came from
-            versions = (
-                pdf["arc_version"] if "arc_version" in pdf else [None] * len(pdf)
-            )
             fh, fh_path = None, None
             try:
-                for i, (p, start, length, first, version) in enumerate(zip(
-                    pdf["path"], pdf["start"], pdf["length"], pdf["first_index"],
-                    versions,
-                )):
+                for i, rng in enumerate(batch.select(ctl).to_pylist()):
+                    p = rng["path"]
                     if p != fh_path:
                         if fh is not None:
                             fh.close()
                         fh, fh_path = _open_ranged(p), p
-                    fh.seek(int(start))
-                    got = rows_of(
-                        fh.read(int(length)), os.path.basename(p), int(start),
-                        int(first), None if pd.isna(version) else int(version),
-                    )
-                    rows.extend(got)
-                    src.extend([i] * len(got))
+                    fh.seek(rng["start"])
+                    n = kernel(cols, fh.read(rng["length"]), os.path.basename(p), rng)
+                    src.extend([i] * n)
             finally:
                 if fh is not None:
                     fh.close()
-            rec_df = finalize(rows)
+            out = finalize(cols)
             if keep:
-                rec_df = pd.concat(
-                    [pdf[keep].iloc[src].reset_index(drop=True), rec_df], axis=1
+                kept = batch.select(keep).take(pa.array(src, pa.int64()))
+                out = pa.RecordBatch.from_arrays(
+                    kept.columns + out.columns, names=out_schema.names
                 )
-            yield rec_df
+            yield out
 
-    return ranges.mapInPandas(gen, out_schema)
+    return ranges.mapInArrow(gen, out_schema)
 
 
 def _scan_warc(
     ranges: DataFrame, keep: list[str], strict: bool, payload_cap: int | None
 ) -> DataFrame:
-    """``_scan_ranges`` with the WARC kernel (a WARC range has no version)."""
-
-    def rows_of(data, name, start, first, _version):
-        return _warc_rows(data, name, start, first, strict, payload_cap)
-
-    return _scan_ranges(ranges, keep, rows_of, WARC_RECORD_SCHEMA, _finalize_batch)
+    """``_scan_ranges`` with the WARC kernel and finalizer."""
+    return _scan_ranges(
+        ranges, keep, _warc_kernel(strict, payload_cap), WARC_RECORD_SCHEMA,
+        _warc_batch,
+    )
 
 
 def read_warc(
@@ -439,24 +492,6 @@ def read_warc_records(
     return _scan_warc(ranges, keep, strict, payload_cap)
 
 
-def _finalize_batch(rows: list[dict]) -> pd.DataFrame:
-    """rows -> batch DataFrame with the date column converted once,
-    vectorized (a per-record to_datetime was the parse hot-spot)."""
-    out = pd.DataFrame(rows, columns=[f.name for f in WARC_RECORD_SCHEMA.fields])
-    raw = out["warc_date"]
-    ts = pd.to_datetime(raw, format="%Y-%m-%dT%H:%M:%SZ", errors="coerce")
-    # WARC 1.1 allows fractional seconds; re-parse only the misses on the
-    # general ISO-8601 path (the fixed format stays the 1.0 hot path)
-    miss = ts.isna() & raw.notna()
-    if miss.any():
-        ts[miss] = (
-            pd.to_datetime(raw[miss], format="ISO8601", errors="coerce", utc=True)
-            .dt.tz_localize(None)
-        )
-    out["warc_date"] = ts
-    return out
-
-
 def parse_warc_column(
     df: DataFrame, bytes_col: str = "html", keep: list[str] | None = None,
     strict: bool = False,
@@ -464,27 +499,30 @@ def parse_warc_column(
     """Parse a per-row WARC record held in a binary column (the
     BASELINE.json input_hint pages-table shape: one serialized record per
     row in ``html``). Map-only, no shuffle; carries through ``keep`` columns.
-    """
+    Each row yields its first record through the scan's WARC column kernel
+    (all nulls when it holds none), as Arrow batches."""
     keep = keep or [c for c in df.columns if c != bytes_col]
     out_schema = StructType(
         [df.schema[c] for c in keep] + list(WARC_RECORD_SCHEMA.fields)
     )
 
-    empty = {f.name: None for f in WARC_RECORD_SCHEMA.fields}
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for data in pdf[bytes_col]:
-                rows = _warc_rows(bytes(data), "", 0, 0, strict, None)
-                recs.append(rows[0] if rows else empty)
-            rec_df = _finalize_batch(recs)
-            yield pd.concat(
-                [pdf[keep].reset_index(drop=True), rec_df.reset_index(drop=True)],
-                axis=1,
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            cols: dict[str, list] = {f.name: [] for f in WARC_RECORD_SCHEMA.fields}
+            for data in batch.column(bytes_col).to_pylist():
+                recs = list(_warc_records(data, strict))
+                if recs:
+                    off, size, rec = recs[0]
+                    _append_warc(cols, rec, "", 0, off, size, None)
+                else:
+                    for v in cols.values():
+                        v.append(None)
+            out = _warc_batch(cols)
+            yield pa.RecordBatch.from_arrays(
+                batch.select(keep).columns + out.columns, names=out_schema.names
             )
 
-    return df.mapInPandas(gen, out_schema)
+    return df.mapInArrow(gen, out_schema)
 
 
 MANIFEST_SCHEMA = "filename string, records bigint, bytes bigint"

@@ -4,7 +4,7 @@ object storage) processed incrementally.
 
 The reference library is a blocking pull iterator (warc/warc.py:389-393);
 the streaming mapping is ``readStream`` over the landing directory ->
-the same vectorized parse kernel (mapInPandas works unchanged on streams) ->
+the same vectorized parse kernel (mapInArrow works unchanged on streams) ->
 watermarked windowed aggregation / streaming dedup -> ``writeStream``.
 
 Scale notes:
